@@ -555,8 +555,8 @@ def entry(spark: SparkSession) -> DataFrame:
 #     function + the same count→k→fit chain;
 #   quota_latch_final — sizing-only change (staging split count,
 #     byte-sized state partitions, 64k Arrow batches); the latch
-#     operator and its rows are untouched (tools/profile_latch.py and
-#     the streaming pytests pin it);
+#     operator and its rows are untouched (the streaming pytests pin it;
+#     addBatch is 2.79 s of the 3.13 s sf1 trigger, OPTIMIZATION_r12.md);
 #   dedup_embedding_cosine — plan restructure (vectors ride the band
 #     join, dedup after threshold); values bit-identical (duplicate
 #     candidates carry identical cosines), re-verified at all four tiers

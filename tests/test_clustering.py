@@ -239,12 +239,13 @@ def test_pq_survives_empty_clusters(spark, tmp_path):
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
 
-    books = _pq_fit(spark, str(tmp_path))
-    assert any(len(cents) < PQ_K for cents in books)  # clusters did empty
+    books, _ = _pq_fit(spark, str(tmp_path))
+    assert len(books) == PQ_M
+    assert any(len(cents) < PQ_K for _, _, cents in books)  # clusters did empty
     codes = pq_codes_query(spark, str(tmp_path)).collect()
     for r in codes:
-        for m in range(PQ_M):
-            assert getattr(r, f"code_{m}") in books[m]
+        for field, _, cents in books:
+            assert getattr(r, field) in cents
     out = pq_adc_topk(spark, str(tmp_path), top_k=3, stride=50, shortlist=20).collect()
     assert out
     # identical replicas of the query vector must rerank to exact_dist 0
@@ -660,8 +661,10 @@ def test_gemm_assign_property_differential(spark):
     vectors: random qvecs and random (sum, count) centroid dicts —
     including magnitudes near the documented exactness envelope
     (n_cell·|q| well below 3e9) and exact-tie constructions — must
-    produce identical assignments through both paths. Seeded, not
-    hypothesis-driven, so the fixture is reproducible."""
+    produce identical assignments through both paths, for the one-book
+    whole-vector case (k-means) and the sliced multi-book case (M=4
+    codebooks over 4-wide slices of d=16, the PQ encode shape). Seeded,
+    not hypothesis-driven, so the fixture is reproducible."""
     import random
 
     import numpy as np
@@ -693,9 +696,36 @@ def test_gemm_assign_property_differential(spark):
             .collect()
         )
         gemm_rows = dict(
-            cl._gemm_assign(df, cents).select("vec_id", "cluster").collect()
+            cl._gemm_assign_codes(df, [("cluster", None, cents)])
+            .select("vec_id", "cluster")
+            .collect()
         )
         assert expr_rows == gemm_rows, f"trial {trial} diverged"
+        # sliced multi-book case: M=4 codebooks, each over its own 4-wide
+        # slice, k varying per book; n_rows=0 keeps the router on its
+        # expression path
+        width = d // 4
+        books = [
+            (
+                f"code_{m}",
+                slice(m * width, (m + 1) * width),
+                {
+                    c: (
+                        [rng.randint(-8000 * 50, 8000 * 50) for _ in range(width)],
+                        rng.randint(1, 50),
+                    )
+                    for c in rng.sample(range(20), rng.choice([2, 5, 8]))
+                },
+            )
+            for m in range(4)
+        ]
+        fields = ["vec_id"] + [f for f, _, _ in books]
+        expr_codes = cl._assign_codes(df, books, 0, None)
+        assert "MapInPandas" not in expr_codes._jdf.queryExecution().logical().toString()
+        gemm_codes = cl._gemm_assign_codes(df, books)
+        assert sorted(map(tuple, expr_codes.select(fields).collect())) == sorted(
+            map(tuple, gemm_codes.select(fields).collect())
+        ), f"trial {trial} sliced books diverged"
         # envelope sanity: the largest |n·x − s| term stays far inside
         # int64 when squared and summed over d
         n_max = max(n for _, n in cents.values())
@@ -705,7 +735,7 @@ def test_gemm_assign_property_differential(spark):
 
 
 def test_pq_codes_gemm_bit_identical_to_expression_path(spark, sf_dir, monkeypatch):
-    """Round 13: the fused PQ-code kernel (_gemm_assign_codes — ONE
+    """The fused PQ-code kernel (_gemm_assign_codes — ONE
     mapInPandas pass assigning all M codes) is the EXACT twin of the M
     per-subspace expression folds: same integer-exact distances, same
     double division, same lowest-code tie break. pq_codes_query must
@@ -799,8 +829,8 @@ def test_gemm_envelope_check_routes_fallback(spark):
         [(i, [i % 5] * d) for i in range(10)], "vec_id long, qvec array<long>"
     )
     # work volume forced over the threshold: envelope decides the route
-    gemm = cl._assign_cluster(df, ok_cents, 10**9, xb)
-    expr = cl._assign_cluster(df, bad_cents, 10**9, xb)
+    gemm = cl._assign_codes(df, [("cluster", None, ok_cents)], 10**9, xb)
+    expr = cl._assign_codes(df, [("cluster", None, bad_cents)], 10**9, xb)
     assert "MapInPandas" in gemm._jdf.queryExecution().logical().toString()
     assert "MapInPandas" not in expr._jdf.queryExecution().logical().toString()
     # and both routes still assign (tiny sanity execute on the safe dict)
@@ -824,7 +854,7 @@ def test_int_centroids_reports_global_component_bound(spark):
 def test_semdedup_pair_kernel_bit_identical_to_expression_path(
     spark, sf_dir, monkeypatch
 ):
-    """Round 13: the grouped pair-scoring kernel (_semdedup_pair_kernel —
+    """The grouped pair-scoring kernel (_semdedup_pair_kernel —
     one int64 GEMM per (cell, sub) group emitting the dups aggregate
     directly) is the EXACT twin of the window + pair-join + groupBy
     expression path: same integer dot/norms, same IEEE double chain, and
@@ -847,11 +877,11 @@ def test_semdedup_pair_kernel_bit_identical_to_expression_path(
         return sorted(map(tuple, df.collect())), plan
 
     try:
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "0")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 10**18)
         expr_rows, expr_plan = run()
         assert "FlatMapGroupsInPandas" not in expr_plan
         assert "Window" in expr_plan  # the rank pool on the expression path
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "1")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
         gemm_rows, gemm_plan = run()
         assert "FlatMapGroupsInPandas" in gemm_plan
         assert "Window" not in gemm_plan
@@ -860,9 +890,9 @@ def test_semdedup_pair_kernel_bit_identical_to_expression_path(
         # cap-binding variant: layer-1 sub-buckets AND the layer-2 rank
         # cap must survive the kernel translation (candidates = cap
         # lowest ids)
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "0")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 10**18)
         expr_cap, _ = run(cell_cap=2, sub_bits=2)
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "1")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
         gemm_cap, _ = run(cell_cap=2, sub_bits=2)
         assert expr_cap == gemm_cap and expr_cap
     finally:

@@ -178,8 +178,11 @@ def _doc_query_names():
     return list(em.oracle_sql())
 
 
-def test_hostile_corpus_full_differential(spark, hostile_dir):
-    qs, oracles = em.queries(), em.oracle_sql()
+def _differential(spark, hostile_dir, queries):
+    """Spark-vs-DuckDB hash differential of ``queries`` (name → query function)
+    over the hostile corpus; returns one failure line per diverging
+    query."""
+    oracles = em.oracle_sql()
     con = duckdb.connect()
     failures = []
     try:
@@ -187,9 +190,9 @@ def test_hostile_corpus_full_differential(spark, hostile_dir):
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{hostile_dir}/{t}.parquet'"
             )
-        for name in _doc_query_names():
+        for name, build in queries.items():
             try:
-                df = qs[name](spark, hostile_dir)
+                df = build(spark, hostile_dir)
                 rows = [tuple(r) for r in df.collect()]
                 cols = df.columns
             except Exception as e:  # ANSI crashes are exactly what we hunt
@@ -211,6 +214,49 @@ def test_hostile_corpus_full_differential(spark, hostile_dir):
                 )
     finally:
         con.close()
+    return failures
+
+
+def test_hostile_corpus_full_differential(spark, hostile_dir):
+    qs = em.queries()
+    failures = _differential(
+        spark, hostile_dir, {name: qs[name] for name in _doc_query_names()}
+    )
+    assert not failures, failures
+
+
+def test_hostile_corpus_kernel_routes(spark, hostile_dir, monkeypatch):
+    """Second pass over every registered query that reaches a GEMM router
+    (k-means cells, PQ codes, semantic_dedup's pair scoring), with both
+    work thresholds forced to 0 so the Arrow kernels run on the hostile
+    embeddings — the gate tiers never reach them by volume. Each query
+    must still hash-match its DuckDB twin, and each plan must actually
+    carry a kernel node."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+    from youtube_api_batch_process_with_analytics_spark.operators import memo
+
+    monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
+    monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
+    # fresh model caches, so the Lloyd fit rounds route through the
+    # kernel too instead of reusing the first pass's fitted centroids
+    monkeypatch.setattr(cl, "_KMEANS_MODEL_CACHE", {})
+    monkeypatch.setattr(cl, "_PQ_MODEL_CACHE", {})
+    # the query functions themselves: the registry's plan cache would return
+    # the first pass's expression-path plans
+    oracles = em.oracle_sql()
+    routed = {n: fn for n, fn in sorted(cl.QUERIES.items()) if n in oracles}
+    try:
+        for name, build in routed.items():
+            plan = (
+                build(spark, hostile_dir)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            assert "InPandas" in plan, name
+        failures = _differential(spark, hostile_dir, routed)
+    finally:
+        memo.release_session_frames()
     assert not failures, failures
 
 

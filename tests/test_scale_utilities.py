@@ -186,3 +186,85 @@ def test_run_batch_bounds_concurrency(spark, sf_dir):
     assert state["peak"] <= MAX_CONCURRENT_WORKERS, state
     # and the pool genuinely overlaps work (not serialized dispatch)
     assert state["peak"] >= 2, state
+
+
+def test_run_batch_timeout_keeps_finished_results(spark, sf_dir, monkeypatch):
+    """A request that overruns the batch deadline must not take the rest
+    of the batch with it: the fast item comes back as ``success``, the
+    slow one as a ``timeout`` error, and the call returns at the deadline
+    instead of waiting for the slow item to finish."""
+    import threading
+    import time
+
+    from youtube_api_batch_process_with_analytics_spark.plans import batch
+
+    monkeypatch.setattr(batch, "FUTURE_TIMEOUT_S", 1.0)
+    release = threading.Event()
+
+    def slow(spark_, sf_dir_):
+        release.wait(30)
+        return spark_.range(1)
+
+    try:
+        t0 = time.perf_counter()
+        out = batch.run_batch(
+            spark,
+            sf_dir,
+            [batch.BatchRequest("fast"), batch.BatchRequest("slow")],
+            {"fast": lambda spark_, sf_dir_: spark_.range(3), "slow": slow},
+        )
+        elapsed = time.perf_counter() - t0
+    finally:
+        release.set()
+    assert out["fast_0"]["status"] == "success"
+    assert out["slow_1"] == {"status": "error", "data": None, "error": "timeout"}
+    assert elapsed < 10, elapsed
+
+
+def test_engine_reads_only_deployment_env_vars():
+    """Execution routes are chosen by data volume, never by environment
+    switches: the only environment variables the engine package reads
+    are deployment settings. Every ``environ``/``getenv`` use must be a
+    ``.get``/``getenv``/subscript with a literal name from that set."""
+    import ast
+    import pathlib
+
+    import youtube_api_batch_process_with_analytics_spark as pkg
+
+    allowed = {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_MASTER",
+        "SPARK_SQL_SHUFFLE_PARTITIONS",
+        "SPARK_UI_ENABLED",
+        "SPARK_DRIVER_MEMORY",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_RANGE_JOIN_HINT",
+    }
+    read: set[str] = set()
+    bad: list[str] = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "environ":
+                use = parents[node]
+                if isinstance(use, ast.Attribute) and use.attr == "get":
+                    arg = parents[use].args[0] if isinstance(parents[use], ast.Call) else None
+                elif isinstance(use, ast.Subscript):
+                    arg = use.slice
+                else:
+                    arg = None
+            elif isinstance(node, ast.Call) and getattr(
+                node.func, "attr", getattr(node.func, "id", None)
+            ) == "getenv":
+                arg = node.args[0] if node.args else None
+            else:
+                continue
+            where = f"{path.name}:{node.lineno}"
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                read.add(arg.value)
+            else:
+                bad.append(where)
+    assert not bad, f"non-literal environment access at {bad}"
+    assert read <= allowed, sorted(read - allowed)
+    assert "SPARK_GRAFT_CPUS" in read  # the scan sees session.py's reads

@@ -249,46 +249,69 @@ def _int_assign_expr(
 # mapInPandas GEMM kernel takes over. The kernel is BIT-IDENTICAL, not
 # approximately equal: it computes the same integer-exact distance by
 # algebraic expansion — Σ(n·x−s)² = n²Σx² − 2nΣxs + Σs², exact in int64
-# (bound: n_cell·|q| < 3e9, i.e. quantized components within ±3e9/cell
-# size — the fixtures sit 6 orders of magnitude inside it) — then the
-# identical CAST-to-double division and the identical lowest-cluster tie
-# break, so the choice is invisible in results and gated tiers keep the
-# expression plan (sf0.01: n·k ≤ 25k at every registered k). Measured:
-# the k=200 gate fit at sf0.1 drops 12.2s → ~2s cold; semantic_dedup at
-# sf3 (n·k = 5.6M) drops ~18s → ~12s.
-GEMM_ASSIGN_MIN_WORK = 200_000  # n_rows × k
+# inside the envelope ``_gemm_envelope_ok`` checks — then the identical
+# CAST-to-double division and the identical lowest-id tie break, so the
+# choice is invisible in results and gated tiers keep the expression plan
+# (sf0.01: n·Σk ≤ 25k at every registered k). Measured: the k=200 gate
+# fit at sf0.1 drops 12.2s → ~2s cold; semantic_dedup at sf3 (n·k = 5.6M)
+# drops ~18s → ~12s; the PQ encode inside ivf_pq_topk at sf1 2.04 → 1.35s.
+GEMM_ASSIGN_MIN_WORK = 200_000  # n_rows × Σk over the codebooks
 
 
-def _gemm_assign(df: DataFrame, cents: dict[int, tuple[list[int], int]],
-                 field: str = "cluster", col: str = "qvec") -> DataFrame:
-    """Arrow-vectorized twin of ``_int_assign_expr`` (same argmin, same
-    integer-exact distances, same tie-break) — one batched integer GEMM
-    per Arrow batch instead of k interpreted fold expressions per row.
-    The sixth sanctioned Arrow kernel (PLANS.md)."""
+def _gemm_assign_codes(
+    df: DataFrame,
+    books: list[tuple[str, slice | None, dict[int, tuple[list[int], int]]]],
+    col: str = "qvec",
+) -> DataFrame:
+    """Arrow twin of the per-book ``_int_assign_expr`` argmins: ONE
+    ``mapInPandas`` pass appends every ``field`` — the argmin of
+    ``col[part]`` (the whole vector when ``part`` is None) over its
+    codebook — with one batched integer GEMM per book and Arrow batch
+    instead of k interpreted folds per row. k-means assignment is the
+    one-book, whole-vector case; the PQ encode is M books over disjoint
+    slices. Callers pre-project to exactly the columns the downstream
+    needs: an opaque kernel defeats column pruning, so nothing heavy may
+    ride through it."""
     import numpy as np
     from pyspark.sql import types as T
 
-    ids = sorted(cents)
-    S = np.array([cents[c][0] for c in ids], dtype=np.int64)  # (k, d)
-    nv = np.array([cents[c][1] for c in ids], dtype=np.int64)  # (k,)
-    ss = (S * S).sum(axis=1)  # (k,) Σs²
-    n2 = (nv * nv).astype(np.float64)  # divisor, exact below 2^53
-    nn = nv * nv  # int64 n² for the exact integer term
-    id_arr = np.array(ids, dtype=np.int32)
-    schema = T.StructType(df.schema.fields + [T.StructField(field, T.IntegerType())])
+    mats = []
+    for field, part, bk in books:
+        ids = sorted(bk)
+        S = np.array([bk[c][0] for c in ids], dtype=np.int64)  # (k, w)
+        nv = np.array([bk[c][1] for c in ids], dtype=np.int64)  # (k,)
+        mats.append(
+            (
+                field,
+                slice(None) if part is None else part,
+                np.array(ids, dtype=np.int32),
+                S,
+                nv,
+                (S * S).sum(axis=1),  # Σs²
+                (nv * nv).astype(np.float64),  # divisor, exact < 2^53
+                nv * nv,  # int64 n² for the exact integer term
+            )
+        )
+    schema = T.StructType(
+        df.schema.fields
+        + [T.StructField(field, T.IntegerType()) for field, _, _ in books]
+    )
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
-                pdf[field] = np.array([], dtype=np.int32)
+                for field, *_ in mats:
+                    pdf[field] = np.array([], dtype=np.int32)
                 yield pdf
                 continue
             X = np.stack(pdf[col].to_numpy()).astype(np.int64)  # (b, d)
-            xx = (X * X).sum(axis=1)  # (b,) Σx²
-            cross = X @ S.T  # (b, k) Σx·s — integer matmul, exact
-            d_int = nn * xx[:, None] - 2 * nv * cross + ss  # (b, k)
-            dval = d_int.astype(np.float64) / n2
-            pdf[field] = id_arr[np.argmin(dval, axis=1)]
+            for field, part, ids, S, nv, ss, n2, nn in mats:
+                Xm = X[:, part]  # (b, w) view
+                xx = (Xm * Xm).sum(axis=1)  # (b,) Σx²
+                cross = Xm @ S.T  # (b, k) Σx·s — integer matmul, exact
+                d_int = nn * xx[:, None] - 2 * nv * cross + ss
+                dval = d_int.astype(np.float64) / n2
+                pdf[field] = ids[np.argmin(dval, axis=1)]
             yield pdf
 
     return df.mapInPandas(gen, schema)
@@ -298,15 +321,15 @@ def _gemm_envelope_ok(
     cents: dict[int, tuple[list[int], int]], x_bound: int | None
 ) -> bool:
     """Driver-side int64-safety check for the GEMM kernel's EXPANDED
-    intermediates (ADVICE r10): with every component |x| ≤ ``x_bound``,
-    each per-cluster intermediate the kernel materializes — n²Σx²,
-    2n|Σxs|, Σs², and the combined distance — is bounded by
-    d·(n·x_bound + max|s|)², so that quantity fitting in int64 makes the
-    expansion exact (the accumulator-form expression path shares the same
-    worst case but never expands, so typical values cancel; outside the
-    envelope the router falls back to it). Computed in exact Python ints
-    from driver-held values only — max|s| and n from the centroid dict,
-    x_bound from the centroid aggregate itself."""
+    intermediates: with every component |x| ≤ ``x_bound``, each
+    per-cluster intermediate the kernel materializes — n²Σx², 2n|Σxs|,
+    Σs², and the combined distance — is bounded by d·(n·x_bound + max|s|)²,
+    so that quantity fitting in int64 makes the expansion exact (the
+    accumulator-form expression path shares the same worst case but never
+    expands, so typical values cancel; outside the envelope the router
+    falls back to it). Computed in exact Python ints from driver-held
+    values only — max|s| and n from the centroid dict, x_bound from the
+    centroid aggregate itself."""
     if x_bound is None:
         return False
     xb = int(x_bound)
@@ -317,25 +340,35 @@ def _gemm_envelope_ok(
     return True
 
 
-def _assign_cluster(
+def _assign_codes(
     df: DataFrame,
-    cents: dict[int, tuple[list[int], int]],
+    books: list[tuple[str, slice | None, dict[int, tuple[list[int], int]]]],
     n_rows: int,
-    x_bound: int | None = None,
-    field: str = "cluster",
+    x_bound: int | None,
     col: str = "qvec",
 ) -> DataFrame:
-    """Route the argmin assignment through the expression or the GEMM
-    kernel by work volume (``GEMM_ASSIGN_MIN_WORK``); results are
-    bit-identical either way. The GEMM path additionally requires the
-    driver-side int64 envelope check to pass (``_gemm_envelope_ok``) —
-    outside it the expanded intermediates could wrap silently, so the
-    router keeps the accumulator-form expression plan instead."""
-    if n_rows * len(cents) >= GEMM_ASSIGN_MIN_WORK and _gemm_envelope_ok(
-        cents, x_bound
+    """Append one argmin column per (field, part, codebook) book, routed
+    by work volume: the GEMM kernel when ``n_rows × Σk`` reaches
+    ``GEMM_ASSIGN_MIN_WORK`` and every codebook passes the int64 envelope
+    check (outside it the expanded intermediates could wrap silently),
+    else the expression path. Results are bit-identical either way. On
+    the expression path a whole-vector book labels its argmin struct with
+    its field; a sliced book projects its slice as ``_sub{i}`` and labels
+    the struct ``code``."""
+    work = n_rows * sum(len(bk) for _, _, bk in books)
+    if work >= GEMM_ASSIGN_MIN_WORK and all(
+        _gemm_envelope_ok(bk, x_bound) for _, _, bk in books
     ):
-        return _gemm_assign(df, cents, field=field, col=col)
-    return df.withColumn(field, _int_assign_expr(cents, field=field, col=col))
+        return _gemm_assign_codes(df, books, col=col)
+    out = df
+    for i, (field, part, bk) in enumerate(books):
+        if part is None:
+            out = out.withColumn(field, _int_assign_expr(bk, field=field, col=col))
+        else:
+            out = out.withColumn(
+                f"_sub{i}", F.slice(col, part.start + 1, part.stop - part.start)
+            ).withColumn(field, _int_assign_expr(bk, field="code", col=f"_sub{i}"))
+    return out
 
 
 # Memoized Lloyd "models": the centroid matrices are deterministic given
@@ -367,7 +400,7 @@ def _gate_kmeans(
     n = _n_valid(spark, sf_dir)
     if hit is not None:
         cents, final_cents, x_bound = hit
-        return _assign_cluster(emb, cents, n, x_bound), final_cents
+        return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
     cached = emb.persist()
     try:
         assigned = cached.withColumn(
@@ -375,13 +408,13 @@ def _gate_kmeans(
         )
         for _ in range(n_iter):
             cents, x_bound = _int_centroids(assigned)
-            assigned = _assign_cluster(cached, cents, n, x_bound)
+            assigned = _assign_codes(cached, [("cluster", None, cents)], n, x_bound)
         final_cents, _ = _int_centroids(assigned)
     finally:
         cached.unpersist()
     with _KMEANS_CACHE_LOCK:
         _KMEANS_MODEL_CACHE[key] = (cents, final_cents, x_bound)
-    return _assign_cluster(emb, cents, n, x_bound), final_cents
+    return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
 
 
 def kmeans_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,18 +635,17 @@ PQ_K = 8  # codes per subspace
 PQ_ITERS = 2
 PQ_DIM = 64  # embeddings fixture dimension; subspace width = PQ_DIM // PQ_M
 
-_PQ_MODEL_CACHE: dict[tuple, list] = {}
-# Per-fit global |x| bound over the quantized components (round 13):
-# collected inside the SAME lock-step fitting aggregate (zero extra jobs)
-# and keyed like the model cache; feeds the GEMM envelope check for the
-# fused code-assignment kernel. None (pre-round-13 fits absent from the
-# cache never happen — both caches fill together) fails the envelope and
-# keeps the expression path, which is always safe.
-_PQ_XBOUND_CACHE: dict[tuple, int] = {}
+# (books, x_bound) per fit, the _KMEANS_MODEL_CACHE contract: each book is
+# (code field, subspace slice, codebook) — the router's input as-is — and
+# x_bound is the corpus max|x| the GEMM envelope check needs.
+_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
 
 
-def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int], int]]]:
-    """Per-subspace exact-rational codebooks, memoized per session (the
+def _pq_fit(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[str, slice, dict[int, tuple[list[int], int]]]], int]:
+    """Per-subspace exact-rational codebooks as ``(code_m, slice, book)``
+    triples plus the corpus component bound, memoized per session (the
     fitted-model contract, as for the k-means cache)."""
     key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
     with _KMEANS_CACHE_LOCK:
@@ -623,10 +655,9 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int],
     width = PQ_DIM // PQ_M
     # All M subspaces fit in lock-step: every Lloyd iteration is ONE
     # shuffle job keyed on (m, cluster, pos) instead of M sequential
-    # per-subspace jobs (round-9: cut the cold fit from 2·M driver-
-    # synchronized collects to PQ_ITERS — the per-round stats of
-    # independent subspaces commute, so fusing them changes nothing
-    # about the per-subspace rational centroids or assignments).
+    # per-subspace jobs — the per-round stats of independent subspaces
+    # commute, so fusing them changes nothing about the per-subspace
+    # rational centroids or assignments.
     subs = _quantized(spark, sf_dir).select(
         "vec_id",
         *[
@@ -667,8 +698,8 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int],
                 .agg(
                     F.sum("x").alias("s"),
                     F.count("*").alias("n"),
-                    # global component bound for the GEMM envelope (round
-                    # 13) — every round aggregates every valid row, so any
+                    # global component bound for the GEMM envelope —
+                    # every round aggregates every valid row, so any
                     # round's max is the corpus max; rides the same job
                     F.max(F.abs(F.col("x"))).alias("mx"),
                 )
@@ -698,126 +729,25 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int],
             )
     finally:
         subs.unpersist()
+    model = [
+        (f"code_{m}", slice(m * width, (m + 1) * width), bk)
+        for m, bk in enumerate(books)
+    ]
     with _KMEANS_CACHE_LOCK:
-        _PQ_MODEL_CACHE[key] = books
-        _PQ_XBOUND_CACHE[key] = x_bound
-    return books
-
-
-def _pq_xbound(spark: SparkSession, sf_dir: str) -> int | None:
-    """The fit's corpus-wide |x| bound (None if this session never ran
-    the fit — callers go through _pq_fit first, so it is always set)."""
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
-    with _KMEANS_CACHE_LOCK:
-        return _PQ_XBOUND_CACHE.get(key)
-
-
-def _gemm_assign_codes(
-    df: DataFrame,
-    books: list[dict[int, tuple[list[int], int]]],
-    col: str = "qvec",
-) -> DataFrame:
-    """Fused Arrow twin of the M per-subspace ``_int_assign_expr`` code
-    assignments (round 13, guide §4.1/§4.2): ONE ``mapInPandas`` pass
-    computes all ``code_0..code_{M-1}`` — one Python boundary for the
-    whole encode instead of M interpreted ``aggregate``/``zip_with``
-    folds per row (higher-order functions run outside whole-stage
-    codegen). Same integer-exact algebraic expansion as ``_gemm_assign``
-    — Σ(n·x−s)² = n²Σx² − 2nΣxs + Σs² per subspace slice — the identical
-    CAST-to-double division and the identical lowest-code tie break, so
-    codes are BIT-IDENTICAL to the expression path (differential pinned
-    in tests/test_clustering.py). Callers pre-project to exactly the
-    columns the downstream needs: an opaque kernel defeats column
-    pruning, so nothing heavy may ride through it (guide §4.1)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    width = PQ_DIM // PQ_M
-    mats = []
-    for bk in books:
-        ids = sorted(bk)
-        S = np.array([bk[c][0] for c in ids], dtype=np.int64)  # (k, w)
-        nv = np.array([bk[c][1] for c in ids], dtype=np.int64)  # (k,)
-        mats.append(
-            (
-                np.array(ids, dtype=np.int32),
-                S,
-                nv,
-                (S * S).sum(axis=1),  # Σs²
-                (nv * nv).astype(np.float64),  # divisor, exact < 2^53
-                nv * nv,  # int64 n² for the exact integer term
-            )
-        )
-    schema = T.StructType(
-        df.schema.fields
-        + [T.StructField(f"code_{m}", T.IntegerType()) for m in range(PQ_M)]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                for m in range(PQ_M):
-                    pdf[f"code_{m}"] = np.array([], dtype=np.int32)
-                yield pdf
-                continue
-            X = np.stack(pdf[col].to_numpy()).astype(np.int64)  # (b, d)
-            for m, (ids, S, nv, ss, n2, nn) in enumerate(mats):
-                Xm = X[:, m * width:(m + 1) * width]  # (b, w) view
-                xx = (Xm * Xm).sum(axis=1)  # (b,)
-                cross = Xm @ S.T  # (b, k) integer matmul, exact
-                d_int = nn * xx[:, None] - 2 * nv * cross + ss
-                dval = d_int.astype(np.float64) / n2
-                pdf[f"code_{m}"] = ids[np.argmin(dval, axis=1)]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
-
-
-def _assign_pq_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    df: DataFrame,
-    books: list[dict[int, tuple[list[int], int]]],
-    col: str = "qvec",
-) -> DataFrame:
-    """Route the M-subspace PQ encode through the expression path or the
-    fused GEMM kernel by work volume — the ``_assign_cluster`` contract
-    extended to codes (round 13; the last always-interpreted argmin on a
-    corpus-sized path). Work = n_rows × PQ_K × PQ_M candidate distances;
-    below GEMM_ASSIGN_MIN_WORK the expression path wins (no Python
-    worker round-trip, full pruning — every gated tier ≤ sf0.1 stays on
-    it, so gate plans are unchanged), above it the kernel takes over
-    IF every subspace codebook passes the int64 envelope check
-    (``_gemm_envelope_ok`` with the fit's own corpus |x| bound)."""
-    n = _n_valid(spark, sf_dir)
-    xb = _pq_xbound(spark, sf_dir)
-    if n * PQ_K * PQ_M >= GEMM_ASSIGN_MIN_WORK and all(
-        _gemm_envelope_ok(bk, xb) for bk in books
-    ):
-        return _gemm_assign_codes(df, books, col=col)
-    width = PQ_DIM // PQ_M
-    out = df
-    for m, bk in enumerate(books):
-        out = out.withColumn(
-            f"_sub{m}", F.slice(col, m * width + 1, width)
-        ).withColumn(
-            f"code_{m}", _int_assign_expr(bk, field="code", col=f"_sub{m}")
-        )
-    return out
+        _PQ_MODEL_CACHE[key] = (model, x_bound)
+    return model, x_bound
 
 
 def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gated PQ encoding: per vector, the M argmin codes against the
     per-subspace codebooks — a single map-only pass once the codebooks
     are fitted (they enter as literals, like Spark ML model application).
-    Round 13: the encode routes through ``_assign_pq_codes`` — the fused
-    GEMM kernel above the work threshold (one Arrow boundary for all M
-    codes instead of M interpreted folds per corpus row), the identical
-    expression plan below it (every gated tier)."""
-    books = _pq_fit(spark, sf_dir)
+    The encode goes through ``_assign_codes``: one Arrow boundary for all
+    M codes above the work threshold, M expression folds below it."""
+    books, x_bound = _pq_fit(spark, sf_dir)
     emb = _quantized(spark, sf_dir)
-    out = _assign_pq_codes(
-        spark, sf_dir, emb.select("vec_id", "qvec"), books
+    out = _assign_codes(
+        emb.select("vec_id", "qvec"), books, _n_valid(spark, sf_dir), x_bound
     )
     return out.select(
         "vec_id", *[F.col(f"code_{m}") for m in range(PQ_M)]
@@ -895,8 +825,7 @@ def pq_adc_topk(
     index is lossy vs exact search, but every quantity on its decision
     path is integer-exact or fixed-order IEEE, so the twin reproduces the
     identical shortlist and rerank bit-for-bit."""
-    books = _pq_fit(spark, sf_dir)
-    width = PQ_DIM // PQ_M
+    books, _ = _pq_fit(spark, sf_dir)
     codes = pq_codes_query(spark, sf_dir)
     emb = _quantized(spark, sf_dir)
     queries = emb.filter(
@@ -904,9 +833,9 @@ def pq_adc_topk(
     ).select(
         F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")
     )
-    for m, cents in enumerate(books):
+    for m, (_, part, cents) in enumerate(books):
         queries = queries.withColumn(
-            f"_q{m}", F.slice("q_qvec", m * width + 1, width)
+            f"_q{m}", F.slice("q_qvec", part.start + 1, part.stop - part.start)
         )
         # per-query literal distance table, indexed BY CLUSTER ID (slot
         # c+1 = centroid c): codes are cluster ids, and a cluster that
@@ -1113,24 +1042,19 @@ def ivf_pq_topk(
     integer-exact or fixed-order IEEE (the pq_adc_topk argument), so the
     DuckDB twin reproduces shortlists and ranks bit-for-bit."""
     assigned, cents = _gate_kmeans(spark, sf_dir)
-    books = _pq_fit(spark, sf_dir)
-    width = PQ_DIM // PQ_M
+    books, x_bound = _pq_fit(spark, sf_dir)
 
     # candidate index: IVF cell + M PQ codes, all map-only on one scan.
-    # Round 13: the code encode routes through _assign_pq_codes (fused
-    # GEMM kernel above the work threshold — see pq_codes_query); the
-    # pre-projection to (vec_id, cluster, qvec) keeps the kernel's
-    # opaque boundary from dragging the raw embedding column through
-    # Python (guide §4.1). At GEMM scale the cell assignment inside
-    # `assigned` is a kernel too — two boundaries total; fusing them
-    # would need _gate_kmeans to expose its pre-assignment frame, noted
-    # as future work, and the expression tiers (every gated sf) fuse
-    # into one codegen stage as before.
-    cand = _assign_pq_codes(
-        spark,
-        sf_dir,
+    # The pre-projection to (vec_id, cluster, qvec) keeps the encode
+    # kernel's opaque boundary from dragging the raw embedding column
+    # through Python. At GEMM scale the cell assignment inside `assigned`
+    # is a kernel too — two boundaries; below the threshold both fuse
+    # into one codegen stage.
+    cand = _assign_codes(
         assigned.select("vec_id", "cluster", "qvec"),
         books,
+        _n_valid(spark, sf_dir),
+        x_bound,
     )
     cand = cand.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -1156,9 +1080,9 @@ def ivf_pq_topk(
     # per-query ADC distance tables, indexed by cluster id (slot c+1 =
     # centroid c; emptied clusters keep their slot as +inf — the
     # pq_adc_topk layout contract)
-    for m, bk in enumerate(books):
+    for m, (_, part, bk) in enumerate(books):
         queries = queries.withColumn(
-            f"_q{m}", F.slice("q_qvec", m * width + 1, width)
+            f"_q{m}", F.slice("q_qvec", part.start + 1, part.stop - part.start)
         ).withColumn(
             f"_dt{m}",
             F.array(
@@ -1359,15 +1283,14 @@ SEMDEDUP_COS_THRESHOLD = 0.3
 # k is SemDeDup's scale knob: within-cell pairing is Σ|cell|², so a
 # production run grows k with the corpus (the paper uses 50k clusters at
 # web scale) to hold cell sizes — and therefore per-cell quadratic work —
-# constant. Round 10 makes that policy CODE (the round-9 verdict's one
-# super-linear data-path finding): the default k is FITTED from a
+# constant. That policy is code here: the default k is FITTED from a
 # memoized count as max(SEMDEDUP_K_MIN, n_valid // SEMDEDUP_TARGET_CELL),
 # so the average cell — and with it the per-cell quadratic pair work —
 # stays ~constant as the corpus grows. The DuckDB twin computes the SAME
 # k from the same count via a scalar subquery, so the contract stays
 # cross-engine exact at every tier. The floor keeps every shipped
-# fixture ≤ sf1 at k=32 (n // 640 ≤ 31 there), i.e. bit-identical to the
-# fixed-k rounds; the first tier where the fit binds is sf3 (60k valid
+# fixture ≤ sf1 at k=32 (n // 640 ≤ 31 there), i.e. bit-identical to a
+# fixed k=32; the first tier where the fit binds is sf3 (60k valid
 # vectors → k=93, average cell ~645 instead of ~1875).
 SEMDEDUP_K_MIN = 32
 SEMDEDUP_K = SEMDEDUP_K_MIN  # fixed-k alias (explicit-k callers, twins)
@@ -1380,19 +1303,13 @@ SEMDEDUP_SUB_BITS = 16
 # Work volume (valid vectors × bounded within-group partner count) above
 # which semantic_dedup's within-cell pair scoring routes through the
 # grouped Arrow GEMM kernel instead of the interpreted zip_with/aggregate
-# fold expressions (round 13; the semantic-dedup analog of the
-# _assign_cluster / _assign_pq_codes routing contract — higher-order
-# functions run outside whole-stage codegen, and the pair join evaluates
-# one 64-element fold per CANDIDATE PAIR, measured 6.37 s of the 6.42 s
-# sf1 warm path). Every gated tier stays under the threshold (sf0.1:
-# 2000 × 63 = 126k), so gate plans keep the expression shape with zero
-# Python nodes; the kernel takes over at sf1+ (12.5M/38.7M).
+# fold expressions — the ``_assign_codes`` routing rule applied to pairs.
+# Higher-order functions run outside whole-stage codegen, and the pair
+# join evaluates one 64-element fold per CANDIDATE PAIR (6.37 s of the
+# 6.42 s warm path at sf1). Every gated tier stays under the threshold
+# (sf0.1: 2000 × 63 = 126k), so gate plans keep the expression shape with
+# zero Python nodes; the kernel takes over at sf1+ (12.5M/38.7M).
 SEMDEDUP_GEMM_MIN_WORK = 2_000_000
-# Env override for A/B measurement only: "1" forces the kernel on, "0"
-# forces the expression path, unset/"auto" routes by work volume.
-SEMDEDUP_GEMM_MODE = __import__("os").environ.get(
-    "SPARK_GRAFT_SEMDEDUP_GEMM", "auto"
-)
 
 
 def _spark_round6(y: float) -> float:
@@ -1451,15 +1368,15 @@ def _round6_ge_cutoff(tau: float) -> float:
 def _semdedup_pair_kernel(
     df: DataFrame, tau: float, cell_cap: int | None
 ) -> DataFrame:
-    """Grouped Arrow twin of semantic_dedup's within-cell pair scoring
-    (round 13, guide §4.2): per (cell, sub-bucket) group, ONE int64 GEMM
+    """Grouped Arrow twin of semantic_dedup's within-cell pair scoring:
+    per (cell, sub-bucket) group, ONE int64 GEMM
     scores every (row × capped-candidate) pair instead of one interpreted
     64-element ``zip_with``/``aggregate`` fold per pair, and emits the
     ``dups`` aggregate directly — (vec_id, MIN qualifying lower id). The
     rank window, the pair-expansion join, and the groupBy all collapse
     into the one grouped-map exchange, which ships exactly the bytes the
     window exchange shipped before. Exactness contract (the
-    ``_gemm_assign`` discipline): integer dot/norms are exact int64 under
+    ``_gemm_assign_codes`` discipline): integer dot/norms are exact int64 under
     the Cauchy–Schwarz envelope max(nrm2) < 2^62 (checked per group;
     outside it the group falls back to exact object-dtype integers), the
     float chain is the identical correctly-rounded IEEE ops in the
@@ -1588,8 +1505,8 @@ def semantic_dedup(
     compares across cells); and with ``k=None`` (the default) k is FITTED
     to the corpus as ``max(SEMDEDUP_K_MIN, n_valid // target_cell)`` from
     a memoized count, holding the average cell — and the per-cell
-    quadratic work — constant as the corpus grows (round-9 verdict: the
-    fixed k=32 left pair work growing quadratically between sf1 and sf3).
+    quadratic work — constant as the corpus grows (a fixed k=32 grows
+    pair work quadratically between sf1 and sf3).
     The DuckDB twin computes the identical k via a scalar subquery over
     the same valid-embedding set, so fitted runs stay hash-exact
     cross-engine; the pair join shuffles on the cell key alone. Numerics:
@@ -1598,7 +1515,7 @@ def semantic_dedup(
     bit-identical across engines (the pq_adc_topk contract). Degenerate
     all-zero quantizations are excluded explicitly on both engines.
 
-    Mega-cell guard (round-6 verdict): "k ∝ √N keeps cells bounded" is
+    Mega-cell guard: "k ∝ √N keeps cells bounded" is
     policy, not code — a skewed embedding distribution could put 10% of
     a 100 TB corpus in one cell and go quadratic. ``cell_cap`` makes the
     envelope structural, in two layers that leave every cell of size ≤
@@ -1679,19 +1596,15 @@ def semantic_dedup(
             )
             .drop("_cell_n")
         )
-    # Route the within-group pair scoring (round 13): above
+    # Route the within-group pair scoring by work volume: above
     # SEMDEDUP_GEMM_MIN_WORK the grouped Arrow GEMM kernel computes the
     # dups aggregate in one grouped-map pass (results identical — pinned
-    # by the forced-on/off differential in tests/test_clustering.py and
-    # by forced-on oracle parity); below it the expression plan wins (no
-    # Python worker round-trip, zero Python nodes — every gated tier).
+    # by the forced-on/off differential in tests/test_clustering.py);
+    # below it the expression plan wins (no Python worker round-trip,
+    # zero Python nodes — every gated tier).
     avg_cell = max(1, _n_valid(spark, sf_dir) // max(k, 1))
     partners = avg_cell if cell_cap is None else min(avg_cell, cell_cap)
-    use_kernel = SEMDEDUP_GEMM_MODE == "1" or (
-        SEMDEDUP_GEMM_MODE != "0"
-        and _n_valid(spark, sf_dir) * partners >= SEMDEDUP_GEMM_MIN_WORK
-    )
-    if use_kernel:
+    if _n_valid(spark, sf_dir) * partners >= SEMDEDUP_GEMM_MIN_WORK:
         dups = _semdedup_pair_kernel(
             paired.select("cluster", "sub", "vec_id", "qvec", "nrm2"),
             tau,

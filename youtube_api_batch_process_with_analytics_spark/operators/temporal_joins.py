@@ -178,8 +178,8 @@ def events_in_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-12 audit (the round-11 floor-erosion watch item, 8.3×→10.6×
     DuckDB from sf1 to sf3): two alternatives were built and measured
-    against this shape in one interleaved session per tier
-    (tools/ab_range_join.py, 6 reps, min after JIT):
+    against this shape in one interleaved session per tier (6 reps, min
+    after JIT; see OPTIMIZATION_r12.md):
 
     - candidate-start PROFILE inversion (events explode into their ≤W
       midnight-aligned window starts, partial-agg to a (custkey,

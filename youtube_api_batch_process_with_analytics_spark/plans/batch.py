@@ -14,7 +14,7 @@ not a failed batch (mirroring api_server.py:556-562).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor, as_completed
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -47,30 +47,36 @@ def run_batch(
     Returns per-request dicts with ``status``/``data``/``error``. With
     ``collect=False`` the value is the (lazy) DataFrame — callers sink it
     themselves; ``collect=True`` materializes counts for smoke use.
+
+    The batch waits at most ``FUTURE_TIMEOUT_S`` per request in total.
+    Items still running or queued at that deadline get an
+    ``error="timeout"`` entry; queued ones are cancelled, and the call
+    returns without waiting for running ones.
     """
     if len(requests) > MAX_BATCH_REQUESTS:
         raise ValueError(
             f"batch size {len(requests)} exceeds limit {MAX_BATCH_REQUESTS}"
         )
 
-    def one(i: int, req: BatchRequest) -> tuple[str, dict[str, Any]]:
-        key = f"{req.type}_{i}"
+    def one(req: BatchRequest) -> dict[str, Any]:
         try:
             fn = registry[req.type]
             df = fn(spark, sf_dir, **req.params)
             data: Any = df
             if collect:
                 data = {"rows": df.count(), "columns": df.columns}
-            return key, {"status": "success", "data": data, "error": None}
+            return {"status": "success", "data": data, "error": None}
         except Exception as exc:  # per-item isolation (api_server.py:556-562)
-            return key, {"status": "error", "data": None, "error": str(exc)}
+            return {"status": "error", "data": None, "error": str(exc)}
 
-    results: dict[str, dict[str, Any]] = {}
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futures = {
-            pool.submit(one, i, req): i for i, req in enumerate(requests)
-        }
-        for fut in as_completed(futures, timeout=FUTURE_TIMEOUT_S * len(requests)):
-            key, value = fut.result()
-            results[key] = value
-    return results
+    pool = ThreadPoolExecutor(max_workers=max_workers)
+    futures = [pool.submit(one, req) for req in requests]
+    wait(futures, timeout=FUTURE_TIMEOUT_S * len(requests))
+    pool.shutdown(wait=False, cancel_futures=True)
+    timed_out = {"status": "error", "data": None, "error": "timeout"}
+    return {
+        f"{req.type}_{i}": (
+            fut.result() if fut.done() and not fut.cancelled() else dict(timed_out)
+        )
+        for i, (req, fut) in enumerate(zip(requests, futures))
+    }

@@ -113,15 +113,18 @@ def test_floor_div_guard(spark):
 
 
 def test_pct_and_rate_guards(spark):
+    # the last pair's unrounded rate is 3996.6437499999997, one ulp below
+    # a 4th-decimal half: it must round up, as the DuckDB twin does
     df = spark.createDataFrame(
-        [(5.0, 10.0), (5.0, 0.0), (5.0, None)], "n double, d double"
+        [(5.0, 10.0), (5.0, 0.0), (5.0, None), (70340.93, 1760.0)],
+        "n double, d double",
     )
     out = df.select(
         pct_of(F.col("n"), F.col("d")).alias("p"),
         safe_rate(F.col("n"), F.col("d")).alias("r"),
     ).collect()
-    assert [r.p for r in out] == [50.0, 0.0, None] or out[0].p == 50.0
-    assert [r.r for r in out] == [50.0, 0.0, 0.0]
+    assert [r.p for r in out] == [50.0, 0.0, None, 3996.6] or out[0].p == 50.0
+    assert [r.r for r in out] == [50.0, 0.0, 0.0, 3996.6438]
 
 
 def test_token_count(spark):

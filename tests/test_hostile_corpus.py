@@ -237,10 +237,9 @@ def test_hostile_corpus_kernel_routes(spark, hostile_dir, monkeypatch):
 
     monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
     monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
-    # fresh model caches, so the Lloyd fit rounds route through the
+    # a fresh value store, so the Lloyd fit rounds route through the
     # kernel too instead of reusing the first pass's fitted centroids
-    monkeypatch.setattr(cl, "_KMEANS_MODEL_CACHE", {})
-    monkeypatch.setattr(cl, "_PQ_MODEL_CACHE", {})
+    monkeypatch.setattr(memo, "_VALUES", {})
     # the query functions themselves: the registry's plan cache would return
     # the first pass's expression-path plans
     oracles = em.oracle_sql()

@@ -1,21 +1,25 @@
-"""Session-memo registry discipline (yt.operators.memo).
+"""Session-memo discipline (yt.operators.memo).
 
-The round-6 verdict's storage finding: in-query ``persist()`` frames were
-never unpersisted, so a long-lived session accumulated InMemoryRelations.
-These tests pin the round-7 contract: repeated query invocations do not
-grow executor storage, release drops everything the registry owns, and a
-released session refits with identical results.
+In-query ``persist()`` frames that are never unpersisted make a
+long-lived session accumulate InMemoryRelations. These tests pin the
+contract: repeated query invocations do not grow executor storage,
+release drops every frame the registry owns and unlinks every staged
+dir, values survive release, a released session refits with identical
+results, and concurrent first callers all get the first writer's entry.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+from types import SimpleNamespace
+
 import __spark_entry__ as entrymod
 from youtube_api_batch_process_with_analytics_spark.operators import memo
-from youtube_api_batch_process_with_analytics_spark.operators.ranking import (
-    _LM_STATS_CACHE,
-)
 
 _QUERIES = entrymod.queries()
+# session_value/acquire_staged only read the application id
+_FAKE_SPARK = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-test"))
 
 
 def _n_persistent(spark) -> int:
@@ -55,15 +59,14 @@ def test_release_unpersists_registry_frames(spark, sf_dir):
     memo.release_session_frames()
     base = _n_persistent(spark)
     _force(_QUERIES["tfidf_top_terms"](spark, sf_dir))
+    before_lm = memo.n_session_frames()
     _force(_QUERIES["bigram_lm_quality"](spark, sf_dir))
+    assert memo.n_session_frames() - before_lm == 3  # lm_occ, lm_cb, lm_cu
     _force(_QUERIES["dedup_exact"](spark, sf_dir))
-    assert memo.n_session_frames() > 0
-    assert len(_LM_STATS_CACHE) == 1
     grown = _n_persistent(spark)
     assert grown > base  # the fit actually pinned storage
     memo.release_session_frames()
     assert memo.n_session_frames() == 0
-    assert len(_LM_STATS_CACHE) == 0
     # Only explicit persists count here: localCheckpoint blocks leave the
     # registry asynchronously (ContextCleaner after GC), so assert the
     # persist-backed delta specifically — dfreq + cb + cu + shingle = 4
@@ -146,83 +149,140 @@ def test_score_micro_bound_holds(spark, sf_dir):
     memo.release_session_frames()
 
 
-def test_latch_source_release_defers_while_in_use(tmp_path):
-    """ADVICE r7: a release must never rmtree a staged latch source out
-    from under an active streaming run. With the dir marked in-use,
-    release only unlinks it from the cache (doomed); the last reader's
-    exit performs the physical delete. No Spark needed — the lifecycle
-    functions are pure bookkeeping around the staged path."""
-    import os
+def test_staged_release_defers_while_in_use():
+    """A release must never delete a staged dir out from under an active
+    reader. Release unlinks every staged dir: idle ones are deleted at
+    once, one in use is doomed and deleted by its last reader's exit.
+    No Spark needed — staging is bookkeeping around ``stage(path)``."""
+    staged_into = []
 
-    from youtube_api_batch_process_with_analytics_spark.streaming import state as st
+    def stage(path):
+        staged_into.append(path)
+        with open(os.path.join(path, "part-0.parquet"), "wb") as f:
+            f.write(b"x")
 
-    staged = tmp_path / "latch_src_fake"
-    staged.mkdir()
-    (staged / "part-0.parquet").write_bytes(b"x")
-    key = ("app-test", "sf-test")
-    with st._LATCH_LOCK:
-        st._LATCH_SRC_CACHE[key] = str(staged)
-        st._LATCH_IN_USE[str(staged)] = 1  # simulate an active run
+    memo.release_session_frames()
+    busy = memo.acquire_staged(_FAKE_SPARK, "sf-test", "busy", stage)
+    assert memo.acquire_staged(_FAKE_SPARK, "sf-test", "busy", stage) == busy
+    assert staged_into == [busy]  # staged once, two readers
+    memo.release_staged(busy)
+    idle = memo.acquire_staged(_FAKE_SPARK, "sf-test", "idle", stage)
+    memo.release_staged(idle)
 
-    st._release_latch_sources()
-    assert os.path.isdir(staged)  # still on disk: reader active
-    with st._LATCH_LOCK:
-        assert key not in st._LATCH_SRC_CACHE  # but unlinked from cache
-        assert str(staged) in st._LATCH_DOOMED
+    memo.release_session_frames()
+    assert not os.path.exists(idle)  # idle: deleted by release
+    assert os.path.isdir(busy)  # still on disk: reader active
+    with memo._LOCK:
+        assert busy not in memo._STAGED.values()  # but unlinked
+        assert busy in memo._DOOMED
+    restaged = memo.acquire_staged(_FAKE_SPARK, "sf-test", "busy", stage)
+    assert restaged != busy  # a released key stages afresh
 
-    st._latch_src_release(str(staged))  # last reader exits
-    assert not os.path.exists(staged)
-    with st._LATCH_LOCK:
-        assert str(staged) not in st._LATCH_IN_USE
-        assert str(staged) not in st._LATCH_DOOMED
+    memo.release_staged(busy)  # last reader exits
+    assert not os.path.exists(busy)
+    with memo._LOCK:
+        assert busy not in memo._IN_USE
+        assert busy not in memo._DOOMED
 
-    # idle dirs are deleted synchronously by release
-    idle = tmp_path / "latch_src_idle"
-    idle.mkdir()
-    with st._LATCH_LOCK:
-        st._LATCH_SRC_CACHE[key] = str(idle)
-    st._release_latch_sources()
-    assert not os.path.exists(idle)
+    memo.release_staged(restaged)
+    memo.release_session_frames()
+    assert not os.path.exists(restaged)
+
+    # a failed stage leaves neither a dir nor a registry entry behind
+    def broken(path):
+        staged_into.append(path)
+        raise RuntimeError("stage failed")
+
+    try:
+        memo.acquire_staged(_FAKE_SPARK, "sf-test", "broken", broken)
+    except RuntimeError:
+        pass
+    assert not os.path.exists(staged_into[-1])
+    with memo._LOCK:
+        assert ("app-test", "sf-test", "broken") not in memo._STAGED
+        assert staged_into[-1] not in memo._IN_USE
 
 
-def test_retention_root_release_defers_while_in_use(tmp_path):
-    """ADVICE r10: the retention staged root reuses the latch's
-    in-use/doomed discipline — release must never rmtree the post-drop
-    layout out from under an executing retention_applied scan. Pure
-    bookkeeping, no Spark needed."""
-    import os
+def _assert_release_defers_while_in_use(tag, stage):
+    """Release with one dir of ``tag`` in use and one idle: the idle dir
+    is deleted at once; the busy one stays on disk, unlinked and doomed,
+    until its last reader's exit deletes it."""
+    memo.release_session_frames()
+    busy = memo.acquire_staged(_FAKE_SPARK, "sf-busy", tag, stage)
+    idle = memo.acquire_staged(_FAKE_SPARK, "sf-idle", tag, stage)
+    memo.release_staged(idle)
 
-    from youtube_api_batch_process_with_analytics_spark.sources import (
-        partitioned as pt,
-    )
+    memo.release_session_frames()
+    assert not os.path.exists(idle)  # idle: deleted by release
+    assert os.path.isdir(busy)  # still on disk: reader active
+    with memo._LOCK:
+        assert ("app-test", "sf-busy", tag) not in memo._STAGED  # unlinked
+        assert busy in memo._DOOMED
 
-    staged = tmp_path / "retention_fake"
-    staged.mkdir()
-    (staged / "day=2026-01-01").mkdir()
-    key = ("app-test", "sf-test", 7)
-    with pt._RETENTION_LOCK:
-        pt._RETENTION_CACHE[key] = str(staged)
-        pt._RETENTION_IN_USE[str(staged)] = 1  # simulate an active scan
+    memo.release_staged(busy)  # last reader exits
+    assert not os.path.exists(busy)
+    with memo._LOCK:
+        assert busy not in memo._IN_USE
+        assert busy not in memo._DOOMED
 
-    pt._release_retention_roots()
-    assert os.path.isdir(staged)  # still on disk: scan active
-    with pt._RETENTION_LOCK:
-        assert key not in pt._RETENTION_CACHE  # but unlinked from cache
-        assert str(staged) in pt._RETENTION_DOOMED
 
-    pt._retention_root_release(str(staged))  # last handle drops
-    assert not os.path.exists(staged)
-    with pt._RETENTION_LOCK:
-        assert str(staged) not in pt._RETENTION_IN_USE
-        assert str(staged) not in pt._RETENTION_DOOMED
+def test_latch_source_release_defers_while_in_use():
+    """A release must never delete the streaming latch's staged source
+    out from under an active run (quota_latch_final holds it between
+    acquire_staged and release_staged)."""
 
-    # idle roots are deleted synchronously by release
-    idle = tmp_path / "retention_idle"
-    idle.mkdir()
-    with pt._RETENTION_LOCK:
-        pt._RETENTION_CACHE[key] = str(idle)
-    pt._release_retention_roots()
-    assert not os.path.exists(idle)
+    def stage(path):
+        with open(os.path.join(path, "part-0.parquet"), "wb") as f:
+            f.write(b"x")
+
+    _assert_release_defers_while_in_use("latch_src", stage)
+
+
+def test_retention_root_release_defers_while_in_use():
+    """A release must never delete the post-drop retention layout out
+    from under an executing retention_applied scan (the returned handle
+    holds it until collected)."""
+
+    def stage(path):
+        os.mkdir(os.path.join(path, "day=2026-01-01"))
+
+    _assert_release_defers_while_in_use("retention_applied", stage)
+
+
+def test_session_value_race_first_writer_wins():
+    """Eight threads racing one cold key all build (outside the lock) and
+    all get the first writer's object; release_session_frames() leaves
+    values in place and n_session_frames() does not count them."""
+    n = 8
+    barrier = threading.Barrier(n)
+    built, got = [], [None] * n
+
+    def build():
+        obj = object()
+        built.append(obj)
+        barrier.wait()  # every thread is inside build before any writes
+        return obj
+
+    def run(i):
+        got[i] = memo.session_value(_FAKE_SPARK, "sf-race", "value", build)
+
+    frames_before = memo.n_session_frames()
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(built) == n
+    assert got[0] in built
+    assert all(g is got[0] for g in got)
+    assert memo.n_session_frames() == frames_before
+
+    memo.release_session_frames()
+
+    def rebuild():
+        raise AssertionError("value was dropped by release")
+
+    assert memo.session_value(_FAKE_SPARK, "sf-race", "value", rebuild) is got[0]
 
 
 def test_retention_applied_handle_pins_staged_root(spark, sf_dir):
@@ -231,7 +291,6 @@ def test_retention_applied_handle_pins_staged_root(spark, sf_dir):
     collects correctly afterwards; dropping the last handle performs the
     deferred delete."""
     import gc
-    import os
 
     from youtube_api_batch_process_with_analytics_spark.sources import (
         partitioned as pt,
@@ -239,19 +298,19 @@ def test_retention_applied_handle_pins_staged_root(spark, sf_dir):
 
     memo.release_session_frames()
     out = pt.retention_applied(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, pt.RETENTION_DAYS)
-    with pt._RETENTION_LOCK:
-        root = pt._RETENTION_CACHE[key]
-        assert pt._RETENTION_IN_USE.get(root) == 1
+    key = (spark.sparkContext.applicationId, sf_dir, "retention_applied")
+    with memo._LOCK:
+        root = memo._STAGED[key]
+        assert memo._IN_USE.get(root) == 1
 
     memo.release_session_frames()  # races the live handle
     assert os.path.isdir(root)  # deferred: handle still live
-    rows = out.collect()  # the scan the old code would have broken
+    rows = out.collect()  # a scan an eager delete would break
     assert len(rows) > 0
 
     del out
     gc.collect()
     assert not os.path.exists(root)  # last handle performed the delete
-    with pt._RETENTION_LOCK:
-        assert root not in pt._RETENTION_IN_USE
-        assert root not in pt._RETENTION_DOOMED
+    with memo._LOCK:
+        assert root not in memo._IN_USE
+        assert root not in memo._DOOMED

@@ -30,35 +30,13 @@ def test_entry_smoke(spark):
     assert len(df.columns) > 0
 
 
-def test_r13_rotation_contract():
-    """Round-13 rotation arithmetic (the two-round coverage contract,
-    with the one declared keeper the round-12 capacity note required):
-    the gate head (first 50 registered queries) is EXACTLY the round-12
-    tail minus the declared keeper log_level_stats — which lands
-    remove_boilerplate_lines' FIRST driver row — and the tail is exactly
-    the round-12 head (the 49 r11-tail queries + ingest_dedup_
-    incremental, all hash-green in CORRECTNESS_r12.json) plus the
-    keeper. head ∪ r12-head therefore covers every registered query
-    except the keeper, whose r11 row + this differential + five
-    same-family head rows carry it for exactly one round."""
+def test_registry_contract():
+    """The registry: 101 queries in registration order with the flagship
+    first, every oracle names a registered query, and the two queries
+    folded into semantic_dedup_gate_combined stay retired."""
     names = list(_QUERIES)
     assert len(names) == 101
-    head = set(names[:50])
-    assert entrymod._R13_KEEPER == "log_level_stats"
-    assert head == set(entrymod._R12_TAIL_NOW_HEAD) - {entrymod._R13_KEEPER}
-    assert "remove_boilerplate_lines" in head
-    assert set(names[50:]) == (
-        set(entrymod._R11_TAIL_NOW_HEAD)
-        | {"ingest_dedup_incremental", entrymod._R13_KEEPER}
-    )
-    # keeper's family stays head-gated five ways
-    for q in (
-        "log_page",
-        "pagination_meta",
-        "top_loggers",
-        "recent_level_stats",
-        "retention_cleanup",
-    ):
-        assert q in head
+    assert names[0] == "channel_video_metrics"
+    assert set(_ORACLES) <= set(names)
     for retired in ("semantic_dedup_fitted", "semantic_dedup_capped"):
         assert retired not in names

@@ -561,11 +561,10 @@ def test_day_partitioned_events_scan_prunes_partitions(spark, sf_dir, tmp_path):
 
 
 def test_retention_applied_gate_reads_post_drop_layout(spark, duck, sf_dir):
-    """The gated retention_applied query (round-9 verdict item 7): its
-    session-staged root has demonstrably FEWER day directories than a
-    fresh layout of the same corpus (the drop really ran), and the
-    post-drop read hash-matches the keep-side oracle on the original
-    table."""
+    """The gated retention_applied query: its session-staged root has
+    demonstrably FEWER day directories than a fresh layout of the same
+    corpus (the drop really ran), and the post-drop read hash-matches the
+    keep-side oracle on the original table."""
     import os
 
     from tests.oracle_utils import assert_oracle_match
@@ -573,17 +572,28 @@ def test_retention_applied_gate_reads_post_drop_layout(spark, duck, sf_dir):
         load_table,
         write_events_day_partitioned,
     )
+    from youtube_api_batch_process_with_analytics_spark.operators.memo import (
+        acquire_staged,
+        release_staged,
+    )
     from youtube_api_batch_process_with_analytics_spark.sources.partitioned import (
         ORACLE_RETENTION_APPLIED,
+        _stage_retention_applied,
         retention_applied,
-        retention_applied_root,
     )
 
     out = retention_applied(spark, sf_dir)
     assert_oracle_match(out, duck, ORACLE_RETENTION_APPLIED)
 
-    root = retention_applied_root(spark, sf_dir)
-    post_days = {d for d in os.listdir(root) if d.startswith("day=")}
+    # the gate's staged root: same key, so acquire returns it unrestaged
+    root = acquire_staged(
+        spark, sf_dir, "retention_applied",
+        lambda p: _stage_retention_applied(spark, sf_dir, p),
+    )
+    try:
+        post_days = {d for d in os.listdir(root) if d.startswith("day=")}
+    finally:
+        release_staged(root)
     import tempfile
 
     fresh = tempfile.mkdtemp(prefix="retention_fresh_")

@@ -268,3 +268,32 @@ def test_engine_reads_only_deployment_env_vars():
     assert not bad, f"non-literal environment access at {bad}"
     assert read <= allowed, sorted(read - allowed)
     assert "SPARK_GRAFT_CPUS" in read  # the scan sees session.py's reads
+
+
+def test_session_state_has_one_owner():
+    """Session state is keyed, raced and released in one module: the only
+    module-level locks in the package are memo's and dedup's per-call CC
+    cache, and the only keys built from the Spark application id are
+    memo's and the two catalog handles (tables, language)."""
+    import ast
+    import pathlib
+
+    import youtube_api_batch_process_with_analytics_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    locks: set[str] = set()
+    app_keys: set[str] = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and getattr(
+                node.func, "attr", getattr(node.func, "id", None)
+            ) in ("Lock", "RLock"):
+                locks.add(rel)
+            elif isinstance(node, ast.Attribute) and node.attr == "applicationId":
+                app_keys.add(rel)
+    assert locks == {"operators/memo.py", "operators/dedup.py"}, sorted(locks)
+    assert app_keys <= {
+        "operators/memo.py", "sources/tables.py", "functions/language.py"
+    }, sorted(app_keys)
+    assert "operators/memo.py" in app_keys

@@ -630,17 +630,23 @@ def test_quota_latch_gate_single_microbatch(spark, sf_dir):
     """The gate wrapper's staged source must feed availableNow as ONE
     micro-batch (coalesced staging write, well under maxFilesPerTrigger):
     batch startup — not state work — would otherwise dominate the
-    wall-clock. Round-9 profile note: with one batch, the remaining cost
-    scales with KEY cardinality (one Python group call + one tiny Arrow
-    batch per key in applyInPandasWithState), which is the price of
-    driving the real streaming engine — the attestation contract."""
+    wall-clock. With one batch, the remaining cost (profiled) scales with
+    KEY cardinality (one Python group call + one tiny Arrow batch per key
+    in applyInPandasWithState), which is the price of driving the real
+    streaming engine — the attestation contract."""
     import uuid
 
+    from youtube_api_batch_process_with_analytics_spark.operators.memo import (
+        acquire_staged,
+        release_staged,
+    )
     from youtube_api_batch_process_with_analytics_spark.sources import load_table
     from youtube_api_batch_process_with_analytics_spark.streaming import state as st
 
     events = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    src = st._latch_src_acquire(spark, sf_dir, events)
+    src = acquire_staged(
+        spark, sf_dir, "latch_src", lambda p: st._stage_latch_source(events, p)
+    )
     name = "latch_bc_" + uuid.uuid4().hex[:6]
     try:
         stream = spark.readStream.schema(events.schema).parquet(src)
@@ -673,24 +679,31 @@ def test_quota_latch_gate_single_microbatch(spark, sf_dir):
         }
         assert got == exp
     finally:
-        st._latch_src_release(src)
+        release_staged(src)
 
 
 def test_latch_gate_sizing_responds_to_data(spark, sf_dir):
-    """The round-10 latch sizing contract: the staged source exists once
+    """The latch sizing contract: the staged source exists once
     per (session, corpus), its state-partition count derives from staged
     bytes with the documented floor, and the gate result is unchanged by
     the sizing (the driver row pins values; this pins the mechanism)."""
     import os
 
+    from youtube_api_batch_process_with_analytics_spark.operators.memo import (
+        acquire_staged,
+        release_staged,
+    )
     from youtube_api_batch_process_with_analytics_spark.sources import load_table
     from youtube_api_batch_process_with_analytics_spark.streaming.state import (
-        _latch_src_acquire,
-        _latch_src_release,
+        _stage_latch_source,
     )
 
     events = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    src = _latch_src_acquire(spark, sf_dir, events)
+
+    def stage(path):
+        _stage_latch_source(events, path)
+
+    src = acquire_staged(spark, sf_dir, "latch_src", stage)
     try:
         staged_bytes = sum(
             os.path.getsize(os.path.join(src, f))
@@ -711,13 +724,13 @@ def test_latch_gate_sizing_responds_to_data(spark, sf_dir):
         assert n_parts >= 8
         assert max(8, min(64, (100 * staged_bytes) // 65_536)) >= n_parts
         # second acquire returns the SAME staged dir (session memo)
-        src2 = _latch_src_acquire(spark, sf_dir, events)
+        src2 = acquire_staged(spark, sf_dir, "latch_src", stage)
         try:
             assert src2 == src
         finally:
-            _latch_src_release(src2)
+            release_staged(src2)
     finally:
-        _latch_src_release(src)
+        release_staged(src)
 
 
 def test_quota_latch_stream_empty_source_completes(spark, tmp_path):

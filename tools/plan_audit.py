@@ -2,9 +2,13 @@
 
 Builds each ``queries()`` entry and counts the plan features that matter
 at 100 TB: shuffles (Exchange), broadcasts, token explodes (Generate),
-global sorts, and Python execution nodes. Emits a markdown table
-(PLANS.md when given ``--write``) so plan regressions show up in review
-diffs, not in production wall-clock.
+global sorts, and Python execution nodes. Emits a markdown table, one row
+per query sorted by name (PLANS.md when given ``--write``), so plan
+regressions show up in review diffs, not in production wall-clock.
+Queries are BUILT in registration order: a persisted session frame prints
+its cached plan, which is the first consumer's, so building in another
+order changes the counts of queries that share one (bigram_lm_quality,
+doc_novelty).
 
 Note on cost: building a query is usually plan-only, but model-fitting
 queries (kmeans_cells, ann_ivf_kmeans, pq_codes, curation_pipeline_v2's
@@ -53,7 +57,7 @@ def audit(sf_dir: str) -> list[tuple[str, dict[str, int]]]:
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         counts = {k: len(re.findall(p, plan)) for k, p in FEATURES.items()}
         rows.append((name, counts))
-    return rows
+    return sorted(rows, key=lambda r: r[0])
 
 
 def render(rows) -> str:

@@ -141,7 +141,7 @@ SELECT a.o_custkey AS channel_id,
        a.total_views,
        CAST(FLOOR(a.total_views / GREATEST(a.video_count, 1)) AS BIGINT) AS avg_views,
        CASE WHEN c.c_acctbal IS NOT NULL AND c.c_acctbal > 0
-            THEN ROUND(a.total_views / c.c_acctbal * 100.0, 4)
+            THEN ROUND(a.total_views / c.c_acctbal * 100.0 * 10000, 0) / 10000
             ELSE 0.0 END AS engagement_rate
 FROM agg a LEFT JOIN customer c ON a.o_custkey = c.c_custkey
 ORDER BY channel_id, window_n, video_type
@@ -290,7 +290,7 @@ def _oracle_final_metrics_struct() -> str:
         "         CAST(FLOOR(a.total_views / GREATEST(a.video_count, 1)) AS BIGINT)\n"
         "           AS avg_views,\n"
         "         CASE WHEN c.c_acctbal IS NOT NULL AND c.c_acctbal > 0\n"
-        "              THEN ROUND(a.total_views / c.c_acctbal * 100.0, 4)\n"
+        "              THEN ROUND(a.total_views / c.c_acctbal * 100.0 * 10000, 0) / 10000\n"
         "              ELSE 0.0 END AS er\n"
         "  FROM agg a LEFT JOIN customer c ON a.o_custkey = c.c_custkey\n"
         ")\n"

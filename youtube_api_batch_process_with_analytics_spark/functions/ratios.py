@@ -33,12 +33,19 @@ def pct_of(count: Column, total: Column, scale: int = 1) -> Column:
 
 
 def safe_rate(numer: Column, denom: Column, scale: int = 4) -> Column:
-    """Engagement-rate shape: ``round(numer / denom * 100, scale)`` with a
-    0.0 guard when the denominator is null/zero/negative.
+    """Engagement-rate shape: ``numer / denom * 100`` rounded half-up to
+    ``scale`` decimals, with a 0.0 guard when the denominator is
+    null/zero/negative.
 
     Mirrors ``youtube_api_handler.py:968-987`` (zero-subscriber guard at
-    970-971, formula + round(...,4) at 986-987).
+    970-971, formula + round(...,4) at 986-987). The rounding is written
+    out as ``round(x * 10^scale, 0) / 10^scale`` so the SQL twin rounds
+    the same double: Spark's ``round(x, scale)`` rounds the shortest
+    decimal of ``x`` while DuckDB's scales first, and the two differ when
+    ``x`` sits one ulp below a half (70340.93 / 1760 * 100 gives
+    3996.6437 against 3996.6438).
     """
+    p = 10**scale
     return F.when(
-        denom.isNotNull() & (denom > 0), F.round(numer / denom * 100.0, scale)
+        denom.isNotNull() & (denom > 0), F.round(numer / denom * 100.0 * p, 0) / p
     ).otherwise(F.lit(0.0))

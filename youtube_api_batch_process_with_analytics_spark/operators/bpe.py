@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table, spread
+from .memo import session_value
 from .ranking import TOKEN_SPLIT_RE, _tokens
 
 BPE_MERGES = 6
@@ -123,28 +124,17 @@ def _train_rounds(syms: DataFrame, n_merges: int) -> list[Row]:
     return merges
 
 
-_BPE_MODEL_CACHE: dict[tuple, list[Row]] = {}
-_BPE_CACHE_LOCK = __import__("threading").Lock()
-
-
 def _fitted_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> list[Row]:
-    """Session-memoized merge list (the k-means fitted-model contract):
-    the merges ARE the model — rounds × 1 row — so refitting for every
-    consumer (bpe_merges, bpe_fertility) would redo n_merges corpus-side
-    jobs for an identical deterministic result."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    with _BPE_CACHE_LOCK:
-        hit = _BPE_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    merges = bpe_train(
-        spread(load_table(spark, sf_dir, "documents")), n_merges
+    """The merge list as a session value: the merges ARE the model —
+    rounds × 1 row — so refitting for every consumer (bpe_merges,
+    bpe_fertility) would redo n_merges corpus-side jobs for an identical
+    deterministic result."""
+    return session_value(
+        spark, sf_dir, f"bpe_merges_{n_merges}",
+        lambda: bpe_train(spread(load_table(spark, sf_dir, "documents")), n_merges),
     )
-    with _BPE_CACHE_LOCK:
-        _BPE_MODEL_CACHE[key] = merges
-    return merges
 
 
 def bpe_merges_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table, spread
-from .memo import track_persisted
+from .memo import session_value, track_persisted
 from .similarity import _DUCK_EMB_NONZERO as _EMB_VALID
 
 
@@ -371,15 +371,6 @@ def _assign_codes(
     return out
 
 
-# Memoized Lloyd "models": the centroid matrices are deterministic given
-# (data, k, n_iter), so repeat invocations inside one session — the bench
-# runs every query twice; ann_ivf_kmeans composes on kmeans_cells — reuse
-# the fitted centroids instead of re-running n_iter+1 driver-synchronized
-# jobs. The same contract as holding a fitted Spark ML KMeansModel.
-_KMEANS_MODEL_CACHE: dict[tuple, tuple] = {}
-_KMEANS_CACHE_LOCK = __import__("threading").Lock()
-
-
 def _gate_kmeans(
     spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
     n_iter: int = KMEANS_GATE_ITERS,
@@ -387,33 +378,40 @@ def _gate_kmeans(
     """Run the integer-exact Lloyd rounds; return (embeddings frame with a
     final map-only ``cluster`` column, final-assignment centroids).
 
+    The fitted centroids are a session value: they are deterministic
+    given (data, k, n_iter), so repeat invocations (ann_ivf_kmeans
+    composes on kmeans_cells) reuse them instead of re-running n_iter+1
+    driver-synchronized jobs — the same contract as holding a fitted
+    Spark ML KMeansModel.
+
     During fitting the quantized frame persists across the rounds: every
     iteration's centroid collect re-reads it, and without the cache each
     of the n_iter+1 jobs would redo the scan + spread shuffle +
     quantization. It is unpersisted before returning — the final frame
     re-derives the cluster column from the (cheap) scan, keeping no
     storage pinned."""
-    key = (spark.sparkContext.applicationId, sf_dir, k, n_iter)
-    with _KMEANS_CACHE_LOCK:
-        hit = _KMEANS_MODEL_CACHE.get(key)
     emb = _quantized(spark, sf_dir)
     n = _n_valid(spark, sf_dir)
-    if hit is not None:
-        cents, final_cents, x_bound = hit
-        return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
-    cached = emb.persist()
-    try:
-        assigned = cached.withColumn(
-            "cluster", (F.col("vec_id") % k).cast("int")
-        )
-        for _ in range(n_iter):
-            cents, x_bound = _int_centroids(assigned)
-            assigned = _assign_codes(cached, [("cluster", None, cents)], n, x_bound)
-        final_cents, _ = _int_centroids(assigned)
-    finally:
-        cached.unpersist()
-    with _KMEANS_CACHE_LOCK:
-        _KMEANS_MODEL_CACHE[key] = (cents, final_cents, x_bound)
+
+    def fit():
+        cached = emb.persist()
+        try:
+            assigned = cached.withColumn(
+                "cluster", (F.col("vec_id") % k).cast("int")
+            )
+            for _ in range(n_iter):
+                cents, x_bound = _int_centroids(assigned)
+                assigned = _assign_codes(
+                    cached, [("cluster", None, cents)], n, x_bound
+                )
+            final_cents, _ = _int_centroids(assigned)
+        finally:
+            cached.unpersist()
+        return cents, final_cents, x_bound
+
+    cents, final_cents, x_bound = session_value(
+        spark, sf_dir, f"kmeans_k{k}_i{n_iter}", fit
+    )
     return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
 
 
@@ -635,23 +633,23 @@ PQ_K = 8  # codes per subspace
 PQ_ITERS = 2
 PQ_DIM = 64  # embeddings fixture dimension; subspace width = PQ_DIM // PQ_M
 
-# (books, x_bound) per fit, the _KMEANS_MODEL_CACHE contract: each book is
-# (code field, subspace slice, codebook) — the router's input as-is — and
-# x_bound is the corpus max|x| the GEMM envelope check needs.
-_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
-
 
 def _pq_fit(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[str, slice, dict[int, tuple[list[int], int]]]], int]:
     """Per-subspace exact-rational codebooks as ``(code_m, slice, book)``
-    triples plus the corpus component bound, memoized per session (the
-    fitted-model contract, as for the k-means cache)."""
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
-    with _KMEANS_CACHE_LOCK:
-        hit = _PQ_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
+    triples — the router's input as-is — plus the corpus component bound
+    the GEMM envelope check needs; a session value, like the k-means
+    centroids."""
+    return session_value(
+        spark, sf_dir, f"pq_m{PQ_M}_k{PQ_K}_i{PQ_ITERS}",
+        lambda: _pq_train(spark, sf_dir),
+    )
+
+
+def _pq_train(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[str, slice, dict[int, tuple[list[int], int]]]], int]:
     width = PQ_DIM // PQ_M
     # All M subspaces fit in lock-step: every Lloyd iteration is ONE
     # shuffle job keyed on (m, cluster, pos) instead of M sequential
@@ -733,8 +731,6 @@ def _pq_fit(
         (f"code_{m}", slice(m * width, (m + 1) * width), bk)
         for m, bk in enumerate(books)
     ]
-    with _KMEANS_CACHE_LOCK:
-        _PQ_MODEL_CACHE[key] = (model, x_bound)
     return model, x_bound
 
 
@@ -1455,24 +1451,12 @@ def _semdedup_pair_kernel(
     return df.groupBy("cluster", "sub").applyInPandas(find_dups, schema)
 
 
-# (applicationId, sf_dir) -> count of valid (nonzero, well-formed)
-# embeddings — the base set of every clustering operator. A driver-side
-# VALUE cache (one BIGINT), same survival contract as the fitted model
-# caches: release_session_frames() pins no executor storage here.
-_N_VALID_CACHE: dict[tuple, int] = {}
-_N_VALID_LOCK = __import__("threading").Lock()
-
-
 def _n_valid(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _N_VALID_LOCK:
-        hit = _N_VALID_CACHE.get(key)
-    if hit is not None:
-        return hit
-    n = _quantized(spark, sf_dir).count()
-    with _N_VALID_LOCK:
-        _N_VALID_CACHE[key] = n
-    return n
+    """Count of valid (nonzero, well-formed) embeddings — the base set of
+    every clustering operator; a session value (one BIGINT)."""
+    return session_value(
+        spark, sf_dir, "n_valid", lambda: _quantized(spark, sf_dir).count()
+    )
 
 
 def fitted_semdedup_k(

@@ -1,51 +1,56 @@
-"""Session-scoped materialization registry — the shared owner for every
-fitted-model artifact and declared corpus intermediate.
+"""Session state: the one owner of everything fitted or staged per corpus.
 
-Several operators materialize an intermediate frame that (a) feeds
-multiple plan branches of one query (a broadcast-of-aggregate subtree
-would otherwise re-execute the shared pipeline per branch) and/or
-(b) is bit-identical across every query in a session (the tokenized
-corpus scan, the term-frequency table, the bigram-LM score column).
-The production analog is a prepared serving system: the index/model is
-built once per corpus version and every query executes against it. The
-per-module caches that grew organically (``_LM_STATS_CACHE``,
-``_BPE_MODEL_CACHE``, ``_KMEANS_MODEL_CACHE``) follow that contract but
-each invented its own storage-release story; this module centralizes the
-frame-shaped ones so there is ONE registry, keyed on
-``(applicationId, sf_dir, tag)``, and ONE release path.
+A prepared serving system builds each index or model once per corpus
+version and runs every query against it. This module is where that
+policy lives: every entry is keyed on ``(applicationId, sf_dir, tag)``,
+built OUTSIDE the lock (builds run Spark jobs), and the first writer wins
+a concurrent race — a loser's build is discarded before anything uses it.
+There are three kinds of entry, each with its own lifetime:
 
-Storage discipline (the round-6 verdict's "persisted frames are never
-unpersisted" finding):
+* **Frames** — ``session_frame(spark, sf_dir, tag, build, persist)``:
+  executor-side intermediates shared by several queries or plan branches
+  (the tokenized corpus scan, tf/df tables, the bigram-LM occurrence and
+  count tables, the per-document score table). ``track_persisted(df)``
+  adds a per-invocation ``.persist()`` frame that is not memoized
+  (Spark's CacheManager already dedups plan-identical persists) so it
+  still has an unpersist path. Released by ``release_session_frames()``:
 
-* ``session_frame(..., persist=False)`` materializes via
-  ``localCheckpoint(eager=False)`` — lineage truncated, a single
-  materialization guaranteed regardless of CacheManager plan-matching.
-  A local checkpoint cannot be re-executed once its blocks are dropped,
-  so release NEVER unpersists these explicitly: it drops the registry
-  reference (after clearing every registered dependent cache, e.g. the
-  entry-point plan cache, so no live plan still embeds the frame) and
-  lets the ContextCleaner reclaim the blocks when the JVM-side RDD
-  becomes unreachable.
-* ``session_frame(..., persist=True)`` uses ``.persist()`` (lineage
-  intact, recompute always possible) and release unpersists explicitly.
-* ``track_persisted(df)`` registers a per-invocation ``.persist()``
-  frame that is NOT memoized (Spark's CacheManager already dedups
-  plan-identical persists, so repeated invocations share one
-  InMemoryRelation); tracking gives long-lived sessions an explicit
-  unpersist path instead of an ever-pinned cache entry.
+  - ``persist=False`` materializes via ``localCheckpoint(eager=False)``
+    (lineage truncated, one materialization guaranteed). A local
+    checkpoint cannot be recomputed once its blocks are dropped, so
+    release never unpersists it: it clears every dependent cache first
+    (e.g. the entry-point plan cache, so no live plan still embeds the
+    frame), drops the reference, and lets the ContextCleaner reclaim the
+    blocks.
+  - ``persist=True`` uses ``.persist()`` (lineage intact) and release
+    unpersists it explicitly.
+
+* **Values** — ``session_value(spark, sf_dir, tag, build)``: driver-side
+  fitted models (Lloyd centroids, PQ codebooks, the BPE merge table, the
+  valid-embedding count). They pin no executor storage, so they live as
+  long as the Spark application: release does not drop them and
+  ``n_session_frames()`` does not count them.
+
+* **Staged dirs** — ``acquire_staged(spark, sf_dir, tag, stage)`` /
+  ``release_staged(path)``: a local directory that ``stage(path)`` writes
+  once per key (the streaming gates' parquet sources, the post-retention
+  day layout), with an in-use count per acquire. Release unlinks every
+  staged dir from the registry and deletes the idle ones at once; a dir
+  still in use is marked doomed and deleted by its last reader's
+  ``release_staged``, so a release never removes a source under a
+  running query.
 
 ``release_session_frames()`` is called by ``bench.py`` between queries
-(so every query's first rep pays its own fit — per-query timings stay
-independent of suite order) and is exposed for long-lived sessions that
-switch corpora. Model caches holding driver-side VALUES (k×d centroid
-lists, BPE merge tables) pin no executor storage and are deliberately
-not released here.
+(so each query's first rep pays its own frame fits) and by long-lived
+sessions that switch corpora.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import threading
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,10 +61,21 @@ _FRAMES: dict[tuple, tuple[DataFrame, bool]] = {}
 # frame, semantic_dedup's assignment frame). Unpersist is idempotent, so
 # duplicate handles onto one InMemoryRelation are harmless.
 _TRACKED: list[DataFrame] = []
-# Dependent-cache releasers (LM stats, CC caches, the entry-point plan
+# (applicationId, sf_dir, tag) -> driver-side fitted value
+_VALUES: dict[tuple, Any] = {}
+# (applicationId, sf_dir, tag) -> staged dir; active readers per dir; dirs
+# released while in use (deleted by their last reader)
+_STAGED: dict[tuple, str] = {}
+_IN_USE: dict[str, int] = {}
+_DOOMED: set[str] = set()
+# Dependent-cache releasers (dedup's CC caches, the entry-point plan
 # cache). Run FIRST on release so nothing still references a
 # checkpointed frame whose registry entry is about to drop.
 _RELEASERS: list[Callable[[], None]] = []
+
+
+def _key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
+    return (spark.sparkContext.applicationId, sf_dir, tag)
 
 
 def session_frame(
@@ -71,15 +87,13 @@ def session_frame(
 ) -> DataFrame:
     """Return the session-memoized materialization of ``build()``.
 
-    First caller per ``(applicationId, sf_dir, tag)`` builds and
-    materializes (lazily — the first ACTION on the frame pays the
-    compute); later callers get the same DataFrame object, so their
-    plans reuse the already-materialized blocks. Concurrent first
-    callers race benignly: one wins the registry, the loser's frame is
-    discarded (and unpersisted, when persist=True) before anything
-    executes it.
+    First caller per key builds and materializes (lazily — the first
+    ACTION on the frame pays the compute); later callers get the same
+    DataFrame object, so their plans reuse the materialized blocks. A
+    racing loser's frame is discarded (and unpersisted, when
+    persist=True) before anything executes it.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
+    key = _key(spark, sf_dir, tag)
     with _LOCK:
         hit = _FRAMES.get(key)
     if hit is not None:
@@ -87,15 +101,67 @@ def session_frame(
     df = build()
     df = df.persist() if persist else df.localCheckpoint(eager=False)
     with _LOCK:
-        racer = _FRAMES.get(key)
-        if racer is not None:
-            winner = racer[0]
-        else:
-            _FRAMES[key] = (df, persist)
-            winner = df
+        winner = _FRAMES.setdefault(key, (df, persist))[0]
     if winner is not df and persist:
         df.unpersist()
     return winner
+
+
+def session_value(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], Any]
+) -> Any:
+    """Return the session's fitted value for the key, running ``build()``
+    on the first call. Concurrent first callers each build; every one of
+    them gets the first writer's value."""
+    key = _key(spark, sf_dir, tag)
+    with _LOCK:
+        if key in _VALUES:
+            return _VALUES[key]
+    value = build()
+    with _LOCK:
+        return _VALUES.setdefault(key, value)
+
+
+def acquire_staged(
+    spark: SparkSession, sf_dir: str, tag: str, stage: Callable[[str], None]
+) -> str:
+    """Return the key's staged dir, running ``stage(path)`` into a fresh
+    temp dir on first use, and count one reader until ``release_staged``.
+    The count is taken under the same lock hold that finds the dir
+    registered, so a release can never slip between lookup and count."""
+    key = _key(spark, sf_dir, tag)
+    with _LOCK:
+        path = _STAGED.get(key)
+        if path is not None:
+            _IN_USE[path] = _IN_USE.get(path, 0) + 1
+            return path
+    staged = tempfile.mkdtemp(prefix=f"{tag}_")
+    try:
+        stage(staged)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)  # no orphaned half-write
+        raise
+    with _LOCK:
+        path = _STAGED.setdefault(key, staged)
+        _IN_USE[path] = _IN_USE.get(path, 0) + 1
+    if path != staged:
+        shutil.rmtree(staged, ignore_errors=True)
+    return path
+
+
+def release_staged(path: str) -> None:
+    """Drop one reader of ``path``; the last reader of a dir released
+    while in use deletes it."""
+    with _LOCK:
+        n = _IN_USE.get(path, 0) - 1
+        if n > 0:
+            _IN_USE[path] = n
+            return
+        _IN_USE.pop(path, None)
+        doomed = path in _DOOMED
+        _DOOMED.discard(path)
+    if doomed:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def track_persisted(df: DataFrame) -> DataFrame:
@@ -113,12 +179,8 @@ def register_releaser(fn: Callable[[], None]) -> None:
 
 
 def release_session_frames() -> None:
-    """Drop every memoized/tracked frame and clear dependent caches.
-
-    Persisted frames are unpersisted explicitly (blocking=False);
-    checkpointed frames are released by reference-drop only — see the
-    module docstring for why a localCheckpoint must never be force-
-    unpersisted while a plan could still reference it.
+    """Drop every memoized/tracked frame, clear dependent caches, and
+    unlink every staged dir (deleting the idle ones). Values stay.
 
     CONTRACT: release INVALIDATES every DataFrame previously returned by
     a query builder that embeds a checkpointed session frame (directly
@@ -128,8 +190,7 @@ def release_session_frames() -> None:
     block-not-found error — a localCheckpoint has no lineage to recompute
     from. Callers that hold query DataFrames across a release must
     re-request them from ``queries()`` (construction is cheap; data is
-    refit on first action). This is the same lifecycle as any prepared-
-    statement handle outliving its session.
+    refit on first action).
     """
     with _LOCK:
         releasers = list(_RELEASERS)
@@ -140,17 +201,20 @@ def release_session_frames() -> None:
         _FRAMES.clear()
         tracked = list(_TRACKED)
         _TRACKED.clear()
+        idle = []
+        for path in _STAGED.values():
+            if _IN_USE.get(path):
+                _DOOMED.add(path)
+            else:
+                idle.append(path)
+        _STAGED.clear()
+    for path in idle:
+        shutil.rmtree(path, ignore_errors=True)
     # Best-effort: a frame registered under a previous, now-stopped
     # SparkSession raises through py4j on unpersist — skip it (its JVM
     # is gone, so its storage is too) rather than abandoning the
     # remaining live frames mid-loop.
-    for df, was_persist in frames:
-        if was_persist:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    for df in tracked:
+    for df in [df for df, was_persist in frames if was_persist] + tracked:
         try:
             df.unpersist()
         except Exception:
@@ -158,6 +222,6 @@ def release_session_frames() -> None:
 
 
 def n_session_frames() -> int:
-    """Registry size (memoized + tracked) — test observability."""
+    """Registry size (memoized + tracked frames) — test observability."""
     with _LOCK:
         return len(_FRAMES) + len(_TRACKED)

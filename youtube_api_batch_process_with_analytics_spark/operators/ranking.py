@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table, spread
-from .memo import register_releaser, session_frame
+from .memo import session_frame
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 TOP_TERMS_PER_DOC = 5
@@ -340,77 +340,38 @@ def _occ_frame(toked_in: DataFrame) -> DataFrame:
     ).withColumn("w1", F.substring_index(F.col("bigram"), " ", 1))
 
 
-# Session-memoized corpus LM statistics — the fitted "model" of the bigram
-# LM (the same contract as _BPE_MODEL_CACHE / _KMEANS_MODEL_CACHE, keyed
-# on (applicationId, sf_dir)). bigram_lm_quality, perplexity_buckets and
-# curation_pipeline_v2 all score against statistics fitted on the FULL
-# corpus with the same tokenizer, so refitting per consumer redoes the
-# corpus bigram shuffle for bit-identical results. Unlike BPE/k-means the
-# model here is vocabulary-sized, not driver-sized, so it stays
-# distributed: cb/cu are persisted DataFrames (MEMORY_AND_DISK — spills,
-# never OOMs). The checkpointed occurrence table is cached alongside the
-# stats (round-7: previously a cache hit re-ran the corpus
-# scan→tokenize→explode per consumer; the occurrences are as much a
-# fitted artifact as the counts derived from them). Released via
-# release_lm_caches(), which memo.release_session_frames() also runs.
-_LM_STATS_CACHE: dict[tuple, tuple] = {}
-_LM_CACHE_LOCK = __import__("threading").Lock()
-
-
 def _corpus_lm_stats(
-    spark: SparkSession, sf_dir: str, occ: DataFrame
+    spark: SparkSession, sf_dir: str, occ_plan: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Returns (occ, cb, cu, vocab), all session-memoized. On the fit
-    path ``occ`` comes back lazily checkpointed so the caller's
-    probability join reuses the same materialized explode the stats were
-    fitted from; on a cache hit the caller's freshly-built occ plan is
-    discarded in favor of the cached materialization (identical rows —
-    every consumer tokenizes the same corpus with the same tokenizer)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _LM_CACHE_LOCK:
-        hit = _LM_STATS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # fit path: the occurrence explode feeds both the stats and (in the
-    # caller) the probability join — materialize it once, lazily
-    occ = occ.localCheckpoint(eager=False)
-    cb = occ.groupBy("bigram").agg(F.count("*").alias("cb")).persist()
+    """The bigram LM's fitted statistics as session frames:
+    (occ, cb, cu, vocab). bigram_lm_quality, perplexity_buckets and
+    curation_pipeline_v2 all score against statistics fitted on the FULL
+    corpus with the same tokenizer, so refitting per consumer would redo
+    the corpus bigram shuffle for bit-identical results.
+
+    The occurrence explode feeds both the stats and (in the caller) the
+    probability join, so it is checkpointed once; later callers'
+    ``occ_plan``s are discarded in favor of it (identical rows). The
+    counts are vocabulary-sized, not driver-sized, so they stay
+    distributed: cb/cu are persisted (MEMORY_AND_DISK — spills, never
+    OOMs) and vocab is derived from cu."""
+    occ = session_frame(spark, sf_dir, "lm_occ", lambda: occ_plan)
+    cb = session_frame(
+        spark, sf_dir, "lm_cb",
+        lambda: occ.groupBy("bigram").agg(F.count("*").alias("cb")),
+        persist=True,
+    )
     # left-word counts roll up FROM the bigram stats (vocabulary-sized
     # input), not from the corpus-sized occurrence table again:
     # c(w1·) = Σ c(w1,w2) — one fewer corpus shuffle, identical values
-    cu = (
-        cb.withColumn("w1", F.substring_index(F.col("bigram"), " ", 1))
+    cu = session_frame(
+        spark, sf_dir, "lm_cu",
+        lambda: cb.withColumn("w1", F.substring_index(F.col("bigram"), " ", 1))
         .groupBy("w1")
-        .agg(F.sum("cb").alias("cu"))
-        .persist()
+        .agg(F.sum("cb").alias("cu")),
+        persist=True,
     )
-    vocab = cu.agg(F.count("*").alias("v"))
-    with _LM_CACHE_LOCK:
-        racer = _LM_STATS_CACHE.get(key)
-        if racer is None:
-            _LM_STATS_CACHE[key] = (occ, cb, cu, vocab)
-    if racer is not None:
-        cb.unpersist()
-        cu.unpersist()
-        return racer
-    return occ, cb, cu, vocab
-
-
-def release_lm_caches() -> None:
-    """Unpersist every memoized LM-stats frame (test/bench hygiene).
-
-    The checkpointed occ frame is released by reference-drop only (a
-    localCheckpoint cannot be recomputed once its blocks are gone — see
-    memo.py); cb/cu keep their lineage and are unpersisted explicitly."""
-    with _LM_CACHE_LOCK:
-        entries = list(_LM_STATS_CACHE.values())
-        _LM_STATS_CACHE.clear()
-    for _occ, cb, cu, _vocab in entries:
-        cb.unpersist()
-        cu.unpersist()
-
-
-register_releaser(release_lm_caches)
+    return occ, cb, cu, cu.agg(F.count("*").alias("v"))
 
 
 def _bigram_lm_scores(

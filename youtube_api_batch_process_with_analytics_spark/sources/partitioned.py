@@ -33,7 +33,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.memo import register_releaser
+from ..operators.memo import acquire_staged, release_staged
 
 
 def write_events_day_partitioned(events: DataFrame, out_dir: str) -> None:
@@ -156,115 +156,25 @@ def retention_drop_days(
     }
 
 
-# (applicationId, sf_dir, days) -> staged day-partitioned layout with the
-# retention pass ALREADY APPLIED. Staging + the drop pass run once per
-# session/corpus (harness plumbing, the latch-staging contract — a
-# production table already lives in this layout and the pass runs on a
-# schedule, not per query); the releaser deletes the staged dirs so a
-# long-lived session holds at most one post-retention copy per corpus.
-# Deletion is refcounted with the SAME acquire/release discipline as the
-# latch source (streaming/state.py): a root with active readers is only
-# UNLINKED from the cache at release time (marked doomed) and physically
-# deleted by the last reader's exit, so a release racing an executing
-# retention_applied scan can never rmtree the directory under the job.
-_RETENTION_LOCK = __import__("threading").Lock()
-_RETENTION_CACHE: dict[tuple, str] = {}
-_RETENTION_IN_USE: dict[str, int] = {}  # staged root -> active scans
-_RETENTION_DOOMED: set[str] = set()  # released while in use; delete on last exit
-
 RETENTION_DAYS = 7  # config parity with the gated retention_cleanup
 
 
-def _release_retention_roots() -> None:
-    import shutil
-
-    with _RETENTION_LOCK:
-        paths = list(_RETENTION_CACHE.values())
-        _RETENTION_CACHE.clear()
-        to_delete = []
-        for p in paths:
-            if _RETENTION_IN_USE.get(p):
-                _RETENTION_DOOMED.add(p)
-            else:
-                to_delete.append(p)
-    for p in to_delete:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _retention_root_release(root: str) -> None:
-    import shutil
-
-    with _RETENTION_LOCK:
-        n = _RETENTION_IN_USE.get(root, 0) - 1
-        if n > 0:
-            _RETENTION_IN_USE[root] = n
-            return
-        _RETENTION_IN_USE.pop(root, None)
-        doomed = root in _RETENTION_DOOMED
-        _RETENTION_DOOMED.discard(root)
-    if doomed:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-register_releaser(_release_retention_roots)
-
-
-def retention_applied_root(
-    spark: SparkSession, sf_dir: str, days: int = RETENTION_DAYS
-) -> str:
-    """The day-partitioned events layout for ``sf_dir`` AFTER
-    ``retention_drop_days`` — staged and retired once per (session,
-    corpus, days)."""
-    import shutil
-    import tempfile
-
+def _stage_retention_applied(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Write the day-partitioned events layout for ``sf_dir`` to ``path``
+    and run ``retention_drop_days`` on it. Staged once per (session,
+    corpus) — harness plumbing: a production table already lives in this
+    layout and the pass runs on a schedule, not per query."""
     from . import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, days)
-    with _RETENTION_LOCK:
-        hit = _RETENTION_CACHE.get(key)
-    if hit is not None:
-        return hit
-    staged = tempfile.mkdtemp(prefix="retention_applied_")
-    try:
-        events = load_table(spark, sf_dir, "events")
-        write_events_day_partitioned(events, staged)
-        retention_drop_days(spark, staged, days=days)
-    except BaseException:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    with _RETENTION_LOCK:
-        root = _RETENTION_CACHE.setdefault(key, staged)
-    if root is not staged:  # benign first-caller race: loser cleans up
-        shutil.rmtree(staged, ignore_errors=True)
-    return root
-
-
-def _retention_root_acquire(spark: SparkSession, sf_dir: str, days: int) -> str:
-    """``retention_applied_root`` plus an in-use count held until
-    ``_retention_root_release`` — the bracket that makes a concurrent
-    release defer the rmtree to this reader's exit. The increment happens
-    under the SAME lock acquisition that confirms the root is still
-    cached (latch discipline), so a release can never slip between the
-    lookup and the count."""
-    key = (spark.sparkContext.applicationId, sf_dir, days)
-    while True:
-        with _RETENTION_LOCK:
-            root = _RETENTION_CACHE.get(key)
-            if root is not None:
-                _RETENTION_IN_USE[root] = _RETENTION_IN_USE.get(root, 0) + 1
-                return root
-        # not staged (or released since): stage outside the lock, then
-        # retry the lookup-and-count — retention_applied_root dedups the
-        # benign first-caller race internally
-        retention_applied_root(spark, sf_dir, days)
+    write_events_day_partitioned(load_table(spark, sf_dir, "events"), path)
+    retention_drop_days(spark, path, days=RETENTION_DAYS)
 
 
 def retention_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated capstone for the S8 retention path (round-9 verdict item 7):
-    read the events table AFTER the real partition-drop pass
-    (``retention_drop_days`` — whole expired days removed as directories,
-    the boundary day rewritten, newer days untouched) and report the
+    """Gated capstone for the S8 retention path: read the events table
+    AFTER the real partition-drop pass (``retention_drop_days`` — whole
+    expired days removed as directories, the boundary day rewritten,
+    newer days untouched) and report the
     surviving per-level counts. The DuckDB oracle computes the keep side
     on the ORIGINAL table, so the driver row attests that the MUTATING
     pass preserves exactly the keep-side contract of the gated
@@ -278,12 +188,12 @@ def retention_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
     executing the RETURNED frame necessarily holds a Python reference to
     it, so the finalizer-driven release — and hence a doomed root's
     deferred rmtree — cannot run while such a scan is in flight. A
-    ``release_session_frames()`` racing an executing scan now only marks
-    the root doomed; the last live handle's collection deletes it.
+    ``release_session_frames()`` racing an executing scan only marks the
+    root doomed; the last live handle's collection deletes it.
 
-    Caveat (round-11 advice): the pin rides THIS object, not the plan.
-    A caller that derives a frame (``retention_applied(...).filter(...)``)
-    and drops the original handle loses the pin — the finalizer fires on
+    Caveat: the pin rides THIS object, not the plan. A caller that
+    derives a frame (``retention_applied(...).filter(...)``) and drops the
+    original handle loses the pin — the finalizer fires on
     CPython GC of the returned object, and a subsequent release deletes
     the root out from under the still-executable derived plan. Callers
     must keep the returned handle alive for as long as any derived frame
@@ -292,7 +202,10 @@ def retention_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalize on CPython; delayed on other runtimes)."""
     import weakref
 
-    root = _retention_root_acquire(spark, sf_dir, RETENTION_DAYS)
+    root = acquire_staged(
+        spark, sf_dir, "retention_applied",
+        lambda path: _stage_retention_applied(spark, sf_dir, path),
+    )
     try:
         post = spark.read.parquet(root)
         out = (
@@ -300,9 +213,9 @@ def retention_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("event_type").alias("level"))
             .agg(F.count("*").alias("kept_count"))
         )
-        weakref.finalize(out, _retention_root_release, root)
+        weakref.finalize(out, release_staged, root)
     except BaseException:
-        _retention_root_release(root)
+        release_staged(root)
         raise
     return out
 

@@ -64,21 +64,26 @@ def ingest_dedup_incremental(spark, sf_dir: str) -> DataFrame:
     The corpus splits deterministically on ``doc_id % INGEST_SHARD_MOD``:
     the ``== 0`` fifth plays the incoming crawl shard, the rest is the
     already-curated history. The shard is staged to parquet once per
-    (session, corpus) via the shared refcounted stager (state.py) — a
+    (session, corpus) through the session memo's staged dirs — a
     production stream reads an existing source; staging is harness
     plumbing, not query cost. The streaming run itself (fresh checkpoint,
     memory sink) stays fully per-invocation.
     """
     import uuid
 
+    from ..operators.memo import acquire_staged, release_staged
     from ..sources import load_table
-    from .state import _latch_src_acquire, _latch_src_release
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     shard = docs.filter(F.col("doc_id") % INGEST_SHARD_MOD == 0)
     history = docs.filter(F.col("doc_id") % INGEST_SHARD_MOD != 0)
     name = "ingest_gate_" + uuid.uuid4().hex[:8]
-    src = _latch_src_acquire(spark, sf_dir, shard, tag="ingest")
+    # coalesce caps the staged file count, as for the latch source: the
+    # stream's map side gets one task per staged file
+    src = acquire_staged(
+        spark, sf_dir, "ingest_src",
+        lambda path: shard.coalesce(16).write.mode("overwrite").parquet(path),
+    )
     try:
         stream = spark.readStream.schema(shard.schema).parquet(src)
         q = (
@@ -93,7 +98,7 @@ def ingest_dedup_incremental(spark, sf_dir: str) -> DataFrame:
         q.awaitTermination(300)
         q.stop()
     finally:
-        _latch_src_release(src)
+        release_staged(src)
     return spark.table(name)
 
 

@@ -28,97 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.memo import register_releaser
-
-# (applicationId, sf_dir) -> staged parquet source dir for the latch gate.
-# All three structures below are guarded by _LATCH_LOCK (the memo-module
-# discipline): a release used to rmtree a staged dir with no
-# coordination, so a concurrent release while another thread's latch
-# query was mid-read would delete the source out from under it. Now a
-# dir with active readers is only UNLINKED from the cache at release
-# time (marked doomed) and physically deleted by the last reader.
-_LATCH_LOCK = __import__("threading").Lock()
-_LATCH_SRC_CACHE: dict[tuple, str] = {}
-_LATCH_IN_USE: dict[str, int] = {}  # staged dir -> active latch runs
-_LATCH_DOOMED: set[str] = set()  # released while in use; delete on last exit
-
-
-def _release_latch_sources() -> None:
-    """Delete the staged source dirs, not just the references — each
-    holds a full coalesced copy of the events table, and a long-lived
-    session alternating releases with the latch query would otherwise
-    accumulate orphaned copies in /tmp. Dirs with an active streaming
-    run are deferred to that run's exit."""
-    import shutil
-
-    with _LATCH_LOCK:
-        paths = list(_LATCH_SRC_CACHE.values())
-        _LATCH_SRC_CACHE.clear()
-        to_delete = []
-        for p in paths:
-            if _LATCH_IN_USE.get(p):
-                _LATCH_DOOMED.add(p)
-            else:
-                to_delete.append(p)
-    for p in to_delete:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _latch_src_acquire(
-    spark, sf_dir: str, events: DataFrame, tag: str = "latch"
-) -> str:
-    """Return the staged source dir for (session, corpus, tag), staging it
-    on first use, with an in-use count held until ``_latch_src_release``.
-    ``tag`` lets other streaming gate queries (ingest.py) share the same
-    stage-once/refcount/doom machinery without a second copy of it."""
-    import shutil
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    with _LATCH_LOCK:
-        src = _LATCH_SRC_CACHE.get(key)
-        if src is not None:
-            _LATCH_IN_USE[src] = _LATCH_IN_USE.get(src, 0) + 1
-            return src
-    staged = tempfile.mkdtemp(prefix=f"{tag}_src_")
-    # Staged file count caps at the upstream scan's split count (coalesce
-    # never shuffles): one file at the small gate tiers, the source's own
-    # split count at sf1+. The cap matters because the streaming batch's
-    # map side gets one task per staged file — 4 files at sf1 serialized
-    # a 1M-row scan onto 4 cores (round-9 verdict: the latch was the
-    # suite's most expensive query; ~40% of addBatch was the starved map
-    # side).
-    try:
-        events.coalesce(16).write.mode("overwrite").parquet(staged)
-    except BaseException:
-        shutil.rmtree(staged, ignore_errors=True)  # no orphaned half-write
-        raise
-    with _LATCH_LOCK:
-        src = _LATCH_SRC_CACHE.get(key)
-        if src is None:
-            _LATCH_SRC_CACHE[key] = src = staged
-        _LATCH_IN_USE[src] = _LATCH_IN_USE.get(src, 0) + 1
-    if src is not staged:  # benign first-caller race: loser cleans up
-        shutil.rmtree(staged, ignore_errors=True)
-    return src
-
-
-def _latch_src_release(src: str) -> None:
-    import shutil
-
-    with _LATCH_LOCK:
-        n = _LATCH_IN_USE.get(src, 0) - 1
-        if n > 0:
-            _LATCH_IN_USE[src] = n
-            return
-        _LATCH_IN_USE.pop(src, None)
-        doomed = src in _LATCH_DOOMED
-        _LATCH_DOOMED.discard(src)
-    if doomed:
-        shutil.rmtree(src, ignore_errors=True)
-
-
-register_releaser(_release_latch_sources)
+from ..operators.memo import acquire_staged, release_staged
 
 DAILY_QUOTA = 10_000  # config.py:15
 
@@ -357,6 +267,16 @@ def rate_limit_pacer_stream(
 LATCH_GATE_QUOTA = 50  # small quota so the sf0.01 fixture hits the latch
 
 
+def _stage_latch_source(events: DataFrame, path: str) -> None:
+    """Write the latch gate's parquet source. Staged file count caps at
+    the upstream scan's split count (coalesce never shuffles): one file at
+    the small gate tiers, the source's own split count at sf1+. The cap
+    matters because the streaming batch's map side gets one task per
+    staged file — 4 files at sf1 serialized a 1M-row scan onto 4 cores,
+    and the starved map side was ~40% of addBatch."""
+    events.coalesce(16).write.mode("overwrite").parquet(path)
+
+
 def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     """Driver-gate wrapper: runs the REAL streaming latch (file source →
     applyInPandasWithState → memory sink, availableNow trigger) and returns
@@ -376,22 +296,22 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     # production stream reads an existing source, it doesn't re-write its
     # own input first. Stage once per (session, corpus); the streaming
     # run itself (fresh checkpoint, state stores, memory sink) stays
-    # fully per-invocation. Cleared by memo.release_session_frames()
-    # (deferred past this run if a release races it — _latch_src_acquire).
+    # fully per-invocation.
     name = "latch_gate_" + uuid.uuid4().hex[:8]
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_arrow = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     # acquire LAST and enter the guarded region immediately: anything
     # thrown between acquire and the finally would leak the in-use
-    # count and pin the staged dir forever (round-8 review finding)
-    src = _latch_src_acquire(spark, sf_dir, events)
+    # count and pin the staged dir forever
+    src = acquire_staged(
+        spark, sf_dir, "latch_src", lambda path: _stage_latch_source(events, path)
+    )
     try:
         stream = spark.readStream.schema(events.schema).parquet(src)
-        # State-partition sizing follows the DATA, not a fixed constant
-        # (round-9 verdict: the pinned 8 was right for the 150-key gate
-        # fixture but serialized 1M sf1 rows onto 8 Python state workers,
-        # 4.95 s — profiled: addBatch was ~95% of wall-clock and scaled
-        # with per-worker row volume). The staged dir is a local tempdir
+        # State-partition sizing follows the DATA, not a fixed constant:
+        # a pinned 8 suits the 150-key gate fixture but serialized 1M sf1
+        # rows onto 8 Python state workers (4.95 s, addBatch ~95% of the
+        # wall-clock, scaling with per-worker row volume). The staged dir is a local tempdir
         # by construction, so its byte size is a free, exact proxy:
         # ~64 KB of staged parquet per state partition, floored at 8
         # (state per key is three scalars — below the floor more workers
@@ -427,7 +347,7 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", prev_arrow
         )
-        _latch_src_release(src)
+        release_staged(src)
     w = "(partition by key_id order by total_requests desc)"
     return (
         spark.sql(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -34,3 +35,24 @@ def duck(sf_dir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     yield con
     con.close()
+
+
+@pytest.fixture
+def jobs_in_group(spark):
+    """``run(fn)`` calls ``fn()`` under a job group of its own and returns
+    ``(result, job ids)`` — the jobs ``fn`` launched on this thread."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"probe_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the listener bus; drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

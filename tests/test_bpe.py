@@ -86,6 +86,19 @@ def test_bpe_greedy_overlap_run(spark):
     assert got[1] == (2, "aa", "aa", "aaaa", 3)
 
 
+def test_bpe_train_jobs_do_not_scale_with_rounds(spark, jobs_in_group):
+    """Training collects the vocabulary once and runs every merge round
+    on the driver: 6 rounds launch exactly the jobs 1 round does."""
+    docs = _docs(
+        spark,
+        [(1, "low low lower newest newest widest"), (2, "newest low widest wider")],
+    )
+    one, jobs_one = jobs_in_group(lambda: bpe_train(docs, n_merges=1))
+    six, jobs_six = jobs_in_group(lambda: bpe_train(docs, n_merges=6))
+    assert len(one) == 1 and len(six) == 6  # no early exhaustion
+    assert jobs_one and len(jobs_six) == len(jobs_one)
+
+
 def test_bpe_exhaustion_engine_oracle_parity(spark):
     """When the vocabulary fully merges before BPE_MERGES rounds, the
     engine stops early and the generated oracle's later rounds must carry

@@ -174,6 +174,39 @@ def test_gate_kmeans_assignment_is_map_only(spark, sf_dir):
     assert "hashpartitioning" not in plan, plan
 
 
+@pytest.mark.parametrize("fit", ["kmeans", "pq"])
+def test_fit_publishes_n_valid_without_a_count(
+    spark, sf_dir, tmp_path, monkeypatch, jobs_in_group, fit
+):
+    """The k-means and PQ fits' first aggregate already counts every
+    valid vector: a cold fit runs no count of its own and publishes that
+    sum, so ``_n_valid`` afterwards launches no job — and it is exact."""
+    import shutil
+
+    from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
+        _gate_kmeans,
+        _n_valid,
+        _pq_fit,
+        _quantized,
+    )
+
+    # a new corpus key: nothing is fitted or counted for it yet
+    shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    fresh = str(tmp_path)
+    counted = []
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame
+    real_count = frame_cls.count
+    with monkeypatch.context() as m:
+        m.setattr(
+            frame_cls, "count", lambda df: counted.append(df) or real_count(df)
+        )
+        (_gate_kmeans if fit == "kmeans" else _pq_fit)(spark, fresh)
+    assert counted == []
+    n, jobs = jobs_in_group(lambda: _n_valid(spark, fresh))
+    assert jobs == []
+    assert n == _quantized(spark, fresh).count() > 0
+
+
 def test_pq_adc_recall_and_code_validity(spark, sf_dir):
     """PQ two-stage sanity: codes are in [0, PQ_K); ADC shortlist=100 +
     exact rerank achieves recall@5 >= 0.5 against exact quantized-L2

@@ -155,26 +155,33 @@ _word = st.text(alphabet="ab", min_size=1, max_size=6)
 @settings(max_examples=4, deadline=None)
 @given(st.lists(st.lists(_word, min_size=1, max_size=8), min_size=1, max_size=3))
 def test_fuzz_bpe_vs_reference(spark, docs):
-    """Random 2-symbol corpora maximize merge collisions and ties; the
-    engine's merge sequence must equal the dict-based reference exactly
-    (tie-break included)."""
+    """Random 2-symbol corpora maximize merge collisions, ties, overlap
+    runs and early exhaustion; the engine's merge sequence must equal the
+    dict-based reference AND the DuckDB oracle's chained-CTE rounds
+    exactly (tie-break included) — the oracle is the reference that does
+    not share the engine's in-process algorithm."""
     from collections import Counter
+
+    import duckdb
 
     from youtube_api_batch_process_with_analytics_spark.operators.bpe import (
         bpe_train,
+        oracle_bpe_merges,
     )
     from tests.test_bpe import _ref_bpe
 
     words = Counter(w for d in docs for w in d)
-    sdf = spark.createDataFrame(
-        [(i + 1, " ".join(d)) for i, d in enumerate(docs)],
-        "doc_id long, text string",
-    )
+    rows = [(i + 1, " ".join(d)) for i, d in enumerate(docs)]
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
     got = [
         (m.merge_round, m.left_sym, m.right_sym, m.merged_sym, m.pair_count)
         for m in bpe_train(sdf, n_merges=4)
     ]
     assert got == _ref_bpe(dict(words), 4)
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        assert got == con.execute(oracle_bpe_merges(4)).fetchall()
 
 
 @settings(max_examples=6, deadline=None)

@@ -11,7 +11,8 @@ order changes the counts of queries that share one (bigram_lm_quality,
 doc_novelty).
 
 Note on cost: building a query is usually plan-only, but model-fitting
-queries (kmeans_cells, ann_ivf_kmeans, pq_codes, curation_pipeline_v2's
+queries (kmeans_cells, ann_ivf_kmeans, pq_codes, the BPE family —
+bpe_merges, bpe_fertility, pack_sequences_bpe — and curation_pipeline_v2's
 LM stats) run their bounded fitting jobs at construction — the audit
 therefore costs a few such jobs at the audit sf_dir, not zero.
 

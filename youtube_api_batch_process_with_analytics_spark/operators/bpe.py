@@ -5,23 +5,18 @@ tokenizer training is the step a 100-TB corpus pipeline runs right before
 chunking/packing (``operators/chunking.py`` consumes its output in real
 life). This is Sennrich et al. 2016 BPE, Spark-first:
 
-- **Pass 1 — word counts.** One shuffle over the corpus (map-side partial
-  aggregation). Everything after runs on the *vocabulary* table — the
-  standard trick that makes BPE trainable at corpus scale: merge rounds
-  never touch the corpus again, only the (word, count) frame, which is
-  millions of rows at worst.
-- **Per merge round**: adjacent symbol pairs weighted by word count (one
-  vocabulary-sized aggregate), argmax with a total-order tie-break
-  (count DESC, then pair lexicographic — deterministic across engines
-  and partitionings, all-integer counts), then greedy left-to-right
-  non-overlapping merge application as a fold over each word's symbol
-  array. The chosen pair is collected to the driver per round — the same
-  bounded-model contract as k-means centroids
-  (``operators/clustering.py``) and Spark ML: rounds × 1 row.
+- **One corpus pass, one vocabulary collect.** ``word_counts`` is one
+  shuffle over the corpus (map-side partial aggregation); its (word,
+  count) rows are collected once, and every merge round then runs on
+  the driver over that vocabulary, as HF tokenizers and SentencePiece
+  train: adjacent pairs weighted by word count, argmax with a
+  total-order tie-break (count DESC, then pair lexicographic — all
+  integer counts), then a greedy left-to-right non-overlapping merge.
 - **Greedy fold equivalence**: appending-or-merging against the
-  accumulator's last element implements the sequential i+=2 scan exactly,
-  because a merged token ``a||b`` is strictly longer than ``a`` and so
-  can never false-match as the left partner within the same pass.
+  accumulator's last element (``_merge``, and ``_apply_merge_expr``,
+  which ``bpe_fertility`` runs in Spark) implements the sequential i+=2
+  scan exactly, because a merged token ``a||b`` is strictly longer than
+  ``a`` and so can never false-match as the left partner in one pass.
 
 The DuckDB oracle replays the identical rounds as generated chained CTEs
 (the ``oracle_kmeans_cells`` pattern): pair stats → LIMIT-1 argmax →
@@ -35,6 +30,8 @@ codes and URLs (``youtube_api_handler.py:353,813-815``).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -74,63 +71,53 @@ def _apply_merge_expr(left: str, right: str) -> str:
 def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> list[Row]:
     """Learn ``n_merges`` BPE merges; returns one Row per round.
 
-    The vocabulary base frame persists across the rounds (same rationale
-    as ``clustering._gate_kmeans``): every round's pair-stat job re-reads
-    it, and without the cache each would redo the corpus scan + word
-    aggregate. Unpersisted before returning — no storage stays pinned.
+    One Spark job chain (``word_counts``) and one collect of the
+    vocabulary, whatever ``n_merges`` is; the rounds then recount pairs
+    over the held vocabulary: O(rounds × Σ word lengths) driver work and
+    O(Σ word lengths) driver memory — the work a per-round Spark
+    aggregate over the vocabulary would do, without a job per round.
     """
-    base = word_counts(docs).select(
-        "word", "wcount", F.split("word", "").alias("syms")
-    ).persist()
-    try:
-        return _train_rounds(base, n_merges)
-    finally:
-        base.unpersist()
-
-
-def _train_rounds(syms: DataFrame, n_merges: int) -> list[Row]:
+    vocab = [(list(r.word), r.wcount) for r in word_counts(docs).collect()]
     merges: list[Row] = []
     for rnd in range(1, n_merges + 1):
-        pairs = (
-            syms.filter(F.size("syms") >= 2)
-            .select(
-                "wcount",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1),"
-                        " i -> struct(syms[i - 1] AS l, syms[i] AS r))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("wcount").alias("cnt"))
-        )
-        best = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
-        if not best:
+        stats: Counter = Counter()
+        for syms, wcount in vocab:
+            for pair in zip(syms, syms[1:]):
+                stats[pair] += wcount
+        if not stats:
             break
-        b = best[0]
+        (left, right), cnt = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append(
             Row(
                 merge_round=rnd,
-                left_sym=b.l,
-                right_sym=b.r,
-                merged_sym=b.l + b.r,
-                pair_count=b.cnt,
+                left_sym=left,
+                right_sym=right,
+                merged_sym=left + right,
+                pair_count=cnt,
             )
         )
-        syms = syms.withColumn(
-            "syms", F.expr(_apply_merge_expr(b.l, b.r))
-        )
+        vocab = [(_merge(syms, left, right), wcount) for syms, wcount in vocab]
     return merges
+
+
+def _merge(syms: list[str], left: str, right: str) -> list[str]:
+    """Greedy left-to-right non-overlapping merge of (left, right)."""
+    out: list[str] = []
+    for s in syms:
+        if out and out[-1] == left and s == right:
+            out[-1] = left + right
+        else:
+            out.append(s)
+    return out
 
 
 def _fitted_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> list[Row]:
     """The merge list as a session value: the merges ARE the model —
-    rounds × 1 row — so refitting for every consumer (bpe_merges,
-    bpe_fertility) would redo n_merges corpus-side jobs for an identical
-    deterministic result."""
+    rounds × 1 row — so consumers (bpe_merges, bpe_fertility,
+    pack_sequences_bpe) share one fit: one word-count job chain and one
+    vocabulary collect per corpus."""
     return session_value(
         spark, sf_dir, f"bpe_merges_{n_merges}",
         lambda: bpe_train(spread(load_table(spark, sf_dir, "documents")), n_merges),

@@ -389,9 +389,13 @@ def _gate_kmeans(
     of the n_iter+1 jobs would redo the scan + spread shuffle +
     quantization. It is unpersisted before returning — the final frame
     re-derives the cluster column from the (cheap) scan, keeping no
-    storage pinned."""
+    storage pinned.
+
+    The valid-vector count the router needs is Σ of a round's
+    per-cluster counts (every round assigns every valid vector to exactly
+    one cluster), so the centroid aggregate gives it — the fit is its
+    n_iter+1 collects, no count job — and publishes it as ``n_valid``."""
     emb = _quantized(spark, sf_dir)
-    n = _n_valid(spark, sf_dir)
 
     def fit():
         cached = emb.persist()
@@ -401,17 +405,19 @@ def _gate_kmeans(
             )
             for _ in range(n_iter):
                 cents, x_bound = _int_centroids(assigned)
+                n = sum(cnt for _, cnt in cents.values())
                 assigned = _assign_codes(
                     cached, [("cluster", None, cents)], n, x_bound
                 )
             final_cents, _ = _int_centroids(assigned)
         finally:
             cached.unpersist()
-        return cents, final_cents, x_bound
+        return cents, final_cents, x_bound, n
 
-    cents, final_cents, x_bound = session_value(
+    cents, final_cents, x_bound, n = session_value(
         spark, sf_dir, f"kmeans_k{k}_i{n_iter}", fit
     )
+    session_value(spark, sf_dir, "n_valid", lambda: n)
     return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
 
 
@@ -727,6 +733,11 @@ def _pq_train(
             )
     finally:
         subs.unpersist()
+    # Every round assigns each valid vector one code per subspace, so
+    # the m = 0 counts sum to n_valid: published here, a cold pq encode
+    # needs no count job of its own.
+    n = sum(cnt for _, cnt in books[0].values())
+    session_value(spark, sf_dir, "n_valid", lambda: n)
     model = [
         (f"code_{m}", slice(m * width, (m + 1) * width), bk)
         for m, bk in enumerate(books)
@@ -1453,7 +1464,9 @@ def _semdedup_pair_kernel(
 
 def _n_valid(spark: SparkSession, sf_dir: str) -> int:
     """Count of valid (nonzero, well-formed) embeddings — the base set of
-    every clustering operator; a session value (one BIGINT)."""
+    every clustering operator; a session value (one BIGINT). The k-means
+    and PQ fits publish it from their first aggregate; this count job
+    only runs for a consumer that comes before any fit."""
     return session_value(
         spark, sf_dir, "n_valid", lambda: _quantized(spark, sf_dir).count()
     )

@@ -6,6 +6,8 @@ float64 in index order, so last-ulp drift is expected and bounded)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -959,3 +961,188 @@ def test_semdedup_round6_cutoff_is_exact():
         for _ in range(20000):
             y = rng.uniform(tau - 1e-5, tau + 1e-5)
             assert (y >= c) == (_spark_round6(y) >= tau), (tau, y)
+
+
+# --- local (driver) Lloyd fit vs the distributed rounds ---------------------
+
+
+def _write_corpus(path, ids, comps):
+    """An embeddings table from integer components: each float32 is
+    ``c / 1000``, so Spark's quantization gives back exactly ``c``; a
+    None component stays a NULL element."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    vecs = [[None if c is None else c / 1000 for c in row] for row in comps]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0] * len(ids), pa.int32()),
+            }
+        ),
+        os.path.join(path, "embeddings.parquet"),
+    )
+    return str(path)
+
+
+def _fits(spark, sf_dir, monkeypatch, cap, k=8):
+    """The fitted k-means value, the PQ model and which route each fit
+    took (True = local), under ``LOCAL_FIT_MAX_ROWS = cap``. Fits are
+    session values, so each call gets an empty value store. Argmin blocks
+    of 7 rows make every local assignment span several blocks."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+    from youtube_api_batch_process_with_analytics_spark.operators import memo
+
+    routes = []
+    real = cl._local_lloyd
+
+    def spy(*args):
+        out = real(*args)
+        routes.append(out is not None)
+        return out
+
+    with monkeypatch.context() as m:
+        m.setattr(cl, "LOCAL_FIT_MAX_ROWS", cap)
+        m.setattr(cl, "ARGMIN_BLOCK_CELLS", 7 * k)
+        m.setattr(cl, "_local_lloyd", spy)
+        m.setattr(memo, "_VALUES", {})
+        cl._gate_kmeans(spark, sf_dir, k=k)
+        cl._pq_fit(spark, sf_dir)
+        values = {
+            tag: value
+            for (_, d, tag), value in memo._VALUES.items()
+            if d == sf_dir
+        }
+    return values, routes
+
+
+def _random_comps(rng, n, lo=-3000, hi=3000):
+    from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
+        PQ_DIM,
+    )
+
+    return rng.integers(lo, hi, size=(n, PQ_DIM)).tolist()
+
+
+@pytest.mark.parametrize("k", [8, 200])
+def test_local_lloyd_fit_equals_distributed_rounds(spark, tmp_path, monkeypatch, k):
+    """The driver-side fit gives exactly the distributed rounds' fitted
+    values — k-means ``(cents, final_cents, x_bound, n)``, the PQ
+    ``(books, x_bound)`` over M slice books, and ``n_valid`` — on seeded
+    random integer corpora with negative vec_ids (Spark's truncated
+    ``vec_id % k`` seeds negative cluster ids), a coarse corpus full of
+    exact distance ties, and a planted tie that empties a cluster."""
+    rng = np.random.default_rng(20261017 + k)
+    n = 3 * k
+    corpora = {
+        "random": (list(range(-n // 2, n - n // 2)), _random_comps(rng, n)),
+        # components in {-1, 0, 1}: many vectors sit at exactly equal
+        # distance from two centroids
+        "coarse": (list(range(n)), _random_comps(rng, n, -1, 2)),
+    }
+    # clusters 0 and 1 seed from identical member sets, so their
+    # centroids coincide, every vector ties between them and goes to 0:
+    # cluster 1 loses every member in round one
+    ids = list(range(n))
+    comps = _random_comps(rng, n)
+    for i in range(0, n - 1, k):
+        comps[i + 1] = list(comps[i])
+    corpora["emptied"] = (ids, comps)
+    for name, (ids, comps) in corpora.items():
+        d = _write_corpus(tmp_path / name, ids, comps)
+        local, routes = _fits(spark, d, monkeypatch, cap=10_000, k=k)
+        assert routes == [True, True], name
+        dist, routes = _fits(spark, d, monkeypatch, cap=0, k=k)
+        assert routes == [False, False], name
+        assert local == dist, name
+        assert local["n_valid"] == n
+        cents, final_cents, _, _ = local[f"kmeans_k{k}_i3"]
+        if name == "random":
+            assert min(cents) < 0  # negative seeds took part
+        if name == "emptied":
+            assert 1 not in cents and 1 not in final_cents and 0 in cents
+
+
+def test_local_lloyd_fall_back_triggers(spark, tmp_path, monkeypatch, jobs_in_group):
+    """Each corpus the local fit cannot reproduce bit for bit — over the
+    row cap, a codebook outside the int64 envelope, a NULL component —
+    takes the distributed rounds, and the fitted values equal the
+    forced-distributed ones. Over either cap (rows, or rows × Σk) the
+    route comes from the parquet footers, so the local path launches no
+    job at all; under both, its one collect is one job."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+
+    PQ_DIM = cl.PQ_DIM
+    rng = np.random.default_rng(7)
+    n = 120
+    ids = list(range(n))
+    comps = _random_comps(rng, n)
+    d = _write_corpus(tmp_path / "cap", ids, comps)
+    at_cap, routes = _fits(spark, d, monkeypatch, cap=n)
+    assert routes == [True, True]
+    over_cap, routes = _fits(spark, d, monkeypatch, cap=n - 1)
+    assert routes == [False, False]
+    assert over_cap == at_cap
+
+    def local(rows, work):
+        with monkeypatch.context() as m:
+            m.setattr(cl, "LOCAL_FIT_MAX_ROWS", rows)
+            m.setattr(cl, "LOCAL_FIT_MAX_WORK", work)
+            return jobs_in_group(lambda: cl._local_lloyd(spark, d, [slice(None)], 8, 4))
+
+    for rows, work in ((n - 1, n * 8), (n, n * 8 - 1)):
+        out, jobs = local(rows, work)
+        assert out is None and jobs == [], (rows, work)
+    out, jobs = local(n, n * 8)
+    assert out is not None and len(jobs) == 1
+
+    # one constant 50000.0 component: x_bound 5·10^7 with ~15 members
+    # per cluster puts w·(n·x_bound + max|s|)² past 2^63 for the whole
+    # vector and for its 16-wide PQ slice, while every exact distance
+    # stays small (the constant cancels)
+    big = [[50_000_000] + row[1:] for row in comps]
+    d = _write_corpus(tmp_path / "envelope", ids, big)
+    routed, routes = _fits(spark, d, monkeypatch, cap=10_000)
+    assert routes == [False, False]
+    forced, _ = _fits(spark, d, monkeypatch, cap=0)
+    assert routed == forced and routed["kmeans_k8_i3"][2] == 50_000_000
+
+    holed = [list(row) for row in comps]
+    holed[3][PQ_DIM // 2] = None
+    d = _write_corpus(tmp_path / "null_component", ids, holed)
+    routed, routes = _fits(spark, d, monkeypatch, cap=10_000)
+    assert routes == [False, False]
+    forced, _ = _fits(spark, d, monkeypatch, cap=0)
+    assert routed == forced and routed["n_valid"] == n
+
+
+def test_cold_fits_jobs_do_not_scale_with_rounds(
+    spark, sf_dir, tmp_path, monkeypatch, jobs_in_group
+):
+    """The local fit collects the corpus once and runs every Lloyd round
+    on the driver: a cold k-means or PQ fit at 5 rounds launches exactly
+    the jobs it launches at 1 (the distributed rounds add 2 per round)."""
+    import shutil
+
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+
+    def cold_dir(name):
+        d = tmp_path / name
+        d.mkdir()
+        shutil.copy(f"{sf_dir}/embeddings.parquet", d / "embeddings.parquet")
+        return str(d)
+
+    jobs = {}
+    for n_iter in (1, 5):
+        _, jobs["kmeans", n_iter] = jobs_in_group(
+            lambda: cl._gate_kmeans(spark, cold_dir(f"km{n_iter}"), n_iter=n_iter)
+        )
+        monkeypatch.setattr(cl, "PQ_ITERS", n_iter)
+        _, jobs["pq", n_iter] = jobs_in_group(
+            lambda: cl._pq_fit(spark, cold_dir(f"pq{n_iter}"))
+        )
+    for fit in ("kmeans", "pq"):
+        assert jobs[fit, 1] and len(jobs[fit, 5]) == len(jobs[fit, 1]), jobs

@@ -17,7 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from youtube_api_batch_process_with_analytics_spark.sources import load_table
+from youtube_api_batch_process_with_analytics_spark.sources import footer_rows, load_table
 
 # One canonical instant: 2024-03-07 08:30:00 UTC.
 _DT = datetime.datetime(2024, 3, 7, 8, 30, 0)
@@ -68,3 +68,42 @@ def test_events_ts_canonicalizes(spark, tmp_path, label, ts_array):
     assert dict(df.dtypes)["ts"] == "timestamp", label
     [row] = df.select("ts").collect()
     assert row.ts == _DT, f"{label}: {row.ts!r} != {_DT!r}"
+
+
+def test_events_load_writes_no_session_conf(spark, tmp_path, monkeypatch):
+    """Queries run concurrently on one shared session, so a cold events
+    load must not write session conf: the nanos-as-long read setting
+    comes from ``get_spark``'s builder, and the loaded parquet
+    TIMESTAMP(NANOS) still canonicalizes."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    sf_dir = _write_events(tmp_path, pa.array([_DT], pa.timestamp("ns")), "cold")
+    writes = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "set",
+        lambda conf, key, value: writes.append(key) or real_set(conf, key, value),
+    )
+    before = spark.conf.getAll
+    [row] = load_table(spark, sf_dir, "events").select("ts").collect()
+    assert spark.conf.getAll == before
+    assert writes == []
+    assert row.ts == _DT
+
+
+def test_footer_rows_reads_files_and_directories(tmp_path):
+    """The job-free row count the Lloyd fits route on: one parquet file,
+    a directory of part files (hidden and ``_`` files skipped, as Spark
+    skips them), and None for a table that is not there."""
+    t = pa.table({"vec_id": pa.array(range(5), pa.int64())})
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    assert footer_rows(str(tmp_path), "embeddings") == 5
+    parts = tmp_path / "dir" / "embeddings.parquet"
+    parts.mkdir(parents=True)
+    for i in range(3):
+        pq.write_table(t, parts / f"part_{i}.parquet")
+    (parts / "_SUCCESS").write_bytes(b"")
+    (parts / ".part_0.parquet.crc").write_bytes(b"x")
+    assert footer_rows(str(tmp_path / "dir"), "embeddings") == 15
+    assert footer_rows(str(tmp_path), "documents") is None

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import load_table, spread
+from ..sources import footer_rows, load_table, spread
 from .memo import session_value, track_persisted
 from .similarity import _DUCK_EMB_NONZERO as _EMB_VALID
 
@@ -158,10 +158,14 @@ IVF_KM_QUERY_STRIDE = 50
 QUERY_ID_CAP = 2_000
 
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _quantized(spark: SparkSession, sf_dir: str, fan_out: bool = True) -> DataFrame:
+    """Valid embeddings with their BIGINT-quantized ``qvec``; ``fan_out``
+    spreads a narrow scan across the cores for the map work that follows
+    (a driver-side collect has none to spread)."""
     from .similarity import valid_embeddings
 
-    return valid_embeddings(spread(load_table(spark, sf_dir, "embeddings"))).select(
+    emb = load_table(spark, sf_dir, "embeddings")
+    return valid_embeddings(spread(emb) if fan_out else emb).select(
         "vec_id",
         "embedding",
         F.transform(
@@ -258,6 +262,49 @@ def _int_assign_expr(
 GEMM_ASSIGN_MIN_WORK = 200_000  # n_rows × Σk over the codebooks
 
 
+def _book_arrays(bk: dict[int, tuple[list[int], int]]) -> tuple:
+    """A codebook as the int64 arrays ``_argmin_codes`` takes."""
+    import numpy as np
+
+    ids = sorted(bk)
+    S = np.array([bk[c][0] for c in ids], dtype=np.int64)  # (k, w)
+    nv = np.array([bk[c][1] for c in ids], dtype=np.int64)  # (k,)
+    return (
+        np.array(ids, dtype=np.int32),
+        S,
+        nv,
+        (S * S).sum(axis=1),  # Σs²
+        (nv * nv).astype(np.float64),  # divisor, exact < 2^53
+        nv * nv,  # int64 n² for the exact integer term
+    )
+
+
+# Rows × k per _argmin_codes block: keeps each (rows, k) int64 term
+# near 32 MB however large the batch or the codebook.
+ARGMIN_BLOCK_CELLS = 1 << 22
+
+
+def _argmin_codes(Xm, arrays: tuple):
+    """Per row of the int64 matrix ``Xm``, the id of the codebook entry
+    with the least ``CAST(Σ(n·x − s)² AS DOUBLE) / n²`` — the integer
+    distance by algebraic expansion, one integer GEMM per row block
+    (exact inside ``_gemm_envelope_ok``), the same double division as the
+    expression path, ties to the lowest id (``argmin`` takes the first
+    minimum over the sorted ids)."""
+    import numpy as np
+
+    ids, S, nv, ss, n2, nn = arrays
+    out = np.empty(len(Xm), dtype=ids.dtype)
+    step = max(1, ARGMIN_BLOCK_CELLS // max(1, len(ids)))
+    for i in range(0, len(Xm), step):
+        B = Xm[i : i + step]
+        xx = (B * B).sum(axis=1)  # (b,) Σx²
+        cross = B @ S.T  # (b, k) Σx·s — integer matmul, exact
+        d_int = nn * xx[:, None] - 2 * nv * cross + ss
+        out[i : i + step] = ids[np.argmin(d_int.astype(np.float64) / n2, axis=1)]
+    return out
+
+
 def _gemm_assign_codes(
     df: DataFrame,
     books: list[tuple[str, slice | None, dict[int, tuple[list[int], int]]]],
@@ -275,23 +322,10 @@ def _gemm_assign_codes(
     import numpy as np
     from pyspark.sql import types as T
 
-    mats = []
-    for field, part, bk in books:
-        ids = sorted(bk)
-        S = np.array([bk[c][0] for c in ids], dtype=np.int64)  # (k, w)
-        nv = np.array([bk[c][1] for c in ids], dtype=np.int64)  # (k,)
-        mats.append(
-            (
-                field,
-                slice(None) if part is None else part,
-                np.array(ids, dtype=np.int32),
-                S,
-                nv,
-                (S * S).sum(axis=1),  # Σs²
-                (nv * nv).astype(np.float64),  # divisor, exact < 2^53
-                nv * nv,  # int64 n² for the exact integer term
-            )
-        )
+    mats = [
+        (field, slice(None) if part is None else part, _book_arrays(bk))
+        for field, part, bk in books
+    ]
     schema = T.StructType(
         df.schema.fields
         + [T.StructField(field, T.IntegerType()) for field, _, _ in books]
@@ -305,13 +339,8 @@ def _gemm_assign_codes(
                 yield pdf
                 continue
             X = np.stack(pdf[col].to_numpy()).astype(np.int64)  # (b, d)
-            for field, part, ids, S, nv, ss, n2, nn in mats:
-                Xm = X[:, part]  # (b, w) view
-                xx = (Xm * Xm).sum(axis=1)  # (b,) Σx²
-                cross = Xm @ S.T  # (b, k) Σx·s — integer matmul, exact
-                d_int = nn * xx[:, None] - 2 * nv * cross + ss
-                dval = d_int.astype(np.float64) / n2
-                pdf[field] = ids[np.argmin(dval, axis=1)]
+            for field, part, arrays in mats:
+                pdf[field] = _argmin_codes(X[:, part], arrays)
             yield pdf
 
     return df.mapInPandas(gen, schema)
@@ -371,6 +400,89 @@ def _assign_codes(
     return out
 
 
+# When the Lloyd fits run on the driver from one collect instead of
+# distributed rounds. Cold fits on the replica tiers (tools/make_sf1.py
+# copies of sf0.1, 4-core local[4] session, default iterations, a
+# process's first fit left out), local vs distributed: k=8 0.7-0.9 vs
+# 4.1-4.9 s at 20k vectors, 2.2 vs 5.8 s at 60k, 5.4-5.5 vs 12.6-13.1 s
+# at 200k; PQ 0.4-0.5 vs 2.2-2.7 s, 1.5-1.8 vs 5.0-6.9 s, 4.2-4.3 vs
+# 12.0-13.9 s. The local rounds are one NumPy thread, so the distributed
+# ones win once the argmin work is large: k=2000 at 20k vectors
+# (rows × k = 40M) 15.6 vs 23.0 s, k=312 at 200k (62M) 25.6 vs 19.3 s.
+# ROWS bounds driver memory at the largest size measured (the collect,
+# the int64 matrix and one round's sorted copy: the Python driver's peak
+# RSS grew 348 MB at 200k); WORK (rows × Σk over the parts, as
+# GEMM_ASSIGN_MIN_WORK counts it) sits at the largest measured local win.
+LOCAL_FIT_MAX_ROWS = 200_000
+LOCAL_FIT_MAX_WORK = 40_000_000
+
+
+def _local_lloyd(
+    spark: SparkSession,
+    sf_dir: str,
+    parts: list[slice],
+    k: int,
+    n_rounds: int,
+) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int] | None:
+    """The exact Lloyd rounds on the driver: one collect of
+    ``(vec_id, qvec)``, then per part (a component slice) the same
+    rounds the distributed fits run — seed cluster ``vec_id % k``
+    (Spark's truncated remainder, so ``np.fmod``), exact int64
+    per-cluster sums and counts, assignment by ``_argmin_codes``.
+    Returns ``n_rounds`` centroid rounds (round 0 from the seed, each
+    later one from the previous round's assignment; a cluster left
+    without members is absent and stops competing) and the corpus-wide
+    max|x|, or None when the fit must run distributed.
+
+    The route is chosen before any job from the embeddings footers' row
+    count (at least the valid count): it must be at most
+    ``LOCAL_FIT_MAX_ROWS``, and times Σk at most ``LOCAL_FIT_MAX_WORK``,
+    so a corpus routed away pays nothing for this path. After the
+    collect, the fit still goes distributed when the corpus is empty,
+    holds a NULL ``vec_id`` or a NULL component (the expression path's
+    NULL semantics are not reproduced here), or a round's codebook fails
+    ``_gemm_envelope_ok`` (the expanded int64 terms could wrap)."""
+    import numpy as np
+
+    bound = footer_rows(sf_dir, "embeddings")
+    if (
+        bound is None
+        or bound > LOCAL_FIT_MAX_ROWS
+        or bound * k * len(parts) > LOCAL_FIT_MAX_WORK
+    ):
+        return None
+    tbl = _quantized(spark, sf_dir, fan_out=False).select("vec_id", "qvec").toArrow()
+    n = tbl.num_rows
+    if not n or tbl.column("vec_id").null_count:
+        return None
+    comps = tbl.column("qvec").combine_chunks().flatten()
+    if comps.null_count:
+        return None
+    X = comps.to_numpy().astype(np.int64, copy=False).reshape(n, -1)
+    ids = tbl.column("vec_id").to_numpy()
+    x_bound = int(np.abs(X).max())
+    labels = [np.fmod(ids, k)] * len(parts)
+    rounds = []
+    for r in range(n_rounds):
+        if r:
+            labels = [
+                _argmin_codes(X[:, p], _book_arrays(bk))
+                for p, bk in zip(parts, rounds[-1])
+            ]
+        books = []
+        for p, lab in zip(parts, labels):
+            cids, inv, cnt = np.unique(lab, return_inverse=True, return_counts=True)
+            order = np.argsort(inv, kind="stable")
+            starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
+            sums = np.add.reduceat(X[order, p], starts, axis=0)  # exact int64
+            bk = {int(c): (s, int(m)) for c, s, m in zip(cids, sums.tolist(), cnt)}
+            if not _gemm_envelope_ok(bk, x_bound):
+                return None
+            books.append(bk)
+        rounds.append(books)
+    return rounds, x_bound
+
+
 def _gate_kmeans(
     spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
     n_iter: int = KMEANS_GATE_ITERS,
@@ -380,24 +492,26 @@ def _gate_kmeans(
 
     The fitted centroids are a session value: they are deterministic
     given (data, k, n_iter), so repeat invocations (ann_ivf_kmeans
-    composes on kmeans_cells) reuse them instead of re-running n_iter+1
-    driver-synchronized jobs — the same contract as holding a fitted
-    Spark ML KMeansModel.
+    composes on kmeans_cells) reuse them — the same contract as holding
+    a fitted Spark ML KMeansModel.
 
-    During fitting the quantized frame persists across the rounds: every
-    iteration's centroid collect re-reads it, and without the cache each
-    of the n_iter+1 jobs would redo the scan + spread shuffle +
-    quantization. It is unpersisted before returning — the final frame
-    re-derives the cluster column from the (cheap) scan, keeping no
-    storage pinned.
-
-    The valid-vector count the router needs is Σ of a round's
-    per-cluster counts (every round assigns every valid vector to exactly
-    one cluster), so the centroid aggregate gives it — the fit is its
-    n_iter+1 collects, no count job — and publishes it as ``n_valid``."""
+    Route: ``_local_lloyd`` fits on the driver from one collect when the
+    embeddings footers hold at most ``LOCAL_FIT_MAX_ROWS`` rows (and
+    rows × k is at most ``LOCAL_FIT_MAX_WORK``), the corpus has no NULL
+    id or component, and every round passes the int64 envelope; otherwise
+    the rounds run distributed — one centroid aggregate per round over
+    the persisted quantized frame. Both give the identical fitted value.
+    The valid-vector count is Σ of a round's per-cluster counts (every
+    round assigns every valid vector to exactly one cluster), published
+    as ``n_valid`` without a count job."""
     emb = _quantized(spark, sf_dir)
 
     def fit():
+        local = _local_lloyd(spark, sf_dir, [slice(None)], k, n_iter + 1)
+        if local is not None:
+            rounds, x_bound = local
+            cents, final_cents = rounds[-2][0], rounds[-1][0]
+            return cents, final_cents, x_bound, sum(c for _, c in cents.values())
         cached = emb.persist()
         try:
             assigned = cached.withColumn(
@@ -656,7 +770,30 @@ def _pq_fit(
 def _pq_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[str, slice, dict[int, tuple[list[int], int]]]], int]:
+    """PQ_ITERS centroid rounds per subspace from the ``vec_id % PQ_K``
+    seed, routed like ``_gate_kmeans``: ``_local_lloyd`` on PQ_M slice
+    parts when the corpus qualifies, else ``_pq_rounds`` distributed;
+    the codebooks and bound are identical either way."""
     width = PQ_DIM // PQ_M
+    parts = [slice(m * width, (m + 1) * width) for m in range(PQ_M)]
+    local = _local_lloyd(spark, sf_dir, parts, PQ_K, PQ_ITERS)
+    if local is not None:
+        rounds, x_bound = local
+        books = rounds[-1]
+    else:
+        books, x_bound = _pq_rounds(spark, sf_dir, width)
+    # Every round assigns each valid vector one code per subspace, so
+    # the m = 0 counts sum to n_valid: published here, a cold pq encode
+    # needs no count job of its own.
+    n = sum(cnt for _, cnt in books[0].values())
+    session_value(spark, sf_dir, "n_valid", lambda: n)
+    model = [(f"code_{m}", p, bk) for m, (p, bk) in enumerate(zip(parts, books))]
+    return model, x_bound
+
+
+def _pq_rounds(
+    spark: SparkSession, sf_dir: str, width: int
+) -> tuple[list[dict[int, tuple[list[int], int]]], int]:
     # All M subspaces fit in lock-step: every Lloyd iteration is ONE
     # shuffle job keyed on (m, cluster, pos) instead of M sequential
     # per-subspace jobs — the per-round stats of independent subspaces
@@ -733,16 +870,7 @@ def _pq_train(
             )
     finally:
         subs.unpersist()
-    # Every round assigns each valid vector one code per subspace, so
-    # the m = 0 counts sum to n_valid: published here, a cold pq encode
-    # needs no count job of its own.
-    n = sum(cnt for _, cnt in books[0].values())
-    session_value(spark, sf_dir, "n_valid", lambda: n)
-    model = [
-        (f"code_{m}", slice(m * width, (m + 1) * width), bk)
-        for m, bk in enumerate(books)
-    ]
-    return model, x_bound
+    return books, x_bound
 
 
 def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:

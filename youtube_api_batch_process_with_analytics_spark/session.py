@@ -53,6 +53,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # events.ts may be INT64 TIMESTAMP(NANOS); load_table rebuilds it
+        # from the longs. Set here once, so no query writes session conf.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))

@@ -4,6 +4,7 @@ from .partitioned import (  # noqa: F401
 )
 from .tables import (  # noqa: F401
     TABLES,
+    footer_rows,
     load_table,
     load_tables,
     register_views,

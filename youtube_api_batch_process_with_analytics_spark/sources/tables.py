@@ -30,6 +30,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Reads INT64 TIMESTAMP(NANOS) columns as longs (``events.ts``).
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 # Memoized DataFrame handles per (session, sf_dir, table). A DataFrame is an
 # immutable logical plan, so reuse is safe; this avoids re-reading parquet
 # footers (a driver-side file-listing + schema RPC, ~0.1-0.3 s each) on every
@@ -66,7 +69,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # Harmless when ts is already a parquet timestamp; required when it
         # is INT64 TIMESTAMP(NANOS) (the read would fail without it).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # ``get_spark`` sets it at build time: queries share the session,
+        # so one only writes it into a session built elsewhere.
+        if spark.conf.get(NANOS_AS_LONG, "false") != "true":
+            spark.conf.set(NANOS_AS_LONG, "true")
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -91,6 +97,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     _TABLE_CACHE[key] = df
     return df
+
+
+def footer_rows(sf_dir: str, name: str) -> int | None:
+    """Rows of one table as its parquet footers record them — read on the
+    driver, no Spark job — or None when they cannot be read. An upper
+    bound on any filtered view of the table."""
+    import pyarrow.dataset as ds
+
+    try:
+        return ds.dataset(
+            os.path.join(sf_dir, f"{name}.parquet"), format="parquet"
+        ).count_rows()
+    except (OSError, ValueError):  # ArrowInvalid is a ValueError
+        return None
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -114,9 +114,13 @@ def main() -> None:
 
     warm_dir = tempfile.mkdtemp(prefix="bench_warm_stream_")
     spark.range(2).selectExpr(
-        "CAST(id AS STRING) AS cache_key", "CAST(id AS DOUBLE) AS value"
+        "CAST(id AS STRING) AS cache_key",
+        "CAST(id AS DOUBLE) AS value",
+        "timestamp_seconds(id) AS ts",
     ).coalesce(1).write.mode("overwrite").parquet(warm_dir)
-    ws = spark.readStream.schema("cache_key string, value double").parquet(warm_dir)
+    ws = spark.readStream.schema(
+        "cache_key string, value double, ts timestamp"
+    ).parquet(warm_dir)
     wq = (
         ttl_cache_stream(ws)
         .writeStream.format("noop")

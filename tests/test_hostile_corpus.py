@@ -69,12 +69,15 @@ HOSTILE_ROWS = """
 
 
 ZERO64 = "[" + ",".join(["0.0"] * 64) + "]"
+# a valid, non-zero vector: only its NULL id makes the row degenerate
+REAL64 = "[" + ",".join(str((i % 5 - 2) * 0.5 + 0.125) for i in range(64)) + "]"
 HOSTILE_EMB_ROWS = f"""
     (6000000, CAST({ZERO64} AS FLOAT[]), 1),
     (6000001, NULL, 2),
     (6000002, CAST([] AS FLOAT[]), 3),
     (6000003, CAST([1.5, 2.5] AS FLOAT[]), 1),
-    (6000050, CAST({ZERO64} AS FLOAT[]), 2)
+    (6000050, CAST({ZERO64} AS FLOAT[]), 2),
+    (NULL, CAST({REAL64} AS FLOAT[]), 1)
 """
 
 HOSTILE_ORDER_ROWS = """
@@ -303,9 +306,10 @@ def test_fixture_embedding_dim_matches_contract(spark, sf_dir):
 
 def test_hostile_vectors_are_dropped_not_fatal(spark, hostile_dir):
     """The hygiene gate drops exactly the degenerate vectors (NULL, empty,
-    wrong-dim, zero) and keeps every real one — previously any single such
-    row crashed the whole ANN/clustering job (ANSI div-by-zero, banding
-    index error, NaN in the GEMM kernel)."""
+    wrong-dim, zero, NULL id) and keeps every real one — previously any
+    single such row crashed the whole ANN/clustering job (ANSI
+    div-by-zero, banding index error, NaN in the GEMM kernel, a NULL
+    k-means seed key)."""
     from youtube_api_batch_process_with_analytics_spark.operators.similarity import (
         valid_embeddings,
     )
@@ -313,5 +317,5 @@ def test_hostile_vectors_are_dropped_not_fatal(spark, hostile_dir):
 
     emb = load_table(spark, hostile_dir, "embeddings")
     kept = {r.vec_id for r in valid_embeddings(emb).select("vec_id").collect()}
-    assert not kept & {6000000, 6000001, 6000002, 6000003, 6000050}
-    assert len(kept) == emb.count() - 5
+    assert not kept & {6000000, 6000001, 6000002, 6000003, 6000050, None}
+    assert len(kept) == emb.count() - 6

@@ -227,13 +227,25 @@ def _assert_release_defers_while_in_use(tag, stage):
 
 
 def test_latch_source_release_defers_while_in_use():
-    """A release must never delete the streaming latch's staged source
-    out from under an active run (quota_latch_final holds it between
-    acquire_staged and release_staged)."""
+    """A second acquire of the streaming latch's source for the same
+    (session, corpus) returns the SAME staged dir without restaging, and
+    a release must never delete it out from under an active run
+    (quota_latch_final holds it between acquire_staged and
+    release_staged)."""
+    staged_into = []
 
     def stage(path):
+        staged_into.append(path)
         with open(os.path.join(path, "part-0.parquet"), "wb") as f:
             f.write(b"x")
+
+    memo.release_session_frames()
+    first = memo.acquire_staged(_FAKE_SPARK, "sf-latch", "latch_src", stage)
+    second = memo.acquire_staged(_FAKE_SPARK, "sf-latch", "latch_src", stage)
+    memo.release_staged(second)
+    memo.release_staged(first)
+    assert second == first
+    assert staged_into == [first]
 
     _assert_release_defers_while_in_use("latch_src", stage)
 

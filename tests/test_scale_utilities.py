@@ -221,6 +221,31 @@ def test_run_batch_timeout_keeps_finished_results(spark, sf_dir, monkeypatch):
     assert elapsed < 10, elapsed
 
 
+def test_run_batch_latches_leave_session_conf_alone(spark, sf_dir, duck):
+    """Two streaming latches and an unrelated query in one concurrent
+    batch: every result is hash-equal to its DuckDB twin, and the shared
+    session's conf is exactly what it was before the call — no request
+    writes session-global state another request could observe."""
+    import __spark_entry__ as entrymod
+    from tests.oracle_utils import assert_oracle_match
+    from youtube_api_batch_process_with_analytics_spark.plans.batch import (
+        BatchRequest,
+        run_batch,
+    )
+
+    names = ["quota_latch_final", "quota_latch_final", "log_level_stats"]
+    oracles = entrymod.oracle_sql()
+    before = dict(spark.conf.getAll)
+    out = run_batch(
+        spark, sf_dir, [BatchRequest(n) for n in names], entrymod.queries()
+    )
+    assert dict(spark.conf.getAll) == before
+    for i, name in enumerate(names):
+        res = out[f"{name}_{i}"]
+        assert res["status"] == "success", res["error"]
+        assert_oracle_match(res["data"], duck, oracles[name])
+
+
 def test_engine_reads_only_deployment_env_vars():
     """Execution routes are chosen by data volume, never by environment
     switches: the only environment variables the engine package reads

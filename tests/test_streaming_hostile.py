@@ -154,10 +154,9 @@ def test_hostile_quota_usage_stream(spark, hostile_events):
 
 
 def test_hostile_quota_latch_stream(spark, hostile_events):
-    """The applyInPandasWithState exhaustion latch under NULL keys: a NULL
-    user_id is its own state group (previously the non-nullable output
-    schema crashed the whole query on the first NULL-keyed row), and every
-    clean key's totals match the batch groupBy over the poisoned frame."""
+    """The exhaustion latch under NULL keys: a NULL user_id is its own
+    state group, and every clean key's totals match the batch groupBy
+    over the poisoned frame."""
     from youtube_api_batch_process_with_analytics_spark.streaming import (
         quota_latch_stream,
     )
@@ -206,20 +205,26 @@ def test_hostile_quota_latch_stream(spark, hostile_events):
 def test_hostile_ttl_cache_stream(spark, tmp_path):
     """Keyed TTL-cache state under degenerate entries: a NULL cache_key is
     its own state group, a NULL value stores (and re-emits) as NULL without
-    poisoning the hit count, and clean keys are unaffected."""
+    poisoning the hit count, and clean keys are unaffected. A NULL-ts
+    write counts (value and hits) but does not move the key's expiry: key
+    "c" still expires at its stamped write + TTL, and key "n", written
+    only without a timestamp, has no expiry at all."""
     from youtube_api_batch_process_with_analytics_spark.streaming import (
         ttl_cache_stream,
     )
 
     src = spark.createDataFrame(
         [
-            ("a", 1.0),
-            ("a", 2.0),
-            (None, 9.0),
-            (None, None),
-            ("b", None),
+            ("a", 1.0, _ts(15, 12)),
+            ("a", 2.0, _ts(15, 12, 1)),
+            (None, 9.0, _ts(15, 12, 2)),
+            (None, None, _ts(15, 12, 3)),
+            ("b", None, _ts(15, 12, 4)),
+            ("c", 5.0, _ts(15, 1)),  # expires at 02:00, before 12:04
+            ("c", 6.0, None),  # a write, but no new expiry
+            ("n", 4.0, None),  # never stamped: never expires
         ],
-        "cache_key string, value double",
+        "cache_key string, value double, ts timestamp",
     )
     path = str(tmp_path / "hostile_cache_stream")
     src.coalesce(1).write.mode("overwrite").parquet(path)
@@ -232,19 +237,21 @@ def test_hostile_ttl_cache_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120) is True
     try:
-        got = {
-            r.cache_key: (r.value, r.hits, r.evicted)
-            for r in spark.sql("SELECT * FROM hostile_cache").collect()
-        }
+        rows = spark.sql("SELECT * FROM hostile_cache").collect()
     finally:
         q.stop()
+    got = {r.cache_key: (r.value, r.hits, r.evicted) for r in rows if not r.evicted}
+    evicted = {(r.cache_key, r.value, r.hits) for r in rows if r.evicted}
     assert got["a"] == (2.0, 2, False)
     # last write for the NULL-key group was a NULL value; both entries hit
     assert got[None] == (None, 2, False)
     # a single NULL-value write stores NULL, not NaN/0.0
     assert got["b"] == (None, 1, False)
+    assert got["c"] == (6.0, 2, False)
+    assert got["n"] == (4.0, 1, False)
+    assert evicted == {("c", 6.0, 2)}
 
 
 def test_hostile_incremental_dedup_stream(spark, tmp_path):

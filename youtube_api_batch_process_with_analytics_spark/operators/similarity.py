@@ -54,21 +54,29 @@ EMB_DIM = 64
 
 def valid_embeddings(df: DataFrame, require_nonzero: bool = True) -> DataFrame:
     """Vector-hygiene gate shared by every embedding consumer: drops NULL
-    vectors, wrong-dimension vectors, and (for cosine-based operators)
-    zero vectors — any one of which otherwise kills the whole job (ANSI
-    division by zero in cosine, ArrayIndexOutOfBounds in banding, NaN in
-    the GEMM kernel; all observed via the hostile-embeddings
-    differential). Map-only filter in codegen; DuckDB twins mirror it
-    with the ``_DUCK_EMB_*`` WHERE fragments. Zero vectors are dropped
-    everywhere by default: no direction for cosine, and degenerate encoder
-    output for clustering/quantization — one uniform corpus contract."""
-    ok = F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM)
+    ids, NULL vectors, wrong-dimension vectors, and (for cosine-based
+    operators) zero vectors — any one of which otherwise kills the whole
+    job (ANSI division by zero in cosine, ArrayIndexOutOfBounds in
+    banding, NaN in the GEMM kernel, a NULL ``vec_id % k`` seed key in
+    k-means; all observed via the hostile-embeddings differential). A
+    vector without an id cannot be reported as a neighbour, member or
+    duplicate. Map-only filter in codegen; DuckDB twins mirror it with the
+    ``_DUCK_EMB_*`` WHERE fragments. Zero vectors are dropped everywhere
+    by default: no direction for cosine, and degenerate encoder output for
+    clustering/quantization — one uniform corpus contract."""
+    ok = (
+        F.col("vec_id").isNotNull()
+        & F.col("embedding").isNotNull()
+        & (F.size("embedding") == EMB_DIM)
+    )
     if require_nonzero:
         ok = ok & F.expr("exists(embedding, x -> x <> 0.0)")
     return df.filter(ok)
 
 
-_DUCK_EMB_VALID = f"embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
+_DUCK_EMB_VALID = (
+    f"vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
+)
 _DUCK_EMB_NONZERO = (
     _DUCK_EMB_VALID + " AND len(list_filter(embedding, x -> x <> 0)) > 0"
 )

@@ -1,17 +1,16 @@
-"""Custom stateful streaming operators (SURVEY.md §2.9 ST1/ST2).
-
-Two pieces of reference state don't reduce to a windowed aggregate:
+"""Keyed streaming state (SURVEY.md §2.9 ST1/ST2/ST3).
 
 - the per-key **exhaustion latch** (``APIKeyStats.is_exhausted``,
-  youtube_api_handler.py:55,61): once a key crosses its quota it stays
-  exhausted until explicitly reset — a monotone flag over arbitrary many
-  micro-batches, i.e. true user-defined state.
+  youtube_api_handler.py:47-79): once a key crosses its quota it stays
+  exhausted. The request count only grows, so the latch is a column
+  derived from a plain keyed count — Spark's built-in streaming
+  aggregate, with its state in the JVM state store.
 - the **TTL cache** (youtube_api_handler.py:81-105): key→value entries
-  that lazily expire; streaming form = state with a processing-time
-  timeout.
+  that lazily expire; streaming form = ``applyInPandasWithState`` with an
+  event-time timeout.
+- the **min-interval pacer** (youtube_api_handler.py:361-367): an
+  order-dependent fold per key, ``applyInPandasWithState``.
 
-Both are implemented with ``applyInPandasWithState`` — Arrow-batched
-grouped state, the idiomatic Spark shape for custom stateful operators.
 State is per-group and partitioned by the grouping key, so at production
 scale it shards across executors with the shuffle; each group's state is
 a few scalars (bounded, no unbounded growth).
@@ -32,83 +31,27 @@ from ..operators.memo import acquire_staged, release_staged
 
 DAILY_QUOTA = 10_000  # config.py:15
 
-# Grouping keys are NULLABLE in both output schemas: Spark's groupBy makes
-# NULL a real key group, and a non-nullable StructField here turns the
-# first NULL-keyed row into an EXPRESSION_DECODING_FAILED that kills the
-# WHOLE streaming query — one poisoned event taking down the pipeline
-# (found by tests/test_streaming_hostile.py).
-LATCH_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key_id", T.LongType(), True),
-        T.StructField("total_requests", T.LongType()),
-        T.StructField("total_failures", T.LongType()),
-        T.StructField("is_exhausted", T.BooleanType()),
-    ]
-)
-
-LATCH_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("requests", T.LongType()),
-        T.StructField("failures", T.LongType()),
-        T.StructField("exhausted", T.BooleanType()),
-    ]
-)
-
 
 def quota_latch_stream(events: DataFrame, quota: int = DAILY_QUOTA) -> DataFrame:
-    """ST2's exhaustion latch: per-key running request/failure counts with a
-    monotone ``is_exhausted`` flag that latches once ``requests >= quota``
+    """ST2's exhaustion latch: per-key running request/failure counts with
+    ``is_exhausted`` set once ``requests >= quota``
     (youtube_api_handler.py:47-79). Emits one updated row per key per
-    micro-batch.
+    micro-batch in update mode.
 
-    ``events`` needs (user_id LONG, event_type STRING). The latch is the
-    part a plain windowed aggregate can't express: it must survive window
-    boundaries until an operator reset — hence GroupState.
-
-    The error flag is encoded JVM-side BEFORE the stateful exchange: the
-    Python state workers only ever see two LONG columns per row instead
-    of the raw event strings (round-9 — Arrow transfer volume, not state
-    logic, dominated this operator's wall-clock; the string comparison
-    runs in whole-stage codegen where it belongs).
+    ``events`` needs (user_id LONG, event_type STRING). The latch never
+    un-sets, and over a count that only grows ``exhausted or requests >=
+    quota`` is ``requests >= quota``: a derived column of the streaming
+    ``count``, no custom state. A NULL user_id is its own group. A NULL
+    event_type is not an error (``==`` yields NULL; the coalesce pins 0).
     """
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            requests, failures, exhausted = state.get
-        else:
-            requests, failures, exhausted = 0, 0, False
-        for pdf in pdfs:
-            requests += len(pdf)
-            failures += int(pdf["err"].sum())
-        exhausted = exhausted or requests >= quota  # the latch: never un-sets
-        state.update((requests, failures, exhausted))
-        yield pd.DataFrame(
-            {
-                "key_id": [key[0]],
-                "total_requests": [requests],
-                "total_failures": [failures],
-                "is_exhausted": [exhausted],
-            }
+    err = F.coalesce((F.col("event_type") == "error").cast("long"), F.lit(0))
+    return (
+        events.groupBy(F.col("user_id").alias("key_id"))
+        .agg(
+            F.count(F.lit(1)).alias("total_requests"),
+            F.sum(err).alias("total_failures"),
         )
-
-    slim = events.select(
-        "user_id",
-        # NULL event_type is not an error (== yields NULL; the old pandas
-        # comparison yielded False) — pin that with an explicit coalesce
-        F.coalesce(
-            (F.col("event_type") == "error").cast("long"), F.lit(0)
-        ).alias("err"),
-    )
-    return slim.groupBy("user_id").applyInPandasWithState(
-        update,
-        LATCH_OUTPUT_SCHEMA,
-        LATCH_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+        .withColumn("is_exhausted", F.col("total_requests") >= quota)
     )
 
 
@@ -131,12 +74,19 @@ CACHE_STATE_SCHEMA = T.StructType(
 
 def ttl_cache_stream(entries: DataFrame, ttl_ms: int = 300_000) -> DataFrame:
     """ST1's TTL cache as streaming state: latest value + hit count per key,
-    evicted ``ttl_ms`` after the last write (processing-time timeout — the
-    streaming twin of the lazy ``del`` at youtube_api_handler.py:93-94).
+    evicted ``ttl_ms`` of event time after the key's latest timestamped
+    write (the streaming twin of the lazy ``del`` at
+    youtube_api_handler.py:93-94).
 
-    ``entries`` needs (cache_key STRING, value DOUBLE). On timeout the
-    operator emits a tombstone row (evicted=true) and drops the state —
-    bounded state for an unbounded stream.
+    ``entries`` needs (cache_key STRING, value DOUBLE, ts TIMESTAMP).
+    Expiry is an event-time timeout under a zero-delay watermark on
+    ``ts``, so an ``availableNow`` run evicts what its own input has aged
+    out and then ends. A write with a NULL ``ts`` counts (value and hits)
+    but does not move the key's expiry; a key with no timestamped write
+    has none. A write at or behind the watermark is late and the engine
+    drops it. On timeout the operator emits a tombstone row
+    (evicted=true) and drops the state — bounded state for an unbounded
+    stream.
     """
 
     def update(
@@ -144,8 +94,8 @@ def ttl_cache_stream(entries: DataFrame, ttl_ms: int = 300_000) -> DataFrame:
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        value, hits = state.get if state.exists else (None, 0)
         if state.hasTimedOut:
-            value, hits = state.get if state.exists else (None, 0)
             state.remove()
             yield pd.DataFrame(
                 {
@@ -156,7 +106,7 @@ def ttl_cache_stream(entries: DataFrame, ttl_ms: int = 300_000) -> DataFrame:
                 }
             )
             return
-        value, hits = state.get if state.exists else (None, 0)
+        expiry = None
         for pdf in pdfs:
             if len(pdf):
                 # a NULL value is still a write: store (and re-emit) NULL,
@@ -164,8 +114,12 @@ def ttl_cache_stream(entries: DataFrame, ttl_ms: int = 300_000) -> DataFrame:
                 last = pdf["value"].iloc[-1]
                 value = None if pd.isna(last) else float(last)
                 hits += len(pdf)
+                latest = pdf["ts_ms"].max()  # NaN: no stamped write
+                if pd.notna(latest):
+                    expiry = max(expiry or 0, int(latest) + ttl_ms)
         state.update((value, hits))
-        state.setTimeoutDuration(ttl_ms)
+        if expiry is not None:
+            state.setTimeoutTimestamp(expiry)
         yield pd.DataFrame(
             {
                 "cache_key": [key[0]],
@@ -175,12 +129,19 @@ def ttl_cache_stream(entries: DataFrame, ttl_ms: int = 300_000) -> DataFrame:
             }
         )
 
-    return entries.groupBy("cache_key").applyInPandasWithState(
-        update,
-        CACHE_OUTPUT_SCHEMA,
-        CACHE_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.ProcessingTimeTimeout,
+    # epoch millis taken JVM-side: pandas would see ts as a naive
+    # wall-clock time in the session time zone
+    return (
+        entries.withWatermark("ts", "0 seconds")
+        .withColumn("ts_ms", F.unix_millis("ts"))
+        .groupBy("cache_key")
+        .applyInPandasWithState(
+            update,
+            CACHE_OUTPUT_SCHEMA,
+            CACHE_STATE_SCHEMA,
+            "update",
+            GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 
@@ -279,12 +240,14 @@ def _stage_latch_source(events: DataFrame, path: str) -> None:
 
 def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     """Driver-gate wrapper: runs the REAL streaming latch (file source →
-    applyInPandasWithState → memory sink, availableNow trigger) and returns
+    streaming aggregate → memory sink, availableNow trigger) and returns
     the final per-key state. The final state is deterministic regardless of
     micro-batch splits (counts are associative; the latch is monotone), so
     a SQL oracle can verify the streaming engine's answer bit-for-bit.
+    It writes no session conf: the state partitions follow the session's
+    shuffle-partition default, so concurrent runs on one session (as under
+    ``run_batch``) cannot disturb each other or other queries.
     """
-    import os
     import uuid
 
     from ..sources import load_table
@@ -298,8 +261,6 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     # run itself (fresh checkpoint, state stores, memory sink) stays
     # fully per-invocation.
     name = "latch_gate_" + uuid.uuid4().hex[:8]
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     # acquire LAST and enter the guarded region immediately: anything
     # thrown between acquire and the finally would leak the in-use
     # count and pin the staged dir forever
@@ -308,30 +269,6 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     )
     try:
         stream = spark.readStream.schema(events.schema).parquet(src)
-        # State-partition sizing follows the DATA, not a fixed constant:
-        # a pinned 8 suits the 150-key gate fixture but serialized 1M sf1
-        # rows onto 8 Python state workers (4.95 s, addBatch ~95% of the
-        # wall-clock, scaling with per-worker row volume). The staged dir is a local tempdir
-        # by construction, so its byte size is a free, exact proxy:
-        # ~64 KB of staged parquet per state partition, floored at 8
-        # (state per key is three scalars — below the floor more workers
-        # are pure startup overhead), capped at the session parallelism.
-        staged_bytes = sum(
-            os.path.getsize(os.path.join(src, f))
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
-        )
-        n_parts = max(8, min(
-            spark.sparkContext.defaultParallelism, staged_bytes // 65_536
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        # Bigger Arrow batches for the state exchange: at the default
-        # 10k records the 1M-row sf1 batch pays ~100 Arrow flushes per
-        # partition; 64k batches cut the addBatch wall-clock ~25%
-        # (measured) with bounded memory (two LONG columns per row).
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", "65536"
-        )
         q = (
             quota_latch_stream(stream, quota=LATCH_GATE_QUOTA)
             .writeStream.format("memory")
@@ -343,10 +280,6 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
         q.awaitTermination(300)
         q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", prev_arrow
-        )
         release_staged(src)
     w = "(partition by key_id order by total_requests desc)"
     return (

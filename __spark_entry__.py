@@ -83,7 +83,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # localCheckpoint (DSIR's weights frame) — re-executing those same
 # objects would reuse materialized blocks, i.e. silently cache DATA
 # beyond any declared contract. Checkpoints owned by the session memo
-# (operators/memo.py — tfidf's tf/df, the LM occ/stats/scores, the
+# (operators/memo.py — tfidf's scored table, the LM occ/stats/scores, the
 # tokenized scan, DSIR's featurization) are NOT grounds for exclusion:
 # their reuse is the declared fitted-artifact contract, and
 # release_session_frames() clears this plan cache in the same pass so a

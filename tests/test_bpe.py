@@ -109,14 +109,15 @@ def test_bpe_exhaustion_engine_oracle_parity(spark):
 
     from youtube_api_batch_process_with_analytics_spark.operators.bpe import (
         bpe_fertility,
-        bpe_train,
+        bpe_fit,
         oracle_bpe_fertility,
         oracle_bpe_merges,
     )
 
     rows = [(1, "ab ab ab aa"), (2, "aa babb babb")]
     docs = _docs(spark, rows)
-    merges = bpe_train(docs, n_merges=6)
+    model = bpe_fit(docs, n_merges=6)
+    merges = model.merges
     assert len(merges) == 4  # exhausts early
 
     con = duckdb.connect()
@@ -131,7 +132,7 @@ def test_bpe_exhaustion_engine_oracle_parity(spark):
         for m in merges
     ]
     got = sorted(
-        tuple(r) for r in bpe_fertility(docs, merges).collect()
+        tuple(r) for r in bpe_fertility(docs, model).collect()
     )
     want = sorted(tuple(r) for r in con.execute(oracle_bpe_fertility(6)).fetchall())
     assert got == want and len(got) == 2

@@ -159,14 +159,17 @@ def test_ann_ivf_kmeans_gate_matches_oracle(spark, duck, sf_dir):
     assert_oracle_match(ann_ivf_kmeans(spark, sf_dir), duck, oracle_ann_ivf_kmeans())
 
 
-def test_gate_kmeans_assignment_is_map_only(spark, sf_dir):
+def test_gate_kmeans_assignment_is_map_only(spark, sf_dir, monkeypatch):
     """Final gated assignment must be a literal-centroid expression: the
     only Exchange allowed is spread()'s deliberate round-robin fan-out of
-    the single-file fixture scan — no hash shuffle from the compute."""
+    the single-file fixture scan — no hash shuffle from the compute. The
+    row floor is forced to 0 so the small fixture takes the fan-out."""
     from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
         kmeans_cells_query,
     )
+    from youtube_api_batch_process_with_analytics_spark.sources import tables
 
+    monkeypatch.setattr(tables, "SPREAD_MIN_ROWS", 0)
     df = kmeans_cells_query(spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

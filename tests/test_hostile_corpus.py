@@ -228,6 +228,28 @@ def test_hostile_corpus_full_differential(spark, hostile_dir):
     assert not failures, failures
 
 
+def test_hostile_corpus_fan_out_routes(spark, hostile_dir, monkeypatch):
+    """The full differential again with spread()'s row floor forced to 0,
+    so every query over the small hostile tables takes its round-robin
+    fan-out route as a large single-split scan would."""
+    from youtube_api_batch_process_with_analytics_spark.operators import memo
+    from youtube_api_batch_process_with_analytics_spark.sources import tables
+
+    monkeypatch.setattr(tables, "SPREAD_MIN_ROWS", 0)
+    # drops the registry's plan cache, so every query is rebuilt routed
+    memo.release_session_frames()
+    qs = em.queries()
+    try:
+        plan = qs["doc_text_stats"](spark, hostile_dir)._jdf.queryExecution()
+        assert "RoundRobinPartitioning" in plan.executedPlan().toString()
+        failures = _differential(
+            spark, hostile_dir, {name: qs[name] for name in _doc_query_names()}
+        )
+    finally:
+        memo.release_session_frames()
+    assert not failures, failures
+
+
 def test_hostile_corpus_kernel_routes(spark, hostile_dir, monkeypatch):
     """Second pass over every registered query that reaches a GEMM router
     (k-means cells, PQ codes, semantic_dedup's pair scoring), with both

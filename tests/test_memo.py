@@ -54,8 +54,8 @@ def test_repeat_invocations_do_not_accumulate_storage(spark, sf_dir):
 def test_release_unpersists_registry_frames(spark, sf_dir):
     """release_session_frames() must drop every persist-backed frame the
     registry owns (checkpointed frames are reference-dropped; explicit
-    persists — the tf-df table, the LM cb/cu stats, dedup's shingle
-    frame — must leave the persistent-RDD registry)."""
+    persists — the LM cb/cu stats, dedup's shingle frame — must leave
+    the persistent-RDD registry)."""
     memo.release_session_frames()
     base = _n_persistent(spark)
     _force(_QUERIES["tfidf_top_terms"](spark, sf_dir))
@@ -69,7 +69,7 @@ def test_release_unpersists_registry_frames(spark, sf_dir):
     assert memo.n_session_frames() == 0
     # Only explicit persists count here: localCheckpoint blocks leave the
     # registry asynchronously (ContextCleaner after GC), so assert the
-    # persist-backed delta specifically — dfreq + cb + cu + shingle = 4
+    # persist-backed delta specifically — cb + cu + shingle = 3
     # explicit persists released; the count must fall back by at least
     # those, i.e. to no more than base + the checkpoint entries created.
     remaining = _n_persistent(spark)

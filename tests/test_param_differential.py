@@ -280,7 +280,7 @@ def test_bpe_merges_params(spark, sf_dir, duck, n_merges):
     CTE chain re-derives the same greedy argmax sequence."""
     from youtube_api_batch_process_with_analytics_spark.operators import bpe as B
 
-    merges = B._fitted_merges(spark, sf_dir, n_merges=n_merges)
+    merges = B._fitted_bpe(spark, sf_dir, n_merges=n_merges).merges
     df = spark.createDataFrame(
         merges,
         "merge_round int, left_sym string, right_sym string,"
@@ -298,8 +298,8 @@ def test_bpe_fertility_params(spark, sf_dir, duck, n_merges):
         spread,
     )
 
-    merges = B._fitted_merges(spark, sf_dir, n_merges=n_merges)
-    df = B.bpe_fertility(spread(load_table(spark, sf_dir, "documents")), merges)
+    model = B._fitted_bpe(spark, sf_dir, n_merges=n_merges)
+    df = B.bpe_fertility(spread(load_table(spark, sf_dir, "documents")), model)
     _check(df, duck, B.oracle_bpe_fertility(n_merges=n_merges))
 
 

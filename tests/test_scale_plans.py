@@ -99,7 +99,7 @@ def test_cc_survivorship_has_no_static_broadcast_hint(spark, sf_dir):
         release_cc_caches()
 
 
-def test_lsh_band_join_hot_bucket_splits_under_aqe(spark, tmp_path):
+def test_lsh_band_join_hot_bucket_splits_under_aqe(spark, tmp_path, monkeypatch):
     """A hot LSH band bucket (600 near-identical docs hash to one
     (band_idx, band_key)) is the canonical skew hazard of the candidate
     self-join. Since round 9 the DEFAULT path's structural defense is the
@@ -110,12 +110,20 @@ def test_lsh_band_join_hot_bucket_splits_under_aqe(spark, tmp_path):
     UNGUARDED escape hatch (bucket_cap=None) must therefore remain the
     AQE-splittable shape: with skew-join forced and fixture-scale
     thresholds, its executed plan must show the skewed partition actually
-    split (SortMergeJoin(skew=true))."""
+    split (SortMergeJoin(skew=true)).
+
+    AQE splits a skewed partition by ranges of map tasks, so the hot rows
+    must come from several of them, as they do from a many-split scan.
+    The fixture's hot docs all sit in one of its two files, so spread()'s
+    row floor is forced to 0: the 800-row scan fans out like a large one."""
     import random
 
     from youtube_api_batch_process_with_analytics_spark.operators.dedup import (
         dedup_minhash_lsh,
     )
+    from youtube_api_batch_process_with_analytics_spark.sources import tables
+
+    monkeypatch.setattr(tables, "SPREAD_MIN_ROWS", 0)
 
     hot = [
         (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3,
@@ -312,13 +320,15 @@ def test_cc_long_chain_converges_through_checkpoints(spark, tmp_path):
         dedup.release_cc_caches()
 
 
-def test_spread_noop_on_multisplit_input(spark, tmp_path):
+def test_spread_noop_on_multisplit_input(spark, tmp_path, monkeypatch):
     """spread() must be a NO-OP when the input already has >= the session's
     default parallelism partitions — on a real cluster the scan arrives as
     many splits, and an unconditional round-robin repartition there is a
     full-corpus shuffle bought for nothing (the round-4 verdict's single
-    most pervasive scale smell). Single-split fixture inputs still fan out."""
-    from youtube_api_batch_process_with_analytics_spark.sources import spread
+    most pervasive scale smell). Single-split inputs above the row floor
+    still fan out; the floor is forced to 0 for that half, so the 10k-row
+    fixture stands for a large single-split scan."""
+    from youtube_api_batch_process_with_analytics_spark.sources import spread, tables
 
     para = spark.sparkContext.defaultParallelism
 
@@ -334,6 +344,7 @@ def test_spread_noop_on_multisplit_input(spark, tmp_path):
     assert "Exchange" not in _plan(out.select("doc_id"))
 
     # Single-split: must still repartition to the session parallelism.
+    monkeypatch.setattr(tables, "SPREAD_MIN_ROWS", 0)
     single = spark.read.parquet(str(tmp_path / "multi.parquet")).coalesce(1)
     fanned = spread(single)
     assert fanned is not single
@@ -344,21 +355,27 @@ def test_spread_noop_on_multisplit_input(spark, tmp_path):
     assert spread(scan, min_partitions=10**6) is not scan
 
 
-def test_spread_shuffled_guard_on_dedup_candidates(spark, sf_dir, tmp_path):
+def test_spread_shuffled_guard_on_dedup_candidates(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """spread_shuffled() guards post-shuffle fan-out sites (the LSH
     candidate set in dedup_embedding_cosine) without ever probing the
     shuffle output itself — probing a frame behind an Exchange under AQE
     EXECUTES the upstream stages, doubling the band join. The decision
     comes from the scan-shaped probe: wide scan → NO-OP (no pointless
-    exchange at 100 TB), narrow fixture scan → fan-out survives."""
+    exchange at 100 TB), narrow fixture scan → fan-out survives. The row
+    floor is forced to 0, so the small fixtures stand for large scans and
+    only the partition guard decides."""
     from youtube_api_batch_process_with_analytics_spark.operators.dedup import (
         dedup_embedding_cosine,
     )
     from youtube_api_batch_process_with_analytics_spark.sources import (
         load_table,
         spread_shuffled,
+        tables,
     )
 
+    monkeypatch.setattr(tables, "SPREAD_MIN_ROWS", 0)
     para = spark.sparkContext.defaultParallelism
 
     # Helper semantics: wide probe → identity; narrow probe → repartition.
@@ -384,6 +401,30 @@ def test_spread_shuffled_guard_on_dedup_candidates(spark, sf_dir, tmp_path):
     assert "RoundRobinPartitioning" not in plan_multi, plan_multi
     plan_single = _plan(dedup_embedding_cosine(spark, sf_dir))
     assert "RoundRobinPartitioning" in plan_single, plan_single
+
+
+def test_spread_skips_scans_below_row_floor(spark, sf_dir):
+    """At the default floor a 500-row single-split scan gets no fan-out —
+    the frame comes back as is, and neither a document query's plan nor a
+    post-shuffle site probed by that scan carries an Exchange from it."""
+    from youtube_api_batch_process_with_analytics_spark.operators.text_analysis import (
+        doc_text_stats,
+    )
+    from youtube_api_batch_process_with_analytics_spark.sources import (
+        footer_rows,
+        spread,
+        spread_shuffled,
+        tables,
+    )
+
+    assert footer_rows(sf_dir, "documents") < tables.SPREAD_MIN_ROWS
+    docs = load_table(spark, sf_dir, "documents")
+    assert docs.rdd.getNumPartitions() == 1
+    assert spread(docs) is docs
+    assert "Exchange" not in _plan(spread(docs).select("doc_id", "text"))
+    shuffled = docs.groupBy("lang").count()
+    assert spread_shuffled(shuffled, probe=docs) is shuffled
+    assert "RoundRobinPartitioning" not in _plan(doc_text_stats(spark, sf_dir))
 
 
 def test_value_hash_invariant_to_input_layout(spark, sf_dir, tmp_path):

@@ -322,3 +322,64 @@ def test_session_state_has_one_owner():
         "operators/memo.py", "sources/tables.py", "functions/language.py"
     }, sorted(app_keys)
     assert "operators/memo.py" in app_keys
+
+
+def test_pricing_summary_concurrent_first_calls_on_two_corpora(spark, sf_dir, tmp_path):
+    """Two first calls of the SQL gate on different corpora, started
+    together in one batch, each read their own ``lineitem``: the scan is
+    a ``spark.sql`` argument, so no session-global view can point one
+    call at the other corpus. Each result is hash-equal to its own
+    DuckDB twin."""
+    import os
+    import threading
+
+    import duckdb
+
+    from tests.oracle_utils import fetch_duck, value_hash
+    from youtube_api_batch_process_with_analytics_spark.plans.batch import (
+        BatchRequest,
+        run_batch,
+    )
+    from youtube_api_batch_process_with_analytics_spark.plans.sql_api import (
+        ORACLES,
+        pricing_summary,
+    )
+
+    corpora = {}
+    for tier in ("sf0.001", "sf0.01"):
+        d = tmp_path / tier  # a new path: nothing is cached for it yet
+        d.mkdir()
+        tier_dir = os.path.join(os.path.dirname(sf_dir), tier)
+        os.symlink(f"{tier_dir}/lineitem.parquet", d / "lineitem.parquet")
+        corpora[tier] = str(d)
+    start = threading.Barrier(len(corpora))
+
+    def call(d):
+        def run(spark_, _sf_dir):
+            start.wait(timeout=30)
+            return pricing_summary(spark_, d)
+
+        return run
+
+    out = run_batch(
+        spark,
+        "",
+        [BatchRequest(tier) for tier in corpora],
+        {tier: call(d) for tier, d in corpora.items()},
+        max_workers=len(corpora),
+    )
+    hashes = set()
+    for i, (tier, d) in enumerate(corpora.items()):
+        res = out[f"{tier}_{i}"]
+        assert res["status"] == "success", res["error"]
+        df = res["data"]
+        rows = [tuple(r) for r in df.collect()]
+        with duckdb.connect() as con:
+            con.execute(
+                f"CREATE VIEW lineitem AS SELECT * FROM '{d}/lineitem.parquet'"
+            )
+            dcols, drows = fetch_duck(con, ORACLES["pricing_summary"])
+        got = value_hash(rows, df.columns)
+        assert got == value_hash(drows, dcols), tier
+        hashes.add(got)
+    assert len(hashes) == len(corpora)

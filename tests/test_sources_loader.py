@@ -17,7 +17,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from youtube_api_batch_process_with_analytics_spark.sources import footer_rows, load_table
+from tests.test_hostile_corpus import hostile_dir  # noqa: F401  (fixture)
+from youtube_api_batch_process_with_analytics_spark.sources import (
+    TABLES,
+    footer_rows,
+    footer_schema,
+    load_table,
+)
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # One canonical instant: 2024-03-07 08:30:00 UTC.
 _DT = datetime.datetime(2024, 3, 7, 8, 30, 0)
@@ -107,3 +115,120 @@ def test_footer_rows_reads_files_and_directories(tmp_path):
     (parts / ".part_0.parquet.crc").write_bytes(b"x")
     assert footer_rows(str(tmp_path / "dir"), "embeddings") == 15
     assert footer_rows(str(tmp_path), "documents") is None
+
+
+def _assert_footer_schemas(spark, sf_dir, names=TABLES):
+    checked = 0
+    for name in names:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if not os.path.exists(path):
+            continue
+        want = spark.read.parquet(path).schema
+        assert footer_schema(spark, path) == want, (path, want)
+        checked += 1
+    assert checked, sf_dir
+
+
+@pytest.mark.parametrize(
+    "tier",
+    # the fixture tiers sit side by side; testdata_sf1 (tools/make_sf1.py)
+    # holds multi-file table directories
+    ["sf0.001", "sf0.01", "sf0.1", os.path.join(_REPO, "testdata_sf1")],
+)
+def test_footer_schema_equals_spark_inference(spark, sf_dir, tier):
+    """The driver-side footer schema ``load_table`` hands to
+    ``spark.read.schema`` is exactly the schema Spark infers with a job,
+    on every table of every fixture tier."""
+    tier = os.path.join(os.path.dirname(sf_dir), tier)
+    if not os.path.isdir(tier):
+        pytest.skip(f"{tier} not generated")
+    _assert_footer_schemas(spark, tier)
+
+
+def test_footer_schema_on_perfbench_and_hostile_corpora(spark, tmp_path, hostile_dir):
+    """The same equality on the benchmark's generated tables and on the
+    hostile corpus (DuckDB-written, NULL-laden rows)."""
+    import sys
+
+    sys.path.insert(0, os.path.join(_REPO, "perfbench"))
+    try:
+        import fixtures
+    finally:
+        sys.path.pop(0)
+    fixtures.write(str(tmp_path / "bench"), 7, 0.001)
+    _assert_footer_schemas(spark, str(tmp_path / "bench"))
+    _assert_footer_schemas(spark, hostile_dir)
+
+
+@pytest.mark.parametrize(
+    "label,ts_array,int96",
+    [
+        # INT64 TIMESTAMP(NANOS): Spark reads it as a long
+        ("nanos", pa.array([_DT], pa.timestamp("ns")), False),
+        # INT96: Arrow reads timestamp[ns], Spark a TIMESTAMP
+        ("int96", pa.array([_DT], pa.timestamp("ns")), True),
+    ],
+)
+def test_footer_schema_events_timestamp_encodings(spark, tmp_path, label, ts_array, int96):
+    """``events.ts`` encodings whose Arrow type and Spark type disagree:
+    the mapping goes by parquet physical and logical type, and the loaded
+    column still canonicalizes."""
+    d = _write_events(tmp_path, ts_array, label)
+    path = os.path.join(d, "events.parquet")
+    if int96:
+        table = pq.read_table(path)
+        pq.write_table(table, path, use_deprecated_int96_timestamps=True)
+        assert pq.ParquetFile(path).schema.column(1).physical_type == "INT96"
+    _assert_footer_schemas(spark, d, ["events"])
+    [row] = load_table(spark, d, "events").select("ts").collect()
+    assert row.ts == _DT
+
+
+def test_footer_schema_maps_every_leaf_kind(spark, tmp_path):
+    """Every parquet leaf and nesting kind the mapping covers — signed and
+    unsigned ints, dates, decimals, binary, timestamps by unit and UTC
+    flag, structs, lists and maps — plus a Spark-written directory whose
+    footers carry Spark's own schema."""
+    import decimal
+
+    table = pa.table(
+        {
+            "i8": pa.array([1], pa.int8()),
+            "i16": pa.array([1], pa.int16()),
+            "u8": pa.array([1], pa.uint8()),
+            "u16": pa.array([1], pa.uint16()),
+            "u32": pa.array([1], pa.uint32()),
+            "u64": pa.array([1], pa.uint64()),
+            "flag": pa.array([True]),
+            "f32": pa.array([1.5], pa.float32()),
+            "day": pa.array([datetime.date(2024, 3, 7)]),
+            "dec": pa.array([decimal.Decimal("1.25")], pa.decimal128(9, 2)),
+            "wide_dec": pa.array([decimal.Decimal("1.25")], pa.decimal128(30, 2)),
+            "blob": pa.array([b"x"]),
+            "ms_ntz": pa.array([_DT], pa.timestamp("ms")),
+            "us_utc": pa.array([_DT], pa.timestamp("us", tz="UTC")),
+            "rec": pa.array([{"a": 1, "b": [1.0, None]}]),
+            "tags": pa.array([[("k", 1)]], pa.map_(pa.string(), pa.int32())),
+            "nested": pa.array([[[1, 2]]], pa.list_(pa.list_(pa.int64()))),
+        }
+    )
+    pq.write_table(table, tmp_path / "kinds.parquet")
+    _assert_footer_schemas(spark, str(tmp_path), ["kinds"])
+    spark.read.parquet(str(tmp_path / "kinds.parquet")).repartition(3).write.parquet(
+        str(tmp_path / "spark" / "kinds.parquet")
+    )
+    _assert_footer_schemas(spark, str(tmp_path / "spark"), ["kinds"])
+
+
+def test_load_table_schema_launches_no_job(spark, sf_dir, tmp_path, jobs_in_group):
+    """A new table path costs no schema-inference job: the loader reads
+    the footer on the driver."""
+    import shutil
+
+    for name in ("documents", "events", "embeddings"):
+        shutil.copy(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+        schema, jobs = jobs_in_group(
+            lambda: load_table(spark, str(tmp_path), name).schema
+        )
+        assert jobs == [], name
+        assert schema.fieldNames()

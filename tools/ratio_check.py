@@ -178,7 +178,7 @@ DECLARED = {
 # a memo.session_frame artifact or a driver-side fitted model (the README
 # inventory, mapped to registered queries).
 FIT_DEPENDENT = {
-    # ranking / LM family (tfidf_tf, bm25_base, lm_scores frames)
+    # ranking / LM family (tfidf_scored, bm25_base, lm_scores frames)
     "tfidf_top_terms", "bm25_search", "bigram_lm_quality",
     "perplexity_buckets", "dsir_importance_weights",
     # span family (span_toks/grain/dupfps/doctotals/dupgrain/duphits)

@@ -12,11 +12,15 @@ life). This is Sennrich et al. 2016 BPE, Spark-first:
   train: adjacent pairs weighted by word count, argmax with a
   total-order tie-break (count DESC, then pair lexicographic — all
   integer counts), then a greedy left-to-right non-overlapping merge.
-- **Greedy fold equivalence**: appending-or-merging against the
-  accumulator's last element (``_merge``, and ``_apply_merge_expr``,
-  which ``bpe_fertility`` runs in Spark) implements the sequential i+=2
-  scan exactly, because a merged token ``a||b`` is strictly longer than
-  ``a`` and so can never false-match as the left partner in one pass.
+- **The fit holds the segmentation.** The last round's vocabulary is
+  every word's segmentation under the learned merges, so the fitted
+  model keeps ``(word, n_syms)`` next to the merge list, and
+  ``bpe_fertility`` joins the corpus against it as one broadcast — the
+  corpus is never re-folded and the vocabulary never recounted in Spark.
+- **Greedy fold**: appending-or-merging against the accumulator's last
+  element (``_merge``) implements the sequential i+=2 scan exactly,
+  because a merged token ``a||b`` is strictly longer than ``a`` and so
+  can never false-match as the left partner in one pass.
 
 The DuckDB oracle replays the identical rounds as generated chained CTEs
 (the ``oracle_kmeans_cells`` pattern): pair stats → LIMIT-1 argmax →
@@ -32,6 +36,7 @@ codes and URLs (``youtube_api_handler.py:353,813-815``).
 from __future__ import annotations
 
 from collections import Counter
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -52,24 +57,17 @@ def word_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge_expr(left: str, right: str) -> str:
-    """Greedy left-to-right merge of (left, right) as an array fold.
+class BpeModel(NamedTuple):
+    """A fitted BPE tokenizer: one Row per merge round, and every
+    vocabulary word with its segment count under those merges."""
 
-    Tokens are [a-z0-9]-only (TOKEN_SPLIT_RE), so embedding the symbols
-    as SQL literals needs no escaping.
-    """
-    merged = left + right
-    return (
-        "aggregate(syms, CAST(array() AS ARRAY<STRING>),"
-        " (acc, s) -> IF(size(acc) > 0"
-        f" AND element_at(acc, -1) = '{left}' AND s = '{right}',"
-        f" concat(slice(acc, 1, size(acc) - 1), array('{merged}')),"
-        " concat(acc, array(s))))"
-    )
+    merges: list[Row]
+    words: list[str]
+    n_syms: list[int]
 
 
-def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> list[Row]:
-    """Learn ``n_merges`` BPE merges; returns one Row per round.
+def bpe_fit(docs: DataFrame, n_merges: int = BPE_MERGES) -> BpeModel:
+    """Learn ``n_merges`` BPE merges and the segmentation they give.
 
     One Spark job chain (``word_counts``) and one collect of the
     vocabulary, whatever ``n_merges`` is; the rounds then recount pairs
@@ -77,7 +75,9 @@ def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> list[Row]:
     O(Σ word lengths) driver memory — the work a per-round Spark
     aggregate over the vocabulary would do, without a job per round.
     """
-    vocab = [(list(r.word), r.wcount) for r in word_counts(docs).collect()]
+    rows = word_counts(docs).collect()
+    words = [r.word for r in rows]
+    vocab = [(list(r.word), r.wcount) for r in rows]
     merges: list[Row] = []
     for rnd in range(1, n_merges + 1):
         stats: Counter = Counter()
@@ -97,7 +97,12 @@ def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> list[Row]:
             )
         )
         vocab = [(_merge(syms, left, right), wcount) for syms, wcount in vocab]
-    return merges
+    return BpeModel(merges, words, [len(syms) for syms, _ in vocab])
+
+
+def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> list[Row]:
+    """The merge list of ``bpe_fit``."""
+    return bpe_fit(docs, n_merges).merges
 
 
 def _merge(syms: list[str], left: str, right: str) -> list[str]:
@@ -111,23 +116,22 @@ def _merge(syms: list[str], left: str, right: str) -> list[str]:
     return out
 
 
-def _fitted_merges(
+def _fitted_bpe(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
-) -> list[Row]:
-    """The merge list as a session value: the merges ARE the model —
-    rounds × 1 row — so consumers (bpe_merges, bpe_fertility,
-    pack_sequences_bpe) share one fit: one word-count job chain and one
-    vocabulary collect per corpus."""
+) -> BpeModel:
+    """The fitted model as a session value: the merges and the
+    segmentation ARE the model — rounds × 1 row plus the vocabulary — so
+    consumers (bpe_merges, bpe_fertility, pack_sequences_bpe) share one
+    fit: one word-count job chain and one vocabulary collect per corpus."""
     return session_value(
-        spark, sf_dir, f"bpe_merges_{n_merges}",
-        lambda: bpe_train(spread(load_table(spark, sf_dir, "documents")), n_merges),
+        spark, sf_dir, f"bpe_{n_merges}",
+        lambda: bpe_fit(spread(load_table(spark, sf_dir, "documents")), n_merges),
     )
 
 
 def bpe_merges_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merges = _fitted_merges(spark, sf_dir)
     return spark.createDataFrame(
-        merges,
+        _fitted_bpe(spark, sf_dir).merges,
         "merge_round int, left_sym string, right_sym string,"
         " merged_sym string, pair_count long",
     )
@@ -195,38 +199,38 @@ def bpe_fertility_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The composition a tokenizer-aware pipeline runs before packing
     (``chunking.pack_sequences`` budgets by token count — this is where
-    that count comes from). Segmentation is a *vocabulary-level* property:
-    the merges apply once to the (word → symbols) table, and the corpus
-    just joins its words against it — the corpus is never re-folded.
+    that count comes from). Segmentation is a *vocabulary-level* property
+    the fit already computed on the driver, and the corpus just joins its
+    words against it — the corpus is never re-folded.
 
-    Scale shape: vocabulary fold is merge-rounds × vocab rows; the
-    corpus ⋈ vocab join shuffles on ``word``, whose stopword skew is the
-    canonical hot key — salted (``skew.salted_join``), since the vocab
-    side is aggregate-fed and AQE's skew split won't fire. Fertility
-    ratio uses integer DIV permille, exact on both engines.
+    Scale shape: the ``(word, n_syms)`` segmentation is as large as the
+    vocabulary the fit collected, and goes out as one broadcast, so the
+    corpus ⋈ vocab join is map-side: no shuffle on ``word`` and no
+    stopword skew. The one shuffle is the per-document aggregate.
+    Fertility ratio uses integer DIV permille, exact on both engines.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return bpe_fertility(docs, _fitted_merges(spark, sf_dir))
+    return bpe_fertility(docs, _fitted_bpe(spark, sf_dir))
 
 
-def bpe_fertility(docs: DataFrame, merges: list[Row]) -> DataFrame:
+def bpe_fertility(docs: DataFrame, model: BpeModel) -> DataFrame:
     """Core of ``bpe_fertility_query`` over any (doc_id, text) frame and
-    learned merge list — see the query docstring for the scale shape."""
-    from .skew import salted_join
+    the model fitted on it — see the query docstring for the scale shape."""
+    import pyarrow as pa
 
-    seg = word_counts(docs).select(
-        "word", F.split("word", "").alias("syms")
-    )
-    for m in merges:
-        seg = seg.withColumn(
-            "syms", F.expr(_apply_merge_expr(m.left_sym, m.right_sym))
+    # an Arrow table under the local-relation threshold becomes a
+    # LocalRelation: broadcasting it launches no job
+    seg = docs.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "word": pa.array(model.words, pa.string()),
+                "n_syms": pa.array(model.n_syms, pa.int64()),
+            }
         )
-    vocab_syms = seg.select("word", F.size("syms").cast("long").alias("n_syms"))
-    corpus = docs.select(
-        "doc_id", F.explode(_tokens()).alias("word")
     )
+    corpus = docs.select("doc_id", F.explode(_tokens()).alias("word"))
     return (
-        salted_join(corpus, vocab_syms, "word", unique_col="doc_id")
+        corpus.join(F.broadcast(seg), "word")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
@@ -286,7 +290,7 @@ def pack_sequences_bpe_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .chunking import pack_sequences
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    fert = bpe_fertility(docs, _fitted_merges(spark, sf_dir)).select(
+    fert = bpe_fertility(docs, _fitted_bpe(spark, sf_dir)).select(
         "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
     )
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")

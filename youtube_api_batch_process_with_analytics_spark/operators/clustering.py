@@ -612,10 +612,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster",
     ).withColumn("nrm", _norm("vec"))
 
-    queries = assigned.filter(
-        (F.col("vec_id") % IVF_KM_QUERY_STRIDE == 0)
-        & (F.col("vec_id") < QUERY_ID_CAP)
-    ).select(F.col("vec_id").alias("query_id"), "qvec")
     # probe: per query, the N_PROBE cells with smallest exact L2 to the
     # rational centroid — a map-only sorted-literal expression, built as
     # one SQL string for the same py4j-batching reason as _int_assign_expr
@@ -627,24 +623,25 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"transform(slice(array_sort(array({structs})), 1, {IVF_KM_N_PROBE}), "
         f"s -> s.cell)"
     )
-    probed = queries.select(
-        "query_id", F.explode(probed_cells).alias("cell")
+    # The query side — probe cells, query vector and norm for at most
+    # QUERY_ID_CAP / IVF_KM_QUERY_STRIDE ids — is one small broadcast read
+    # from the unspread scan: it needs no fan-out and no cluster column.
+    qside = (
+        _quantized(spark, sf_dir, fan_out=False)
+        .filter(
+            (F.col("vec_id") % IVF_KM_QUERY_STRIDE == 0)
+            & (F.col("vec_id") < QUERY_ID_CAP)
+        )
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.explode(probed_cells).alias("cell"),
+            F.transform("embedding", lambda x: x.cast("double")).alias("qvec_f"),
+        )
+        .withColumn("qnrm", _norm("qvec_f"))
     )
-
-    qf = full.filter(
-        (F.col("vec_id") % IVF_KM_QUERY_STRIDE == 0)
-        & (F.col("vec_id") < QUERY_ID_CAP)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec_f"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cands = (
-        F.broadcast(probed)
-        .join(full, probed.cell == full.cluster)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qf), "query_id")
-    )
+    cands = full.join(
+        F.broadcast(qside), F.col("cluster") == F.col("cell")
+    ).filter(F.col("vec_id") != F.col("query_id"))
     scored = cands.withColumn(
         "cosine",
         F.round(_dot("qvec_f", "vec") / (F.col("qnrm") * F.col("nrm")), 6),

@@ -9,8 +9,9 @@ There are three kinds of entry, each with its own lifetime:
 
 * **Frames** — ``session_frame(spark, sf_dir, tag, build, persist)``:
   executor-side intermediates shared by several queries or plan branches
-  (the tokenized corpus scan, tf/df tables, the bigram-LM occurrence and
-  count tables, the per-document score table). ``track_persisted(df)``
+  (the tokenized corpus scan, the tf·idf scored table, the bigram-LM
+  occurrence and count tables, the per-document score table).
+  ``track_persisted(df)``
   adds a per-invocation ``.persist()`` frame that is not memoized
   (Spark's CacheManager already dedups plan-identical persists) so it
   still has an unpersist path. Released by ``release_session_frames()``:
@@ -26,9 +27,10 @@ There are three kinds of entry, each with its own lifetime:
     unpersists it explicitly.
 
 * **Values** — ``session_value(spark, sf_dir, tag, build)``: driver-side
-  fitted models (Lloyd centroids, PQ codebooks, the BPE merge table, the
-  valid-embedding count). They pin no executor storage, so they live as
-  long as the Spark application: release does not drop them and
+  fitted models (Lloyd centroids, PQ codebooks, the BPE model, the
+  valid-embedding count) and table scan handles (keyed on the table's
+  path). They pin no executor storage, so they live as long as the
+  Spark application: release does not drop them and
   ``n_session_frames()`` does not count them.
 
 * **Staged dirs** — ``acquire_staged(spark, sf_dir, tag, stage)`` /

@@ -77,7 +77,7 @@ SPAN_SALT = "span42:"
 #   round 12 no query reads it per rep.
 # * ``span_dupfps`` — (fp, _mn): fingerprints seen in >1 document, with
 #   the canonical (min) doc. Vocabulary-of-duplicates-sized → plain
-#   persist, like tfidf's df table. Its build is the family's only
+#   persist. Its build is the family's only
 #   corpus-vocabulary-sized aggregate, paid once per session (round 12:
 #   doc_novelty previously re-ran an equivalent fp-keyed shuffle EVERY
 #   rep — 1.45 s of its 2.97 s at sf3, over 6.7 M near-unique md5 keys

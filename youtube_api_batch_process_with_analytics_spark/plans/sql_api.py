@@ -1,7 +1,7 @@
 """The SQL entry point: the engine's queries are equally expressible as
-ANSI SQL over registered views (``spark.sql``), sharing Catalyst plans with
-the DataFrame API. The reference has no SQL surface beyond the log store's
-literal SQLite strings (sqlite_logger.py:121-255); the engine gets the full
+ANSI SQL (``spark.sql``), sharing Catalyst plans with the DataFrame API.
+The reference has no SQL surface beyond the log store's literal SQLite
+strings (sqlite_logger.py:121-255); the engine gets the full
 surface from Spark for free — this module pins it with a classic pricing
 summary over the largest fact table.
 """
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources import register_views
+from ..sources import load_table
 
 PRICING_SUMMARY_SQL = """
 SELECT l_returnflag,
@@ -24,7 +24,7 @@ SELECT l_returnflag,
          AS sum_disc_price,
        CAST(FLOOR(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
                   / GREATEST(COUNT(*), 1)) AS BIGINT) AS avg_qty
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate <= DATE '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
@@ -34,12 +34,18 @@ ORDER BY l_returnflag, l_linestatus
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-API gate: one shuffle (partial-aggregable hash aggregate), the
     ship-date filter pushed into the parquet scan, decimal sums for an
-    order-independent hash. The identical text runs on DuckDB as its own
-    oracle — the strongest possible parity statement for the SQL surface.
+    order-independent hash. The same text, with the table name in the
+    scan's place, runs on DuckDB as its own oracle — the strongest
+    possible parity statement for the SQL surface.
+
+    The scan is a ``spark.sql`` DataFrame argument, not a session temp
+    view: a view name is session-global, so concurrent calls on two
+    corpora would re-point each other's ``lineitem``.
     """
-    register_views(spark, sf_dir)
-    return spark.sql(PRICING_SUMMARY_SQL)
+    return spark.sql(
+        PRICING_SUMMARY_SQL, lineitem=load_table(spark, sf_dir, "lineitem")
+    )
 
 
 QUERIES = {"pricing_summary": pricing_summary}
-ORACLES = {"pricing_summary": PRICING_SUMMARY_SQL}
+ORACLES = {"pricing_summary": PRICING_SUMMARY_SQL.format(lineitem="lineitem")}

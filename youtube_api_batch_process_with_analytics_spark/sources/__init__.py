@@ -5,9 +5,8 @@ from .partitioned import (  # noqa: F401
 from .tables import (  # noqa: F401
     TABLES,
     footer_rows,
+    footer_schema,
     load_table,
-    load_tables,
-    register_views,
     spread,
     spread_shuffled,
 )

@@ -1,11 +1,12 @@
-"""Differential test: Spark Lloyd k-means vs a NumPy replica of the exact
-same deterministic algorithm (same init, same tie-break, same iteration
-count). Assignments must agree exactly; centroids to float tolerance (the
-Spark side sums through DECIMAL — order-independent — while NumPy sums
-float64 in index order, so last-ulp drift is expected and bounded)."""
+"""Differential tests of the integer-exact Lloyd k-means and the PQ
+searches built on it: the fitted cells and centroids against a plain
+Python-int replica of the quantized rounds (exact equality), the driver
+fit against the distributed rounds, the GEMM kernel against the
+expression path, and the ANN compositions' recall."""
 
 from __future__ import annotations
 
+import math
 import os
 
 import numpy as np
@@ -13,95 +14,126 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
-    kmeans_assign,
-    kmeans_centroids,
-    kmeans_lloyd,
-)
 from youtube_api_batch_process_with_analytics_spark.sources import load_table
 
 K = 4
-N_ITER = 3
 
 
-def _emb(spark, sf_dir):
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vec"),
-    )
+def _replica_lloyd(ids, Q, k, n_iter):
+    """The quantized Lloyd rounds in plain Python ints: seed cluster
+    ``vec_id % k`` (truncated, as Spark's ``%``), centroid = the exact
+    (sum-vector, count) of a cluster's members, argmin of
+    ``float(Σ(n·x − s)²) / float(n²)`` with ties to the lowest id, a
+    cluster left without members dropped. Returns the labels after
+    ``n_iter`` assignments and the centroids those labels give."""
 
-
-def _numpy_lloyd(ids, X, k, n_iter):
-    def means(assign):
+    def stats(labels):
         cents = {}
-        for c in range(k):
-            m = assign == c
-            if m.any():
-                cents[c] = X[m].mean(axis=0)
-        fallback = cents[min(cents)]
-        return np.stack([cents.get(c, fallback) for c in range(k)])
+        for q, c in zip(Q, labels):
+            s, n = cents.get(c, ([0] * len(q), 0))
+            cents[c] = ([a + b for a, b in zip(s, q)], n + 1)
+        return cents
 
-    assign = ids % k
-    C = means(assign)
+    def assign(cents):
+        return [
+            min(
+                sorted(cents),
+                key=lambda c: (
+                    float(sum((cents[c][1] * x - s) ** 2 for x, s in zip(q, cents[c][0])))
+                    / float(cents[c][1] ** 2),
+                    c,
+                ),
+            )
+            for q in Q
+        ]
+
+    labels = [int(math.fmod(i, k)) for i in ids]
     for _ in range(n_iter):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)  # argmin takes the first min → lowest id
-        C = means(assign)
-    d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    return d2.argmin(axis=1), C
+        labels = assign(stats(labels))
+    return labels, stats(labels)
 
 
-def test_kmeans_matches_numpy(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    rows = sorted(emb.collect(), key=lambda r: r.vec_id)
-    ids = np.array([r.vec_id for r in rows])
-    X = np.array([r.vec for r in rows], dtype=np.float64)
+def _valid_quantized(spark, sf_dir):
+    """(ids, quantized vectors) of the valid embeddings, computed here:
+    non-NULL id, 64 components, not all zero; each component
+    round-half-away(float(x) · 1000)."""
+    ids, Q = [], []
+    rows = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    for r in sorted(rows.collect(), key=lambda r: (r.vec_id is None, r.vec_id)):
+        e = r.embedding
+        if r.vec_id is None or e is None or len(e) != 64 or not any(e):
+            continue
+        ids.append(r.vec_id)
+        Q.append([int(math.copysign(math.floor(abs(x * 1000.0) + 0.5), x)) for x in e])
+    return ids, Q
 
-    got = {
-        r.vec_id: r.cluster
-        for r in kmeans_lloyd(emb, k=K, n_iter=N_ITER).collect()
-    }
-    want_assign, want_C = _numpy_lloyd(ids, X, K, N_ITER)
-    want = dict(zip(ids.tolist(), want_assign.tolist()))
-    # Spark folds distances sequentially, NumPy sums pairwise — for a point
-    # nearly equidistant to two centroids the argmin can legitimately flip
-    # on last-ulp rounding. Compare exactly only where the best/second-best
-    # margin is clearly above float noise.
-    d2 = ((X[:, None, :] - want_C[None, :, :]) ** 2).sum(axis=2)
-    margins = dict(zip(ids.tolist(), (np.partition(d2, 1, axis=1)[:, 1] - d2.min(axis=1)).tolist()))
-    mismatched = {i for i in want if got[i] != want[i] and margins[i] > 1e-9}
-    assert not mismatched, f"{len(mismatched)} assignments differ: {sorted(mismatched)[:5]}"
 
-    C = np.array(kmeans_centroids(emb, k=K, n_iter=N_ITER))
-    assert C.shape == want_C.shape
-    np.testing.assert_allclose(C, want_C, rtol=0, atol=1e-9)
+def _fresh_values(monkeypatch, **consts):
+    """An empty session-value store (so the next fit runs cold) and the
+    given clustering module constants, inside ``monkeypatch``."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+    from youtube_api_batch_process_with_analytics_spark.operators import memo
+
+    monkeypatch.setattr(memo, "_VALUES", {})
+    for name, value in consts.items():
+        monkeypatch.setattr(cl, name, value)
+
+
+def test_kmeans_matches_numpy(spark, sf_dir, monkeypatch):
+    """``kmeans_cells`` and the fitted final centroids equal, exactly, a
+    Python-int replica of the quantized Lloyd rounds built from the raw
+    embeddings — on the driver fit and on the distributed rounds."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+
+    ids, Q = _valid_quantized(spark, sf_dir)
+    want_labels, want_final = _replica_lloyd(
+        ids, Q, cl.KMEANS_GATE_K, cl.KMEANS_GATE_ITERS
+    )
+    want = dict(zip(ids, want_labels))
+    for cap in (cl.LOCAL_FIT_MAX_ROWS, 0):
+        with monkeypatch.context() as m:
+            _fresh_values(m, LOCAL_FIT_MAX_ROWS=cap)
+            got = {
+                r.vec_id: r.cluster
+                for r in cl.kmeans_cells_query(spark, sf_dir).collect()
+            }
+            _, final_cents = cl._gate_kmeans(spark, sf_dir)
+        assert got == want, cap
+        assert final_cents == want_final, cap
 
 
 def test_kmeans_assign_is_map_only(spark, sf_dir):
-    """The data-sized step must be shuffle-free: literal centroids, no
-    Exchange in the assignment plan."""
-    emb = _emb(spark, sf_dir)
-    cents = kmeans_centroids(emb, k=K, n_iter=1)
-    plan = kmeans_assign(emb, cents)._sc._jvm.PythonSQLUtils.explainString(
-        kmeans_assign(emb, cents)._jdf.queryExecution(), "formatted"
+    """The data-sized step must be shuffle-free: at the default spread
+    floor the ``kmeans_cells`` plan (literal centroids) has no Exchange."""
+    from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
+        kmeans_cells_query,
+    )
+
+    df = kmeans_cells_query(spark, sf_dir)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
     )
     assert "Exchange" not in plan, plan
 
 
 def test_kmeans_cells_drive_ivf_recall(spark, sf_dir):
-    """End-to-end: k-means cells feed the IVF probe/search shape
-    (assign → probe nearest centroids → search inside probed cells) and
-    must recover most of the brute-force top-k. This is the production
-    wiring ann_ivf_topk's docstring defers to — labels replaced by learned
-    cells."""
-    emb = _emb(spark, sf_dir)
-    cents = kmeans_centroids(emb, k=K, n_iter=N_ITER)
-    cells = kmeans_assign(emb, cents)
+    """End-to-end: the gated k-means cells and final centroids feed the
+    IVF probe/search shape (probe the nearest centroids by L2, search by
+    cosine inside the probed cells) and must recover most of the
+    brute-force top-k. This is the production wiring ann_ivf_topk's
+    docstring defers to — labels replaced by learned cells."""
+    from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
+        _gate_kmeans,
+    )
 
-    rows = cells.collect()
-    X = {r.vec_id: np.array(r.vec) for r in rows}
+    assigned, final_cents = _gate_kmeans(spark, sf_dir, k=K)
+    rows = assigned.select("vec_id", "embedding", "cluster").collect()
+    X = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in rows}
     cell_of = {r.vec_id: r.cluster for r in rows}
-    C = np.array(cents)
+    cell_ids = sorted(final_cents)
+    C = np.array(
+        [np.array(final_cents[c][0], dtype=np.float64) / final_cents[c][1] for c in cell_ids]
+    )
     ids = sorted(X)
     M = np.stack([X[i] for i in ids])
     norms = np.linalg.norm(M, axis=1)
@@ -113,9 +145,10 @@ def test_kmeans_cells_drive_ivf_recall(spark, sf_dir):
         cos = (M @ qv) / (norms * np.linalg.norm(qv))
         order = [i for _, i in sorted(zip(-cos, ids)) if i != q]
         truth = set(order[:top_k])
-        # probe the n_probe nearest centroids, search only inside them
-        ccos = (C @ qv) / (np.linalg.norm(C, axis=1) * np.linalg.norm(qv))
-        probed = set(np.argsort(-ccos)[:n_probe].tolist())
+        # probe the n_probe nearest centroids (qvec is x·1000), search
+        # only inside them
+        d2 = ((C - qv * 1000.0) ** 2).sum(axis=1)
+        probed = {cell_ids[j] for j in np.argsort(d2, kind="stable")[:n_probe]}
         cand = [i for i in ids if cell_of[i] in probed and i != q]
         cand.sort(key=lambda i: -cos[ids.index(i)])
         got = set(cand[:top_k])
@@ -125,16 +158,31 @@ def test_kmeans_cells_drive_ivf_recall(spark, sf_dir):
     assert recall >= 0.5, f"IVF-over-kmeans recall too low: {recall:.2f}"
 
 
-def test_kmeans_empty_cluster_reseeds(spark):
-    """k larger than the distinct-point count forces empty clusters; the
-    job must still return exactly k centroids and a total assignment."""
-    df = spark.createDataFrame(
-        [(i, [float(i % 2), 0.0]) for i in range(6)], "vec_id long, vec array<double>"
-    )
-    out = kmeans_lloyd(df, k=5, n_iter=2)
-    assert out.count() == 6
-    cents = kmeans_centroids(df, k=5, n_iter=2)
-    assert len(cents) == 5
+def test_kmeans_empty_cluster_reseeds(spark, tmp_path, monkeypatch):
+    """k above the number of distinct points empties clusters: every
+    vector still gets exactly one label, and the emptied clusters are
+    absent from the fitted centroids (they stop competing) — on the
+    driver fit and on the distributed rounds."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+    from youtube_api_batch_process_with_analytics_spark.operators import memo
+
+    a, b = [1] * 64, [-2] + [3] * 63
+    d = _write_corpus(tmp_path / "two_points", list(range(6)), [a, b] * 3)
+    for cap in (cl.LOCAL_FIT_MAX_ROWS, 0):
+        with monkeypatch.context() as m:
+            _fresh_values(m, LOCAL_FIT_MAX_ROWS=cap)
+            assigned, final_cents = cl._gate_kmeans(spark, d, k=5, n_iter=2)
+            rows = assigned.select("vec_id", "cluster").collect()
+            cents, *_ = memo.session_value(
+                spark, d, "kmeans_k5_i2", lambda: pytest.fail("not fitted")
+            )
+        assert sorted(r.vec_id for r in rows) == list(range(6)), cap
+        # seeds 0..4 hold {a, b}, {b}, {a}, {b}, {a}: a ties between
+        # cells 2 and 4 and b between 1 and 3, so 0, 3 and 4 empty
+        assert {r.vec_id: r.cluster for r in rows} == {
+            i: 2 if i % 2 == 0 else 1 for i in range(6)
+        }, cap
+        assert sorted(final_cents) == [1, 2] and sorted(cents) == [1, 2], cap
 
 
 def test_kmeans_cells_gate_matches_oracle(spark, duck, sf_dir):
@@ -875,18 +923,25 @@ def test_gemm_envelope_check_routes_fallback(spark):
     assert gemm.count() == 10 and expr.count() == 10
 
 
-def test_int_centroids_reports_global_component_bound(spark):
-    """_int_centroids' x_bound is the corpus max|x| regardless of which
-    cluster holds the extreme component."""
+def test_int_centroids_reports_global_component_bound(spark, tmp_path):
+    """The distributed fit's x_bound is the corpus max|x| although the
+    extreme component sits in a one-member cluster — for k-means (one
+    whole-vector part) and for PQ slice parts that do not hold it — and
+    its round-0 centroids are the exact seed sums and counts."""
     import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
 
-    df = spark.createDataFrame(
-        [(0, 0, [1, -7]), (1, 0, [2, 3]), (2, 1, [-11, 5])],
-        "vec_id long, cluster int, qvec array<long>",
-    )
-    cents, x_bound = cl._int_centroids(df)
-    assert x_bound == 11
-    assert cents[0] == ([3, -4], 2) and cents[1] == ([-11, 5], 1)
+    base = [[1, -7] + [0] * 62, [2, 3] + [0] * 62, [4, 4] + [0] * 62]
+    extreme = [-11, 5] + [0] * 40 + [-90_000] + [0] * 21
+    # k = 2: ids 0, 2, 4 seed cluster 0; id 1 alone seeds cluster 1
+    d = _write_corpus(tmp_path / "bound", [0, 2, 4, 1], base + [extreme])
+    rounds, x_bound = cl._distributed_lloyd(spark, d, [None], 2, 2)
+    assert x_bound == 90_000
+    assert rounds[0] == [{0: ([7, 0] + [0] * 62, 3), 1: (extreme, 1)}]
+    parts = [slice(0, 32), slice(32, 64)]
+    rounds, x_bound = cl._distributed_lloyd(spark, d, parts, 2, 2)
+    assert x_bound == 90_000
+    assert rounds[0][0] == {0: ([7, 0] + [0] * 30, 3), 1: (extreme[:32], 1)}
+    assert cl._local_lloyd(spark, d, parts, 2, 2) == (rounds, x_bound)
 
 
 def test_semdedup_pair_kernel_bit_identical_to_expression_path(
@@ -991,11 +1046,13 @@ def _write_corpus(path, ids, comps):
     return str(path)
 
 
-def _fits(spark, sf_dir, monkeypatch, cap, k=8):
+def _fits(spark, sf_dir, monkeypatch, cap, k=8, gemm=False):
     """The fitted k-means value, the PQ model and which route each fit
     took (True = local), under ``LOCAL_FIT_MAX_ROWS = cap``. Fits are
     session values, so each call gets an empty value store. Argmin blocks
-    of 7 rows make every local assignment span several blocks."""
+    of 7 rows make every local assignment span several blocks. With
+    ``gemm``, ``GEMM_ASSIGN_MIN_WORK`` is 0 and the values also hold
+    ``gemm_books``: the book count of each kernel assignment that ran."""
     import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
     from youtube_api_batch_process_with_analytics_spark.operators import memo
 
@@ -1007,11 +1064,21 @@ def _fits(spark, sf_dir, monkeypatch, cap, k=8):
         routes.append(out is not None)
         return out
 
+    kernel_books = []
+    real_kernel = cl._gemm_assign_codes
+
+    def kernel_spy(df, books, **kw):
+        kernel_books.append(len(books))
+        return real_kernel(df, books, **kw)
+
     with monkeypatch.context() as m:
         m.setattr(cl, "LOCAL_FIT_MAX_ROWS", cap)
         m.setattr(cl, "ARGMIN_BLOCK_CELLS", 7 * k)
         m.setattr(cl, "_local_lloyd", spy)
         m.setattr(memo, "_VALUES", {})
+        if gemm:
+            m.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
+            m.setattr(cl, "_gemm_assign_codes", kernel_spy)
         cl._gate_kmeans(spark, sf_dir, k=k)
         cl._pq_fit(spark, sf_dir)
         values = {
@@ -1019,6 +1086,8 @@ def _fits(spark, sf_dir, monkeypatch, cap, k=8):
             for (_, d, tag), value in memo._VALUES.items()
             if d == sf_dir
         }
+    if gemm:
+        values["gemm_books"] = kernel_books
     return values, routes
 
 
@@ -1037,7 +1106,9 @@ def test_local_lloyd_fit_equals_distributed_rounds(spark, tmp_path, monkeypatch,
     ``(books, x_bound)`` over M slice books, and ``n_valid`` — on seeded
     random integer corpora with negative vec_ids (Spark's truncated
     ``vec_id % k`` seeds negative cluster ids), a coarse corpus full of
-    exact distance ties, and a planted tie that empties a cluster."""
+    exact distance ties, and a planted tie that empties a cluster. The
+    distributed rounds give the same values again when every
+    reassignment takes the GEMM kernel (``GEMM_ASSIGN_MIN_WORK = 0``)."""
     rng = np.random.default_rng(20261017 + k)
     n = 3 * k
     corpora = {
@@ -1061,6 +1132,13 @@ def test_local_lloyd_fit_equals_distributed_rounds(spark, tmp_path, monkeypatch,
         dist, routes = _fits(spark, d, monkeypatch, cap=0, k=k)
         assert routes == [False, False], name
         assert local == dist, name
+        # the distributed rounds again, reassigning through the GEMM
+        # kernel: three k-means rounds and the final cell column (one
+        # book each), then the PQ round (four books)
+        kernel, routes = _fits(spark, d, monkeypatch, cap=0, k=k, gemm=True)
+        assert routes == [False, False], name
+        assert kernel.pop("gemm_books") == [1, 1, 1, 1, 4], name
+        assert local == kernel, name
         assert local["n_valid"] == n
         cents, final_cents, _, _ = local[f"kmeans_k{k}_i3"]
         if name == "random":

@@ -262,8 +262,9 @@ def test_hostile_corpus_kernel_routes(spark, hostile_dir, monkeypatch):
 
     monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
     monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
-    # the fits run their distributed rounds, whose assignment goes
-    # through the kernel, rather than the driver-side fit
+    # both Lloyd fits (k-means cells, PQ codebooks) run their distributed
+    # rounds, whose reassignments go through the kernel, rather than the
+    # driver-side fit
     monkeypatch.setattr(cl, "LOCAL_FIT_MAX_ROWS", 0)
     # a fresh value store, so the Lloyd fit rounds route through the
     # kernel too instead of reusing the first pass's fitted centroids

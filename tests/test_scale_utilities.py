@@ -263,7 +263,6 @@ def test_engine_reads_only_deployment_env_vars():
         "SPARK_UI_ENABLED",
         "SPARK_DRIVER_MEMORY",
         "SPARK_GRAFT_SF_DIR",
-        "SPARK_GRAFT_RANGE_JOIN_HINT",
     }
     read: set[str] = set()
     bad: list[str] = []

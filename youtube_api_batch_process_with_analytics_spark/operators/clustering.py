@@ -2,23 +2,31 @@
 
 The clustering job `ann_ivf_topk`'s docstring defers to: IVF's coarse cells
 at production scale come from k-means over the corpus embeddings, not from
-pre-existing labels. This is that job, expressed Spark-first:
+pre-existing labels. This is that job, integer-exact so that the DuckDB
+twins reproduce it bit for bit:
 
-- **assign** (the data-sized step): each vector scores against all k
-  centroids via a broadcast — a map-only pass over the corpus, no shuffle.
-  Argmin by squared L2 with deterministic tie-break (lowest cluster id).
-- **update** (the shuffle): posexplode assigned vectors and take the
-  per-(cluster, dimension) mean through DECIMAL sums — one partial-
-  aggregable shuffle keyed on (cluster, pos), exact and order-independent.
-- **centroids live on the driver** between iterations (k×d doubles, bounded
-  by construction — the same contract as Spark ML's KMeans, whose
-  ``clusterCenters`` are driver-held). Each iteration is one job; lineage
-  never stacks because the new centroids re-enter as literals.
+- components quantize to BIGINT once: round(x * 1000). For float32
+  inputs the scaled value can never land exactly on a .5 boundary
+  ((2k+1)/2000 has a factor-125 denominator, never dyadic), so both
+  engines round identically.
+- a centroid is the exact rational (sum-vector, count) — never divided.
+  The squared L2 distance to it, scaled by n², is the exact BIGINT
+  Σ (n·x_i − s_i)²; the argmin compares dist/n² after one deterministic
+  BIGINT→DOUBLE cast and one IEEE division, identical on both engines,
+  with ties to the lowest cluster id.
+- clusters that lose every member simply stop competing (standard Lloyd
+  never re-populates them); both sides mirror that.
+- **assign** (the data-sized step) is map-only: the centroids enter as
+  literals, the same contract as Spark ML's driver-held
+  ``clusterCenters``.
 
-Initialization is deterministic — cluster c starts as the mean of vectors
-with ``vec_id % k == c`` (random-partition init, seeded by the stable id) —
-so results are reproducible run-to-run and differentially testable against
-a NumPy replica (tests/test_clustering.py).
+Initialization is deterministic — cluster c starts as the sum and count
+of the vectors with ``vec_id % k == c`` (random-partition init, seeded by
+the stable id) — so results are reproducible run-to-run. One fit serves
+k-means (one whole-vector part) and the PQ codebooks (one part per
+component slice): ``_lloyd_fit`` runs the rounds on the driver from one
+collect, or distributed with one aggregate per round. Quantization at
+1e-3 granularity is itself a production technique (scalar-quantized IVF).
 
 Non-reference extension (training-pipeline clustering; pairs with
 operators/similarity.py's IVF probe/search plumbing).
@@ -32,119 +40,6 @@ from pyspark.sql import functions as F
 from ..sources import footer_rows, load_table, spread
 from .memo import session_value, track_persisted
 from .similarity import _DUCK_EMB_NONZERO as _EMB_VALID
-
-
-def _sq_dist(vec_col: str, centroid_lit) -> F.Column:
-    """Sequential-fold squared L2 distance (deterministic order)."""
-    return F.aggregate(
-        F.zip_with(F.col(vec_col), centroid_lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _mean_by_key(assigned: DataFrame, key_col: str) -> DataFrame:
-    """Per-(key, dimension) mean via DECIMAL sums, rebuilt into arrays."""
-    ex = assigned.select(key_col, F.posexplode("vec").alias("pos", "val"))
-    flat = ex.groupBy(key_col, "pos").agg(
-        (
-            F.sum(F.col("val").cast("decimal(30,10)")).cast("double")
-            / F.count("*")
-        ).alias("c")
-    )
-    return flat.groupBy(key_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("cvec")
-    )
-
-
-def kmeans_assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Attach ``cluster`` (argmin squared-L2 centroid) to ``emb``.
-
-    ``emb`` needs ``vec_id`` and a double-array ``vec`` column. The k
-    centroids enter as literal arrays, so assignment is a map-only pass in
-    codegen — the right shape for the data-sized step at any scale. Ties
-    break to the lowest cluster id (min over (dist, cluster) structs).
-    """
-    dists = F.array(
-        *[
-            F.struct(
-                _sq_dist("vec", F.array(*[F.lit(float(x)) for x in c])).alias(
-                    "d"
-                ),
-                F.lit(i).alias("cluster"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return emb.withColumn("cluster", F.array_min(dists)["cluster"])
-
-
-def kmeans_lloyd(emb: DataFrame, k: int = 8, n_iter: int = 5) -> DataFrame:
-    """Deterministic Lloyd k-means; returns ``vec_id, cluster``.
-
-    Fixed ``n_iter`` rounds (no convergence probe — determinism and a
-    bounded job count beat saving one late iteration; Lloyd's inertia is
-    monotone so extra rounds never hurt correctness).
-    """
-    emb = emb.select("vec_id", "vec")
-    return kmeans_assign(emb, kmeans_centroids(emb, k, n_iter)).select(
-        "vec_id", "cluster"
-    )
-
-
-def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 5) -> list[list[float]]:
-    """The final centroid matrix (k×d, driver-side) for downstream IVF use.
-
-    Each round collects the k×d matrix to the driver — bounded, exactly
-    what Spark ML's KMeans does with ``clusterCenters`` — and re-enters it
-    as literals, so plan depth per round is constant (no lineage stacking).
-    """
-    emb = emb.select("vec_id", "vec")
-    # Random-partition init seeded by the stable id: cluster c = mean of
-    # vectors with vec_id % k == c.
-    seeded = emb.withColumn("cluster", (F.col("vec_id") % k).cast("int"))
-    centroids = _collect_centroids(_mean_by_key(seeded, "cluster"), k)
-    for _ in range(n_iter):
-        assigned = kmeans_assign(emb, centroids)
-        centroids = _collect_centroids(_mean_by_key(assigned, "cluster"), k)
-    return centroids
-
-
-def _collect_centroids(cent_df: DataFrame, k: int) -> list[list[float]]:
-    """Driver-side k×d matrix; a cluster that lost every member keeps no
-    row — re-seed it from the first surviving centroid so k stays fixed
-    (deterministic, mirrors Spark ML's keep-alive for empty clusters)."""
-    rows = {r[0]: list(r[1]) for r in cent_df.collect()}
-    if not rows:
-        raise ValueError("no vectors to cluster")
-    fallback = rows[min(rows)]
-    return [rows.get(c, fallback) for c in range(k)]
-
-
-# --- integer-exact gate variant ------------------------------------------
-#
-# The driver's correctness gate hashes values bit-for-bit against a DuckDB
-# oracle, and double-precision Lloyd iterations cannot promise that: the
-# two engines round double→DECIMAL means differently, and a single-ulp
-# disagreement can flip a near-tied argmin. The gated twin below removes
-# floats from the decision path entirely:
-#
-# - components quantize to BIGINT once: round(x * 1000). For float32
-#   inputs the scaled value can never land exactly on a .5 boundary
-#   ((2k+1)/2000 has a factor-125 denominator, never dyadic), so both
-#   engines round identically.
-# - a centroid is the exact rational (sum-vector, count) — never divided.
-#   The squared L2 distance to it, scaled by n², is the exact BIGINT
-#   Σ (n·x_i − s_i)²; the argmin compares dist/n² after one deterministic
-#   BIGINT→DOUBLE cast and one IEEE division, identical on both engines.
-# - clusters that lose every member simply stop competing (standard Lloyd
-#   never re-populates them); both sides mirror that.
-#
-# Quantization at 1e-3 granularity is itself a production technique
-# (scalar-quantized IVF); the double-precision kmeans_lloyd above stays
-# the general-purpose operator, differentially tested vs NumPy.
 
 KMEANS_GATE_K = 8
 KMEANS_GATE_ITERS = 3
@@ -175,41 +70,12 @@ def _quantized(spark: SparkSession, sf_dir: str, fan_out: bool = True) -> DataFr
     )
 
 
-def _int_centroids(
-    assigned: DataFrame,
-) -> tuple[dict[int, tuple[list[int], int]], int]:
-    """Collect exact rational centroids {cluster: (sum_vector, n)} — k×d
-    BIGINTs on the driver, the same bounded contract as kmeans_centroids.
-
-    Also returns the corpus-wide component bound max|x| (every Lloyd
-    round assigns EVERY valid vector, so any round's max is the global
-    one). It rides the same (cluster, pos) aggregate — no extra job —
-    and feeds ``_gemm_envelope_ok``'s driver-side overflow check."""
-    flat = (
-        assigned.select("cluster", F.posexplode("qvec").alias("pos", "x"))
-        .groupBy("cluster", "pos")
-        .agg(
-            F.sum("x").alias("s"),
-            F.count("*").alias("n"),
-            F.max(F.abs(F.col("x"))).alias("mx"),
-        )
-        .collect()
-    )
-    by_cluster: dict[int, dict[int, int]] = {}
-    counts: dict[int, int] = {}
-    x_bound = 0
-    for r in flat:
-        by_cluster.setdefault(r.cluster, {})[r.pos] = r.s
-        counts[r.cluster] = r.n
-        if r.mx is not None and r.mx > x_bound:
-            x_bound = r.mx
-    return (
-        {
-            c: ([dims[p] for p in sorted(dims)], counts[c])
-            for c, dims in by_cluster.items()
-        },
-        int(x_bound),
-    )
+def _part_col(col: str, part: slice | None) -> F.Column:
+    """The component slice ``part`` of the array ``col`` (the whole array
+    when ``part`` is None)."""
+    if part is None:
+        return F.col(col)
+    return F.slice(col, part.start + 1, part.stop - part.start)
 
 
 def _dist_sql(svec: list[int], n: int, col: str = "qvec") -> str:
@@ -394,9 +260,9 @@ def _assign_codes(
         if part is None:
             out = out.withColumn(field, _int_assign_expr(bk, field=field, col=col))
         else:
-            out = out.withColumn(
-                f"_sub{i}", F.slice(col, part.start + 1, part.stop - part.start)
-            ).withColumn(field, _int_assign_expr(bk, field="code", col=f"_sub{i}"))
+            out = out.withColumn(f"_sub{i}", _part_col(col, part)).withColumn(
+                field, _int_assign_expr(bk, field="code", col=f"_sub{i}")
+            )
     return out
 
 
@@ -420,19 +286,19 @@ LOCAL_FIT_MAX_WORK = 40_000_000
 def _local_lloyd(
     spark: SparkSession,
     sf_dir: str,
-    parts: list[slice],
+    parts: list[slice | None],
     k: int,
     n_rounds: int,
 ) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int] | None:
     """The exact Lloyd rounds on the driver: one collect of
-    ``(vec_id, qvec)``, then per part (a component slice) the same
-    rounds the distributed fits run — seed cluster ``vec_id % k``
-    (Spark's truncated remainder, so ``np.fmod``), exact int64
-    per-cluster sums and counts, assignment by ``_argmin_codes``.
-    Returns ``n_rounds`` centroid rounds (round 0 from the seed, each
-    later one from the previous round's assignment; a cluster left
-    without members is absent and stops competing) and the corpus-wide
-    max|x|, or None when the fit must run distributed.
+    ``(vec_id, qvec)``, then per part (a component slice, None for the
+    whole vector) seed cluster ``vec_id % k`` (Spark's truncated
+    remainder, so ``np.fmod``), exact int64 per-cluster sums and counts,
+    assignment by ``_argmin_codes``. Returns ``n_rounds`` centroid rounds
+    (round 0 from the seed, each later one from the previous round's
+    assignment; a cluster left without members is absent and stops
+    competing) and the corpus-wide max|x|, or None when the fit must run
+    distributed.
 
     The route is chosen before any job from the embeddings footers' row
     count (at least the valid count): it must be at most
@@ -461,6 +327,7 @@ def _local_lloyd(
     X = comps.to_numpy().astype(np.int64, copy=False).reshape(n, -1)
     ids = tbl.column("vec_id").to_numpy()
     x_bound = int(np.abs(X).max())
+    parts = [slice(None) if p is None else p for p in parts]
     labels = [np.fmod(ids, k)] * len(parts)
     rounds = []
     for r in range(n_rounds):
@@ -483,6 +350,101 @@ def _local_lloyd(
     return rounds, x_bound
 
 
+def _distributed_lloyd(
+    spark: SparkSession,
+    sf_dir: str,
+    parts: list[slice | None],
+    k: int,
+    n_rounds: int,
+) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int]:
+    """``_local_lloyd``'s rounds as Spark jobs over the persisted
+    ``(vec_id, qvec)`` frame, for the corpora the driver fit declines.
+    Each part m starts from ``c{m} = vec_id % k``. Each round is ONE
+    aggregate keyed on ``(m, cluster, pos)`` over every part's exploded
+    slice (the per-part stats commute, so k-means is the M = 1 case),
+    returning exact sums, counts and max|x|: every round aggregates every
+    valid component, so any round's max is the corpus-wide bound the
+    envelope check needs. Reassignment goes through ``_assign_codes``
+    with one book per part, so large fits take the GEMM kernel. The
+    frame is unpersisted before this returns."""
+    cached = _quantized(spark, sf_dir).select("vec_id", "qvec").persist()
+    try:
+        assigned = cached.select(
+            "vec_id",
+            "qvec",
+            *[
+                (F.col("vec_id") % k).cast("int").alias(f"c{m}")
+                for m in range(len(parts))
+            ],
+        )
+        rounds: list[list[dict[int, tuple[list[int], int]]]] = []
+        x_bound = 0
+        for r in range(n_rounds):
+            if r:
+                books = rounds[-1]
+                assigned = _assign_codes(
+                    cached,
+                    [(f"c{m}", p, bk) for m, (p, bk) in enumerate(zip(parts, books))],
+                    sum(cnt for _, cnt in books[0].values()),
+                    x_bound,
+                )
+            slices = F.array(
+                *[
+                    F.struct(
+                        F.lit(m).alias("m"),
+                        F.col(f"c{m}").alias("cluster"),
+                        _part_col("qvec", p).alias("sub"),
+                    )
+                    for m, p in enumerate(parts)
+                ]
+            )
+            flat = (
+                assigned.select(F.explode(slices).alias("e"))
+                .select("e.m", "e.cluster", F.posexplode("e.sub").alias("pos", "x"))
+                .groupBy("m", "cluster", "pos")
+                .agg(
+                    F.sum("x").alias("s"),
+                    F.count("*").alias("n"),
+                    F.max(F.abs(F.col("x"))).alias("mx"),
+                )
+                .collect()
+            )
+            sums: list[dict[int, dict[int, int]]] = [{} for _ in parts]
+            counts: list[dict[int, int]] = [{} for _ in parts]
+            for row in flat:
+                sums[row.m].setdefault(row.cluster, {})[row.pos] = row.s
+                counts[row.m][row.cluster] = row.n
+                if row.mx is not None and row.mx > x_bound:
+                    x_bound = int(row.mx)
+            rounds.append(
+                [
+                    {
+                        c: ([dims[p] for p in sorted(dims)], counts[m][c])
+                        for c, dims in sums[m].items()
+                    }
+                    for m in range(len(parts))
+                ]
+            )
+    finally:
+        cached.unpersist()
+    return rounds, x_bound
+
+
+def _lloyd_fit(
+    spark: SparkSession,
+    sf_dir: str,
+    parts: list[slice | None],
+    k: int,
+    n_rounds: int,
+) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int]:
+    """The one exact Lloyd fit behind k-means and PQ: on the driver when
+    ``_local_lloyd`` takes the corpus, else ``_distributed_lloyd``. Both
+    return the identical ``(rounds, x_bound)``."""
+    return _local_lloyd(spark, sf_dir, parts, k, n_rounds) or _distributed_lloyd(
+        spark, sf_dir, parts, k, n_rounds
+    )
+
+
 def _gate_kmeans(
     spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
     n_iter: int = KMEANS_GATE_ITERS,
@@ -493,40 +455,17 @@ def _gate_kmeans(
     The fitted centroids are a session value: they are deterministic
     given (data, k, n_iter), so repeat invocations (ann_ivf_kmeans
     composes on kmeans_cells) reuse them — the same contract as holding
-    a fitted Spark ML KMeansModel.
-
-    Route: ``_local_lloyd`` fits on the driver from one collect when the
-    embeddings footers hold at most ``LOCAL_FIT_MAX_ROWS`` rows (and
-    rows × k is at most ``LOCAL_FIT_MAX_WORK``), the corpus has no NULL
-    id or component, and every round passes the int64 envelope; otherwise
-    the rounds run distributed — one centroid aggregate per round over
-    the persisted quantized frame. Both give the identical fitted value.
-    The valid-vector count is Σ of a round's per-cluster counts (every
-    round assigns every valid vector to exactly one cluster), published
-    as ``n_valid`` without a count job."""
+    a fitted Spark ML KMeansModel. The fit is ``_lloyd_fit`` over one
+    whole-vector part, n_iter + 1 rounds: the assignment centroids and
+    the final ones they produce. The valid-vector count is Σ of a round's
+    per-cluster counts (every round assigns every valid vector to exactly
+    one cluster), published as ``n_valid`` without a count job."""
     emb = _quantized(spark, sf_dir)
 
     def fit():
-        local = _local_lloyd(spark, sf_dir, [slice(None)], k, n_iter + 1)
-        if local is not None:
-            rounds, x_bound = local
-            cents, final_cents = rounds[-2][0], rounds[-1][0]
-            return cents, final_cents, x_bound, sum(c for _, c in cents.values())
-        cached = emb.persist()
-        try:
-            assigned = cached.withColumn(
-                "cluster", (F.col("vec_id") % k).cast("int")
-            )
-            for _ in range(n_iter):
-                cents, x_bound = _int_centroids(assigned)
-                n = sum(cnt for _, cnt in cents.values())
-                assigned = _assign_codes(
-                    cached, [("cluster", None, cents)], n, x_bound
-                )
-            final_cents, _ = _int_centroids(assigned)
-        finally:
-            cached.unpersist()
-        return cents, final_cents, x_bound, n
+        rounds, x_bound = _lloyd_fit(spark, sf_dir, [None], k, n_iter + 1)
+        cents, final_cents = rounds[-2][0], rounds[-1][0]
+        return cents, final_cents, x_bound, sum(c for _, c in cents.values())
 
     cents, final_cents, x_bound, n = session_value(
         spark, sf_dir, f"kmeans_k{k}_i{n_iter}", fit
@@ -592,6 +531,21 @@ def _oracle_round(r: int, prefix: str = "") -> str:
 # --- IVF over learned cells (the composition ann_ivf_topk defers to) ------
 
 
+def _probe_cells(cents: dict[int, tuple[list[int], int]], col: str) -> F.Column:
+    """Per query, the IVF_KM_N_PROBE cells with the smallest exact L2
+    from ``col`` to their rational centroids (ties to the lower cell) — a
+    map-only sorted-literal expression, built as one SQL string for the
+    same py4j-batching reason as ``_int_assign_expr``."""
+    structs = ", ".join(
+        f"named_struct('d', {_dist_sql(*cents[c], col=col)}, 'cell', {int(c)})"
+        for c in sorted(cents)
+    )
+    return F.expr(
+        f"transform(slice(array_sort(array({structs})), 1, {IVF_KM_N_PROBE}), "
+        f"s -> s.cell)"
+    )
+
+
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN whose coarse cells come from the gated integer-exact k-means
     (not pre-existing labels): probe the IVF_KM_N_PROBE nearest cells by
@@ -612,17 +566,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster",
     ).withColumn("nrm", _norm("vec"))
 
-    # probe: per query, the N_PROBE cells with smallest exact L2 to the
-    # rational centroid — a map-only sorted-literal expression, built as
-    # one SQL string for the same py4j-batching reason as _int_assign_expr
-    structs = ", ".join(
-        f"named_struct('d', {_dist_sql(*cents[c])}, 'cell', {int(c)})"
-        for c in sorted(cents)
-    )
-    probed_cells = F.expr(
-        f"transform(slice(array_sort(array({structs})), 1, {IVF_KM_N_PROBE}), "
-        f"s -> s.cell)"
-    )
     # The query side — probe cells, query vector and norm for at most
     # QUERY_ID_CAP / IVF_KM_QUERY_STRIDE ids — is one small broadcast read
     # from the unspread scan: it needs no fan-out and no cluster column.
@@ -634,7 +577,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("vec_id").alias("query_id"),
-            F.explode(probed_cells).alias("cell"),
+            F.explode(_probe_cells(cents, "qvec")).alias("cell"),
             F.transform("embedding", lambda x: x.cast("double")).alias("qvec_f"),
         )
         .withColumn("qnrm", _norm("qvec_f"))
@@ -768,17 +711,11 @@ def _pq_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[str, slice, dict[int, tuple[list[int], int]]]], int]:
     """PQ_ITERS centroid rounds per subspace from the ``vec_id % PQ_K``
-    seed, routed like ``_gate_kmeans``: ``_local_lloyd`` on PQ_M slice
-    parts when the corpus qualifies, else ``_pq_rounds`` distributed;
-    the codebooks and bound are identical either way."""
+    seed: ``_lloyd_fit`` over PQ_M slice parts, the last round's books."""
     width = PQ_DIM // PQ_M
     parts = [slice(m * width, (m + 1) * width) for m in range(PQ_M)]
-    local = _local_lloyd(spark, sf_dir, parts, PQ_K, PQ_ITERS)
-    if local is not None:
-        rounds, x_bound = local
-        books = rounds[-1]
-    else:
-        books, x_bound = _pq_rounds(spark, sf_dir, width)
+    rounds, x_bound = _lloyd_fit(spark, sf_dir, parts, PQ_K, PQ_ITERS)
+    books = rounds[-1]
     # Every round assigns each valid vector one code per subspace, so
     # the m = 0 counts sum to n_valid: published here, a cold pq encode
     # needs no count job of its own.
@@ -786,88 +723,6 @@ def _pq_train(
     session_value(spark, sf_dir, "n_valid", lambda: n)
     model = [(f"code_{m}", p, bk) for m, (p, bk) in enumerate(zip(parts, books))]
     return model, x_bound
-
-
-def _pq_rounds(
-    spark: SparkSession, sf_dir: str, width: int
-) -> tuple[list[dict[int, tuple[list[int], int]]], int]:
-    # All M subspaces fit in lock-step: every Lloyd iteration is ONE
-    # shuffle job keyed on (m, cluster, pos) instead of M sequential
-    # per-subspace jobs — the per-round stats of independent subspaces
-    # commute, so fusing them changes nothing about the per-subspace
-    # rational centroids or assignments.
-    subs = _quantized(spark, sf_dir).select(
-        "vec_id",
-        *[
-            F.slice("qvec", m * width + 1, width).alias(f"q{m}")
-            for m in range(PQ_M)
-        ],
-    ).persist()
-    try:
-        qcols = [f"q{m}" for m in range(PQ_M)]
-        assigned = subs.select(
-            "vec_id",
-            *qcols,
-            *[
-                (F.col("vec_id") % PQ_K).cast("int").alias(f"c{m}")
-                for m in range(PQ_M)
-            ],
-        )
-        books: list[dict[int, tuple[list[int], int]]] = []
-        x_bound = 0
-        for _ in range(PQ_ITERS):
-            flat = (
-                assigned.select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(m).alias("m"),
-                                    F.col(f"c{m}").alias("cluster"),
-                                    F.col(f"q{m}").alias("sub"),
-                                )
-                                for m in range(PQ_M)
-                            ]
-                        )
-                    ).alias("e")
-                )
-                .select("e.m", "e.cluster", F.posexplode("e.sub").alias("pos", "x"))
-                .groupBy("m", "cluster", "pos")
-                .agg(
-                    F.sum("x").alias("s"),
-                    F.count("*").alias("n"),
-                    # global component bound for the GEMM envelope —
-                    # every round aggregates every valid row, so any
-                    # round's max is the corpus max; rides the same job
-                    F.max(F.abs(F.col("x"))).alias("mx"),
-                )
-                .collect()
-            )
-            by_m: list[dict[int, dict[int, int]]] = [{} for _ in range(PQ_M)]
-            counts: list[dict[int, int]] = [{} for _ in range(PQ_M)]
-            for r in flat:
-                by_m[r.m].setdefault(r.cluster, {})[r.pos] = r.s
-                counts[r.m][r.cluster] = r.n
-                if r.mx is not None and r.mx > x_bound:
-                    x_bound = int(r.mx)
-            books = [
-                {
-                    c: ([dims[p] for p in sorted(dims)], counts[m][c])
-                    for c, dims in by_m[m].items()
-                }
-                for m in range(PQ_M)
-            ]
-            assigned = subs.select(
-                "vec_id",
-                *qcols,
-                *[
-                    _int_assign_expr(books[m], col=f"q{m}").alias(f"c{m}")
-                    for m in range(PQ_M)
-                ],
-            )
-    finally:
-        subs.unpersist()
-    return books, x_bound
 
 
 def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -931,6 +786,85 @@ m{m}a0 AS (SELECT vec_id, CAST(vec_id % {k} AS INTEGER) AS cluster FROM emb)"""
     return "".join(parts)
 
 
+def _adc_rerank(
+    queries: DataFrame,
+    cand: DataFrame,
+    books: list[tuple[str, slice, dict[int, tuple[list[int], int]]]],
+    emb: DataFrame,
+    shortlist: int,
+    top_k: int,
+    probe: bool,
+) -> DataFrame:
+    """The PQ search both serving shapes share: per-query ADC tables, the
+    ADC sum over the M codes, the ``shortlist`` window and the exact-L2
+    rerank, ranked rows up to ``top_k`` (``rank`` an int, unselected).
+
+    ``queries`` holds ``(query_id, q_qvec)`` and, with ``probe``, the
+    ``_cells`` it probes; ``cand`` holds ``neighbor_id`` and the codes
+    (with ``probe``, also the ``cell`` it is joined on; without, every
+    query pairs with every candidate). Each per-query table is indexed
+    BY CLUSTER ID (slot c+1 = centroid c): codes are cluster ids, and a
+    cluster that emptied during fitting keeps its slot as +inf — no code
+    can reference it, but positional compaction would silently shift
+    every later lookup. ``emb`` supplies the quantized vectors of the
+    rerank."""
+    for m, (_, part, bk) in enumerate(books):
+        queries = queries.withColumn(f"_q{m}", _part_col("q_qvec", part)).withColumn(
+            f"_dt{m}",
+            F.array(
+                *[
+                    F.expr(_dist_sql(*bk[c], col=f"_q{m}"))
+                    if c in bk
+                    else F.lit(float("inf"))
+                    for c in range(PQ_K)
+                ]
+            ),
+        )
+    side = ["query_id", "q_qvec", *[F.col(f"_dt{m}") for m in range(len(books))]]
+    if probe:
+        probed = queries.select(*side, F.explode("_cells").alias("cell"))
+        pairs = F.broadcast(probed).join(cand, "cell")
+    else:
+        pairs = F.broadcast(queries.select(*side)).crossJoin(cand)
+    pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    adc = None
+    for m in range(len(books)):
+        term = F.element_at(F.col(f"_dt{m}"), F.col(f"code_{m}") + 1)
+        adc = term if adc is None else adc + term
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    )
+    short = (
+        pairs.withColumn("adc_dist", adc)
+        .withColumn("_adc_rank", F.row_number().over(w_adc))
+        .filter(F.col("_adc_rank") <= shortlist)
+        .select(
+            "query_id", "q_qvec", "neighbor_id", *(["cell"] if probe else []),
+            "adc_dist",
+        )
+    )
+    reranked = short.join(
+        emb.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("qvec").alias("n_qvec"),
+        ),
+        "neighbor_id",
+    ).withColumn(
+        "exact_dist",
+        F.aggregate(
+            F.zip_with("q_qvec", "n_qvec", lambda a, b: (a - b) * (a - b)),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("exact_dist").asc(), F.col("neighbor_id").asc()
+    )
+    return reranked.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= top_k
+    )
+
+
 def pq_adc_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -965,69 +899,10 @@ def pq_adc_topk(
     ).select(
         F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")
     )
-    for m, (_, part, cents) in enumerate(books):
-        queries = queries.withColumn(
-            f"_q{m}", F.slice("q_qvec", part.start + 1, part.stop - part.start)
-        )
-        # per-query literal distance table, indexed BY CLUSTER ID (slot
-        # c+1 = centroid c): codes are cluster ids, and a cluster that
-        # emptied during fitting must keep its slot (as +inf — no code
-        # can reference it, but positional compaction would silently
-        # shift every later lookup).
-        tbl = F.array(
-            *[
-                F.expr(_dist_sql(*cents[c], col=f"_q{m}"))
-                if c in cents
-                else F.lit(float("inf"))
-                for c in range(PQ_K)
-            ]
-        )
-        queries = queries.withColumn(f"_dt{m}", tbl)
-    pairs = F.broadcast(
-        queries.select(
-            "query_id", "q_qvec", *[F.col(f"_dt{m}") for m in range(PQ_M)]
-        )
-    ).crossJoin(codes.withColumnRenamed("vec_id", "neighbor_id")).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(F.col(f"_dt{m}"), F.col(f"code_{m}") + 1)
-        adc = term if adc is None else adc + term
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        pairs.withColumn("adc_dist", adc)
-        .withColumn("_adc_rank", F.row_number().over(w_adc))
-        .filter(F.col("_adc_rank") <= shortlist)
-        .select("query_id", "q_qvec", "neighbor_id", "adc_dist")
-    )
-    # stage 2: exact quantized-L2 on the shortlist only
-    reranked = short.join(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("qvec").alias("n_qvec"),
-        ),
-        "neighbor_id",
-    ).withColumn(
-        "exact_dist",
-        F.aggregate(
-            F.zip_with(
-                "q_qvec", "n_qvec", lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "rank", "neighbor_id", "exact_dist", "adc_dist")
-    )
+    return _adc_rerank(
+        queries, codes.withColumnRenamed("vec_id", "neighbor_id"), books, emb,
+        shortlist, top_k, probe=False,
+    ).select("query_id", "rank", "neighbor_id", "exact_dist", "adc_dist")
 
 
 def oracle_pq_adc_topk(
@@ -1199,85 +1074,17 @@ def ivf_pq_topk(
     ).select(F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec"))
     # probe: N_PROBE nearest cells by exact rational L2 to the final-
     # assignment centroids (same contract as ann_ivf_kmeans's probe)
-    structs = ", ".join(
-        f"named_struct('d', {_dist_sql(*cents[c], col='q_qvec')}, "
-        f"'cell', {int(c)})"
-        for c in sorted(cents)
-    )
-    probed_cells = F.expr(
-        f"transform(slice(array_sort(array({structs})), 1, "
-        f"{IVF_KM_N_PROBE}), s -> s.cell)"
-    )
-    queries = queries.withColumn("_cells", probed_cells)
-    # per-query ADC distance tables, indexed by cluster id (slot c+1 =
-    # centroid c; emptied clusters keep their slot as +inf — the
-    # pq_adc_topk layout contract)
-    for m, (_, part, bk) in enumerate(books):
-        queries = queries.withColumn(
-            f"_q{m}", F.slice("q_qvec", part.start + 1, part.stop - part.start)
-        ).withColumn(
-            f"_dt{m}",
-            F.array(
-                *[
-                    F.expr(_dist_sql(*bk[c], col=f"_q{m}"))
-                    if c in bk
-                    else F.lit(float("inf"))
-                    for c in range(PQ_K)
-                ]
-            ),
-        )
-    probed = queries.select(
+    queries = queries.withColumn("_cells", _probe_cells(cents, "q_qvec"))
+    return _adc_rerank(
+        queries, cand, books, _quantized(spark, sf_dir), shortlist, top_k,
+        probe=True,
+    ).select(
         "query_id",
-        "q_qvec",
-        *[F.col(f"_dt{m}") for m in range(PQ_M)],
-        F.explode("_cells").alias("cell"),
-    )
-
-    pairs = F.broadcast(probed).join(cand, "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(F.col(f"_dt{m}"), F.col(f"code_{m}") + 1)
-        adc = term if adc is None else adc + term
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        pairs.withColumn("adc_dist", adc)
-        .withColumn("_adc_rank", F.row_number().over(w_adc))
-        .filter(F.col("_adc_rank") <= shortlist)
-        .select("query_id", "q_qvec", "neighbor_id", "cell", "adc_dist")
-    )
-    # exact quantized-L2 rerank on the shortlist only
-    reranked = short.join(
-        _quantized(spark, sf_dir).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("qvec").alias("n_qvec"),
-        ),
+        F.col("rank").cast("long").alias("rank"),
         "neighbor_id",
-    ).withColumn(
+        "cell",
         "exact_dist",
-        F.aggregate(
-            F.zip_with("q_qvec", "n_qvec", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "cell",
-            "exact_dist",
-            "adc_dist",
-        )
+        "adc_dist",
     )
 
 

@@ -17,7 +17,12 @@ There are three kinds of entry, each with its own lifetime:
   still has an unpersist path. Released by ``release_session_frames()``:
 
   - ``persist=False`` materializes via ``localCheckpoint(eager=False)``
-    (lineage truncated, one materialization guaranteed). A local
+    (lineage truncated, one materialization guaranteed). It is not
+    lazy under AQE: building it plans the frame adaptively, which runs
+    every shuffle stage of its plan as Spark jobs at once (the
+    ``tfidf_top_terms`` frame: 4 build jobs, pinned in
+    ``tests/test_job_budget.py``); only the final stage waits for the
+    first action. A local
     checkpoint cannot be recomputed once its blocks are dropped, so
     release never unpersists it: it clears every dependent cache first
     (e.g. the entry-point plan cache, so no live plan still embeds the
@@ -89,9 +94,11 @@ def session_frame(
 ) -> DataFrame:
     """Return the session-memoized materialization of ``build()``.
 
-    First caller per key builds and materializes (lazily — the first
-    ACTION on the frame pays the compute); later callers get the same
-    DataFrame object, so their plans reuse the materialized blocks. A
+    First caller per key builds and materializes: a ``persist`` frame is
+    computed by its first action; a checkpointed one runs its plan's
+    shuffle stages as jobs here, under AQE, and its final stage at the
+    first action. Later callers get the same DataFrame object, so their
+    plans reuse the materialized blocks. A
     racing loser's frame is discarded (and unpersisted, when
     persist=True) before anything executes it.
     """

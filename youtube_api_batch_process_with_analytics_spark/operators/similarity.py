@@ -112,10 +112,9 @@ def _np_round6_half_up(a):
     HALF_UP. A cosine sitting exactly on a 0.5e-6 boundary would therefore
     order differently in the GEMM shortlist than in the fold-exact rerank,
     and with more than ``IVF_GEMM_SLACK`` such values in one batch the
-    shortlist could evict a true top-k candidate before the rerank sees it
-    (round-8 advisor finding). Emulating HALF_UP here makes the kernel's
-    total order match the rerank's exactly, so the slack is purely the
-    self-pair allowance.
+    shortlist could evict a true top-k candidate before the rerank sees it.
+    Emulating HALF_UP here makes the kernel's total order match the
+    rerank's exactly, so the slack is purely the self-pair allowance.
     """
     import numpy as np
 
@@ -266,16 +265,14 @@ def _ivf_probed(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
 
 # GEMM-shortlist slack beyond the final k. The kernel SELECTS under the
 # SAME total order the exact rerank ranks by — (cosine rounded to 6 dp
-# DESC, vec_id ASC) — so the union of per-batch top-(k+slack) provably
-# contains the global top-k under that order (true for any total order),
-# even when a whole batch is one tie class of identical duplicate
-# vectors (the replicated-embedding fixture tiers produce exactly that;
-# an unrounded argpartition with no id tie-break could keep arbitrary
-# class members and drop the lowest-id winners — round-8 review
-# finding). Since round 9 the kernel rounds with ``_np_round6_half_up``
-# (Spark's HALF_UP rule, not numpy's banker's), so the shortlist's total
-# order matches the rerank's exactly and the slack is purely the
-# self-pair allowance.
+# with ``_np_round6_half_up``, Spark's HALF_UP rule, DESC; vec_id ASC) —
+# so the union of per-batch top-(k+slack) provably contains the global
+# top-k under that order (true for any total order), even when a whole
+# batch is one tie class of identical duplicate vectors (the
+# replicated-embedding fixture tiers produce exactly that; an unrounded
+# argpartition with no id tie-break could keep arbitrary class members
+# and drop the lowest-id winners). The slack is purely the self-pair
+# allowance.
 IVF_GEMM_SLACK = 5
 
 
@@ -287,15 +284,15 @@ def ann_ivf_topk(
 
     Centroids here are per-label mean vectors (labels stand in for k-means
     cell assignments, which at scale come from a separate clustering job —
-    ``operators/clustering.py:kmeans_lloyd`` is that job; the probe/search
-    plumbing is identical).
+    ``operators/clustering.py:_gate_kmeans`` is that job, and
+    ``ann_ivf_kmeans`` probes its cells; the probe/search plumbing is
+    identical).
 
-    Round 8 (the round-7 verdict's ann_ivf_topk weak mark): the in-cell
-    scoring routes through the vectorized GEMM kernel instead of per-pair
-    interpreted fold expressions — each Arrow batch of a probed cell is
-    one numpy matmul against that cell's query matrix, and only the
-    per-batch top (k + slack) candidate IDS continue (the
-    ``_vectorized_scored`` shape). The survivors are then RE-SCORED with
+    The in-cell scoring routes through the vectorized GEMM kernel
+    instead of per-pair interpreted fold expressions — each Arrow batch
+    of a probed cell is one numpy matmul against that cell's query
+    matrix, and only the per-batch top (k + slack) candidate IDS continue
+    (the ``_vectorized_scored`` shape). The survivors are then RE-SCORED with
     the original fold-exact Spark expression, so ranking and emitted
     cosines are bit-identical to the expression-only reference
     (``gemm_shortlist=False``, kept for the differential test) and to the
@@ -543,8 +540,8 @@ def _vectorized_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # select under the final ranking's own total order —
                 # (round6(cos) DESC, neighbor_id ASC) — so a batch-sized
                 # class of identical duplicate vectors keeps exactly the
-                # lowest ids the downstream window ranks (same round-8
-                # fix as the IVF shortlist; raw-cos argpartition kept
+                # lowest ids the downstream window ranks (as the IVF
+                # shortlist does; a raw-cos argpartition would keep
                 # arbitrary tie-class members)
                 order = np.lexsort(
                     (

@@ -236,24 +236,14 @@ def events_in_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bucket"),
     )
-    # Round-13 (round-12 ADVICE item 3): the strategy hint is a
-    # parameterized deployment knob, not a hard-coded constant. The
-    # default stays SHUFFLE_HASH (the measured winner at sf1/sf3 above);
-    # ROLLBACK TRIGGER, for the operator at true scale: shuffled hash
-    # join BUILDS its per-partition hash table on this probe side, which
-    # grows linearly with event volume, and Spark's SHJ build does not
-    # spill gracefully in several versions — if executors OOM in this
-    # stage (heap OOM / SparkOutOfMemoryError with this join's stage in
-    # the trace), set SPARK_GRAFT_RANGE_JOIN_HINT=merge (sort-merge:
-    # slower by the two sorts, spills safely) or raise partition count
-    # so each build fits. An empty value leaves the planner's own choice
-    # (broadcast at small tiers).
-    import os as _os
-
-    _hint = _os.environ.get("SPARK_GRAFT_RANGE_JOIN_HINT", "shuffle_hash")
-    probes = events.withColumn("bucket", F.date_trunc("week", "ts"))
-    if _hint:
-        probes = probes.hint(_hint)
+    # Shuffled hash join, built per partition on the probe side (the
+    # narrower rows); sort-merge was measured slower at sf0.1-sf3 (the
+    # docstring's numbers). That build grows with event volume and does
+    # not spill gracefully, so an executor OOM in this stage means more
+    # shuffle partitions, not a different strategy.
+    probes = events.withColumn("bucket", F.date_trunc("week", "ts")).hint(
+        "shuffle_hash"
+    )
     joined = probes.join(exploded, ["custkey", "bucket"]).filter(
         (F.col("ts") >= F.col("valid_from")) & (F.col("ts") < F.col("valid_to"))
     )

@@ -1001,7 +1001,7 @@ def test_semdedup_round6_cutoff_is_exact():
     import random
     import struct
 
-    from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
+    from youtube_api_batch_process_with_analytics_spark.operators.kernels import (
         _round6_ge_cutoff,
         _spark_round6,
     )

@@ -462,7 +462,7 @@ def test_value_hash_invariant_to_input_layout(spark, sf_dir, tmp_path):
         "stratified_sample",        # salted two-stage per-stratum top-k
         "kmeans_cells",             # model FIT + assignment (refit per dir)
         "duplicate_spans",          # posting lists + islands merge
-        "ann_vectorized_bound",     # Arrow GEMM batches split differently
+        "ann_vectorized_bound",     # Arrow kernel batches split differently
         "channel_video_metrics",    # flagship grouping-sets matrix
         "perplexity_buckets",       # LM fit + bounded-histogram cumsum
         "dsir_importance_weights",  # hashed-bucket stats + broadcast join

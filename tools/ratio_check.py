@@ -69,9 +69,9 @@ ADJUDICATION: dict[str, tuple[str, str]] = {
     ),
     "ann_vectorized_bound": (
         "declared-device",
-        "differential attestation device: executes BOTH the fold-exact "
-        "path and the GEMM kernel and cross-checks rank-wise; the twin "
-        "computes only the exact side",
+        "differential attestation device: executes BOTH the fold "
+        "expression path and the Arrow kernel and checks them equal "
+        "rank-wise; the twin computes only the fold side",
     ),
     "ngram_jaccard_pairs": (
         "declared-device",

@@ -38,7 +38,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import footer_rows, load_table, spread
+from .kernels import _round6_ge_cutoff
 from .memo import session_value, track_persisted
+from .similarity import QUERY_ID_CAP, QUERY_STRIDE
 from .similarity import _DUCK_EMB_NONZERO as _EMB_VALID
 
 KMEANS_GATE_K = 8
@@ -46,11 +48,6 @@ KMEANS_GATE_ITERS = 3
 QUANT_SCALE = 1000
 IVF_KM_TOP_K = 5
 IVF_KM_N_PROBE = 2
-IVF_KM_QUERY_STRIDE = 50
-# Fixed serving workload (see operators/similarity.py QUERY_ID_CAP):
-# bounds |Q| so probe-and-search work scales with the corpus, not
-# quadratically with it; a no-op below sf1 (cap exceeds every vec_id).
-QUERY_ID_CAP = 2_000
 
 
 def _quantized(spark: SparkSession, sf_dir: str, fan_out: bool = True) -> DataFrame:
@@ -567,12 +564,12 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("nrm", _norm("vec"))
 
     # The query side — probe cells, query vector and norm for at most
-    # QUERY_ID_CAP / IVF_KM_QUERY_STRIDE ids — is one small broadcast read
+    # QUERY_ID_CAP / QUERY_STRIDE ids — is one small broadcast read
     # from the unspread scan: it needs no fan-out and no cluster column.
     qside = (
         _quantized(spark, sf_dir, fan_out=False)
         .filter(
-            (F.col("vec_id") % IVF_KM_QUERY_STRIDE == 0)
+            (F.col("vec_id") % QUERY_STRIDE == 0)
             & (F.col("vec_id") < QUERY_ID_CAP)
         )
         .select(
@@ -642,7 +639,7 @@ pd AS (
          CAST(SUM((s.n * q.x - s.s) * (s.n * q.x - s.s)) AS DOUBLE)
            / CAST(ANY_VALUE(s.n) * ANY_VALUE(s.n) AS DOUBLE) AS dist
   FROM qx q JOIN sF s ON s.pos = q.pos
-  WHERE q.vec_id % {IVF_KM_QUERY_STRIDE} = 0 AND q.vec_id < {QUERY_ID_CAP}
+  WHERE q.vec_id % {QUERY_STRIDE} = 0 AND q.vec_id < {QUERY_ID_CAP}
   GROUP BY q.vec_id, s.cluster
 ),
 probed AS (
@@ -1024,7 +1021,7 @@ def ivf_pq_topk(
     spark: SparkSession,
     sf_dir: str,
     top_k: int = 5,
-    stride: int = IVF_KM_QUERY_STRIDE,
+    stride: int = QUERY_STRIDE,
     shortlist: int = IVF_PQ_SHORTLIST,
 ) -> DataFrame:
     """IVFADC — the standard 100-TB ANN serving shape (Jégou et al. 2011,
@@ -1097,7 +1094,7 @@ def oracle_ivf_pq_topk(
     dim: int = PQ_DIM,
     scale: int = QUANT_SCALE,
     top_k: int = 5,
-    stride: int = IVF_KM_QUERY_STRIDE,
+    stride: int = QUERY_STRIDE,
     shortlist: int = IVF_PQ_SHORTLIST,
     n_probe: int = IVF_KM_N_PROBE,
 ) -> str:
@@ -1249,59 +1246,6 @@ SEMDEDUP_SUB_BITS = 16
 # (sf0.1: 2000 × 63 = 126k), so gate plans keep the expression shape with
 # zero Python nodes; the kernel takes over at sf1+ (12.5M/38.7M).
 SEMDEDUP_GEMM_MIN_WORK = 2_000_000
-
-
-def _spark_round6(y: float) -> float:
-    """Bit-exact Python twin of Spark's ``round(double, 6)``: Spark's
-    Round expression goes through BigDecimal.valueOf(y) — the SHORTEST
-    round-trip decimal of the double, exactly what Python ``repr``
-    produces — then setScale(6, HALF_UP) (ties away from zero, same as
-    decimal.ROUND_HALF_UP) and back to double (correctly rounded, same
-    as ``float(Decimal)``)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(float(y))).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP
-        )
-    )
-
-
-def _round6_ge_cutoff(tau: float) -> float:
-    """Smallest double y with ``_spark_round6(y) >= tau`` — rounding to a
-    fixed scale is monotone non-decreasing in y, so the Spark-side gate
-    ``round(cos, 6) >= tau`` is EXACTLY the vectorizable ``cos >= cutoff``
-    for every double cos. Found by bisection over the total-ordered
-    double bit encoding (64 exact Decimal evaluations, once per kernel
-    launch, driver-side)."""
-    import struct
-
-    def pred(y: float) -> bool:
-        return _spark_round6(y) >= tau
-
-    if pred(-2.0):
-        return -2.0
-    if not pred(2.0):
-        return float("inf")
-
-    int64_min = -(2**63)
-
-    def to_key(y: float) -> int:
-        b = struct.unpack("<q", struct.pack("<d", y))[0]
-        return b if b >= 0 else int64_min - b
-
-    def from_key(k: int) -> float:
-        b = k if k >= 0 else int64_min - k
-        return struct.unpack("<d", struct.pack("<q", b))[0]
-
-    lo, hi = to_key(-2.0), to_key(2.0)  # pred(lo) False, pred(hi) True
-    while hi - lo > 1:
-        mid = (lo + hi) // 2
-        if pred(from_key(mid)):
-            hi = mid
-        else:
-            lo = mid
-    return from_key(hi)
 
 
 def _semdedup_pair_kernel(

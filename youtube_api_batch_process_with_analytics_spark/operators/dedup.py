@@ -80,7 +80,7 @@ def _shingled(docs: DataFrame, *extra_cols: str) -> DataFrame:
     # expression per branch on the (single-split) source scan. Tracked so
     # memo.release_session_frames() can unpersist it — repeated
     # invocations share one InMemoryRelation (CacheManager dedups
-    # plan-identical persists), but nothing released it before round 7.
+    # plan-identical persists), and only the release frees it.
     return track_persisted(sh.persist())
 
 
@@ -148,22 +148,23 @@ def _minhash_cols():
     ]
 
 
-# Structural band-bucket cap (round-8 verdict: "the last unguarded
-# quadratic"). A boilerplate-heavy web corpus can put K near-identical
-# documents into ONE band bucket, and the bucket self-join then owes K²
-# candidate rows before verification. The guard copies semantic_dedup's
-# mega-cell pattern (clustering.py): buckets above the cap are
-# sub-bucketed by the FULL minhash signature (docs that agree on all 8
-# permutations — the degenerate boilerplate class — stay together; docs
-# that merely collide on one band separate), and within every pairing
-# group the LEFT side of the pair join is restricted to the group's
-# ``bucket_cap`` lowest doc_ids. Buckets of size ≤ cap are EXACT (the
-# rank covers every pair's left element), so gated-fixture hashes are
-# unchanged at the default cap — the largest observed bucket is 3 at
-# sf0.01 and ~copies-sized at sf1/sf3, vs the 4096 default. A degenerate
-# K-doc class costs K·cap candidate rows (linear), and every duplicate
-# still pairs with the class MINIMUM (rank 1), so connected-components
-# survivorship over the pair graph keeps the exact canonical assignment.
+# Structural band-bucket cap (the bucket self-join is otherwise
+# quadratic in bucket size). A boilerplate-heavy web corpus can put K
+# near-identical documents into ONE band bucket, and the bucket
+# self-join then owes K² candidate rows before verification. The guard
+# copies semantic_dedup's mega-cell pattern (clustering.py): buckets
+# above the cap are sub-bucketed by the FULL minhash signature (docs
+# that agree on all 8 permutations — the degenerate boilerplate class
+# — stay together; docs that merely collide on one band separate), and
+# within every pairing group the LEFT side of the pair join is
+# restricted to the group's ``bucket_cap`` lowest doc_ids. Buckets of
+# size ≤ cap are EXACT (the rank covers every pair's left element), so
+# gated-fixture hashes are unchanged at the default cap — the largest
+# observed bucket is 3 at sf0.01 and ~copies-sized at sf1/sf3, vs the
+# 4096 default. A degenerate K-doc class costs K·cap candidate rows
+# (linear), and every duplicate still pairs with the class MINIMUM
+# (rank 1), so connected-components survivorship over the pair graph
+# keeps the exact canonical assignment.
 LSH_BUCKET_CAP = 4096
 # Gate-variant knob: at sf0.01 the largest band bucket holds 3 docs with
 # one shared signature and several 2-doc buckets hold 2 DISTINCT
@@ -212,7 +213,7 @@ def dedup_minhash_lsh(
     # Equality key over the full signature — the guard only ever GROUPS
     # and JOINS on it, never outputs it, so any injective-in-practice
     # function of (h0..h7) yields the identical equivalence classes.
-    # Round-9 ADVICE: a single 64-bit key made "injective in practice"
+    # A single 64-bit key would make "injective in practice"
     # load-bearing for gate parity with the md5-keyed twin (one collision
     # between two signature classes inside an oversized bucket would
     # merge their sub-groups). The key is therefore a STRUCT of two
@@ -365,8 +366,8 @@ ORDER BY doc_id_a, doc_id_b
 
 
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-engine attestation of the LSH band-bucket guard (round-8
-    verdict task #1, the ``semantic_dedup_capped`` precedent): the
+    """Cross-engine attestation of the LSH band-bucket guard (the
+    ``semantic_dedup_capped`` precedent): the
     default-cap gate row only exercises the regime where the guard never
     fires (every fixture bucket is far below 4096). This variant runs the
     SAME production function with ``LSH_GATE_CAP`` small enough that the
@@ -619,8 +620,8 @@ def ngram_jaccard_block_capped(
     full-array Jaccard, same threshold. Output values for every emitted
     pair are bit-identical to the uncapped operator's.
 
-    The default is the PRODUCTION bound (``NGRAM_DF_CAP`` — round-9
-    ADVICE: a default of the tiny gate knob would silently drop every
+    The default is the PRODUCTION bound (``NGRAM_DF_CAP``: a default of
+    the tiny gate knob would silently drop every
     shingle with df > 2 for an ordinary caller, collapsing recall; the
     sibling ``dedup_minhash_lsh`` defaults to its production cap the same
     way). The gated registry row passes ``NGRAM_GATE_DF_CAP`` explicitly
@@ -633,8 +634,8 @@ def ngram_jaccard_block_capped(
     posts = sh.select(
         "source", "doc_id", F.explode("shingles").alias("shingle")
     )
-    # Stop-shingle guard as an AGGREGATE df table, not a window (round-10
-    # verdict #2): `count(*) OVER (PARTITION BY source, shingle)` shuffles
+    # Stop-shingle guard as an AGGREGATE df table, not a window:
+    # `count(*) OVER (PARTITION BY source, shingle)` shuffles
     # and SORTS every posting row — the full posting list through one
     # exchange with a per-partition sort, and a skewed shingle lands its
     # whole partition on one task. The groupBy df table gets map-side
@@ -760,28 +761,27 @@ def dedup_embedding_cosine(
     candidates (OR-amplification); candidates are verified with the true
     cosine and thresholded.
 
-    Scale shape (restructured round 10 — the round-9 sf1 regression):
-    the vectors and their L2 norms RIDE THROUGH the (band_idx, bucket)
-    self-join, so verification runs inside the join's output stage and
-    the materialized pair list is never re-shuffled. The old plan
-    shipped bare (a, b) candidate pairs through a distinct, a re-spread,
-    and two vector-lookup joins — at sf1 that was FOUR more exchanges of
-    a 12M-row pair list that is ~150× larger than the vector table
+    Scale shape: the vectors and their L2 norms RIDE THROUGH the
+    (band_idx, bucket) self-join, so verification runs inside the join's
+    output stage and the materialized pair list is never re-shuffled.
+    Shipping bare (a, b) candidate pairs through a distinct, a re-spread,
+    and two vector-lookup joins instead costs, at sf1, FOUR more exchanges
+    of a 12M-row pair list that is ~150× larger than the vector table
     itself; shuffling 2·bands copies of the vector table (~50 MB at sf1)
     instead is strictly cheaper whenever the banding emits more than
     ~2·bands candidates per vector, which is the only regime where the
     plan shape matters at all. Deduplication of pairs that agree in
-    several bands happens AFTER the cosine threshold, on the tiny
-    survivor set (duplicates carry identical cosines, so distinct-after
-    ≡ distinct-before bit-for-bit; the +5% duplicate verifications cost
-    far less than one extra 12M-row exchange). Measured at sf1:
-    6.9s → 4.8s; sf3: 46s → 34s. A degenerate mega-bucket concentrates
-    its verification folds in its own join partition — the same
-    partition that already generates those pairs — and AQE's skew-join
-    splitting (on for the session) re-spreads exactly that case. L2
-    norms are computed ONCE per vector map-side (caching a deterministic
-    value changes no bits), so verification is a single dot-product fold
-    per candidate instead of dot + two norm folds.
+    several bands happens AFTER the cosine threshold, on the tiny survivor
+    set (duplicates carry identical cosines, so distinct-after ≡
+    distinct-before bit-for-bit; the +5% duplicate verifications cost far
+    less than one extra 12M-row exchange). Measured at sf1: 6.9s → 4.8s;
+    sf3: 46s → 34s. A degenerate mega-bucket concentrates its verification
+    folds in its own join partition — the same partition that already
+    generates those pairs — and AQE's skew-join splitting (on for the
+    session) re-spreads exactly that case. L2 norms are computed ONCE per
+    vector map-side (caching a deterministic value changes no bits), so
+    verification is a single dot-product fold per candidate instead of
+    dot + two norm folds.
     """
     norm = F.sqrt(
         F.aggregate(
@@ -1147,8 +1147,8 @@ def benchmark_contamination(
     broadcasts; the corpus side streams through. A production variant
     hashes shingles to 8 bytes first — same plan, smaller keys.
 
-    Stop-shingle guard (round-9 verdict: the last unguarded posting join):
-    a boilerplate shingle occurring in K corpus docs AND in the benchmark
+    Stop-shingle guard (it bounds the posting join): a boilerplate
+    shingle occurring in K corpus docs AND in the benchmark
     owes K·|bench postings| join rows — linear per bench item but
     unbounded in K. With ``df_cap`` set, the CORPUS-side posting list
     drops shingles whose global corpus document frequency exceeds the
@@ -1194,11 +1194,11 @@ def benchmark_contamination(
     b_posts = b_sh.select(
         "bench_id", F.explode_outer("shingles").alias("shingle")
     )
-    # Stop-shingle guard as an AGGREGATE df table, not a window (round-10
-    # verdict #2, same rework as ngram_jaccard_block_capped): the old
-    # `count(*) OVER (PARTITION BY shingle)` pushed the FULL corpus
-    # posting list through one exchange with a per-partition sort, and a
-    # skewed shingle lands its whole partition on one task. The groupBy
+    # Stop-shingle guard as an AGGREGATE df table, not a window (as in
+    # ngram_jaccard_block_capped): `count(*) OVER (PARTITION BY shingle)`
+    # would push the FULL corpus posting list through one exchange with a
+    # per-partition sort, and a skewed shingle lands its whole partition
+    # on one task. The groupBy
     # df table partial-aggregates map-side, only the DROPPED shingles (≤
     # total_postings / df_cap bare keys, structural) broadcast, and the
     # keep side becomes a MAP-ONLY anti-join: the corpus posting list no
@@ -1207,12 +1207,12 @@ def benchmark_contamination(
     # shape (sf3, one session, warm guard stage; see OPTIMIZATION_r12.md):
     # window 3.27s / agg 3.24s / bench-semi-prefilter 3.80s — fixture-
     # tier timing is neutral (the df agg and the window shuffle the same
-    # 7.8M postings; the win is the structural skew/sort story), and the
-    # round-10-rejected broadcast pre-filter re-measured SLOWER on top of
-    # the aggregate shape too (the extra broadcast barrier again), so it
-    # stays rejected; revisit only in the petabyte-posting regime where
-    # the full-corpus df aggregate is the measured bottleneck. Failure
-    # mode to carry into that revisit (round-11 advice): the stop table
+    # 7.8M postings; the win is the structural skew/sort story), and a
+    # broadcast bench-side pre-filter measured SLOWER on top of the
+    # aggregate shape (the extra broadcast barrier), so it is not used;
+    # revisit only in the petabyte-posting regime where the full-corpus
+    # df aggregate is the measured bottleneck. Failure mode to carry
+    # into that revisit: the stop table
     # is driver-broadcast, and its ≤ total_postings/df_cap size bound is
     # structural, not absolute — with df_cap=4096 a petabyte posting
     # list admits a stop side beyond the broadcast limit, which FAILS
@@ -1299,10 +1299,10 @@ def _oracle_benchmark_contamination(
     min_shared: int = CONTAMINATION_MIN_SHARED,
 ) -> str:
     """DuckDB twin of the gated ``benchmark_contamination_query``. The
-    stop-shingle df guard is ENCODED in the oracle (round-10 ADVICE: the
-    unguarded twin matched only while no fixture had a pair whose every
-    shared shingle exceeded the cap — a data-dependent equivalence; the
-    repo convention is capped variants get capped oracles, as in
+    stop-shingle df guard is ENCODED in the oracle (an unguarded twin
+    matches only while no fixture has a pair whose every shared shingle
+    exceeds the cap — a data-dependent equivalence; the repo convention
+    is capped variants get capped oracles, as in
     ``_oracle_ngram_block_capped``): candidates come from the df-capped
     corpus posting list, and ``shared_shingles`` is the EXACT full-array
     intersect size for surviving pairs — the same

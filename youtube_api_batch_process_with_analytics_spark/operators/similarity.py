@@ -18,7 +18,9 @@ Numerics: dot products are sequential folds over zipped arrays
 bit-identical doubles on both engines. Centroid components route through
 DECIMAL sums (order-independent) before the double division. Cosines are
 rounded to 6 places before ranking so rank ties are broken identically
-(then by vec_id).
+(then by vec_id). The Arrow kernels (``_top_cosines``) compute the same
+doubles with the NumPy twins in ``operators/kernels.py``, so a kernel
+route changes no emitted bit.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table, spread
+from .kernels import fold_dot, fold_norm, round6
 
 TOP_K = 10
 IVF_TOP_K = 5
@@ -105,22 +108,6 @@ def _as_double_array(col: str):
     return F.transform(F.col(col), lambda x: x.cast("double"))
 
 
-def _np_round6_half_up(a):
-    """6-dp rounding with Spark's HALF_UP tie rule, vectorized in numpy.
-
-    numpy's ``np.round`` is banker's (HALF_EVEN); Spark's ``F.round`` is
-    HALF_UP. A cosine sitting exactly on a 0.5e-6 boundary would therefore
-    order differently in the GEMM shortlist than in the fold-exact rerank,
-    and with more than ``IVF_GEMM_SLACK`` such values in one batch the
-    shortlist could evict a true top-k candidate before the rerank sees it.
-    Emulating HALF_UP here makes the kernel's total order match the
-    rerank's exactly, so the slack is purely the self-pair allowance.
-    """
-    import numpy as np
-
-    return np.floor(np.abs(a) * 1e6 + 0.5) * np.sign(a) / 1e6
-
-
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the query subset (vec_id % 50 == 0).
 
@@ -128,7 +115,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact |Q|×N pair expansion kept because it is the one ANN query a
     plain-SQL oracle can verify bit-for-bit; at corpus scale it is the
     wrong shape by construction. The production paths are
-    ``cosine_topk_vectorized`` (Arrow GEMM full scan, gated via
+    ``cosine_topk_vectorized`` (Arrow full-scan kernel, gated via
     ``ann_vectorized_bound``), ``ann_ivf_topk`` / ``ann_ivf_kmeans``
     (pruned probe-and-search), and ``pq_adc_topk`` (memory-bound ADC).
 
@@ -263,17 +250,70 @@ def _ivf_probed(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     )
 
 
-# GEMM-shortlist slack beyond the final k. The kernel SELECTS under the
-# SAME total order the exact rerank ranks by — (cosine rounded to 6 dp
-# with ``_np_round6_half_up``, Spark's HALF_UP rule, DESC; vec_id ASC) —
-# so the union of per-batch top-(k+slack) provably contains the global
-# top-k under that order (true for any total order), even when a whole
-# batch is one tie class of identical duplicate vectors (the
-# replicated-embedding fixture tiers produce exactly that; an unrounded
-# argpartition with no id tie-break could keep arbitrary class members
-# and drop the lowest-id winners). The slack is purely the self-pair
-# allowance.
-IVF_GEMM_SLACK = 5
+def _top_cosines(pdf, queries: tuple, keep: int):
+    """The one scorer of both Arrow kernels: every row of the batch
+    ``pdf`` (vec_id, embedding, label) against every query of
+    ``queries`` = (ids, double vectors, ``fold_norm``s), with Spark's own
+    numerics — fold dot, fold norms, one division, ``round6`` — so each
+    emitted ``cosine`` is the double ``round(_dot / (qnrm * nrm), 6)``
+    yields. Per query it keeps the batch's top ``keep`` rows under the
+    final ranking's order, (cosine DESC, vec_id ASC), with NaN first as
+    Spark sorts it; the union of the batches' top ``keep`` therefore
+    holds each query's global top ``keep``, ties included."""
+    import numpy as np
+    import pandas as pd
+
+    q_ids, q_vecs, q_nrm = queries
+    v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    n_ids = pdf["vec_id"].to_numpy()
+    # (batch, |Q|), folded 1,024 rows at a time so the fold's
+    # accumulator stays in cache (half the time of one whole-batch fold)
+    cos = np.concatenate(
+        [
+            fold_dot(b[:, None, :], q_vecs[None, :, :])
+            / (q_nrm[None, :] * fold_norm(b)[:, None])
+            for b in (v[i : i + 1024] for i in range(0, len(v), 1024))
+        ]
+    )
+    cos = round6(cos)
+    # lexsort: the last key is primary
+    order = np.lexsort(
+        (np.broadcast_to(n_ids[:, None], cos.shape), -cos, ~np.isnan(cos)),
+        axis=0,
+    )
+    rows = order[:keep]
+    cols = np.broadcast_to(np.arange(len(q_ids)), rows.shape)
+    return pd.DataFrame(
+        {
+            "query_id": q_ids[cols.ravel()],
+            "neighbor_id": n_ids[rows.ravel()],
+            "label": pdf["label"].to_numpy()[rows.ravel()],
+            "cosine": cos[rows, cols].ravel(),
+        }
+    )
+
+
+def _query_pack(ids: list, vecs: list) -> tuple:
+    """(ids, vectors, norms) of a query set, as ``_top_cosines`` takes it."""
+    import numpy as np
+
+    mat = np.array(vecs, dtype=np.float64).reshape(len(ids), EMB_DIM)
+    return np.array(ids, dtype=np.int64), mat, fold_norm(mat)
+
+
+def _kernel_scored(df: DataFrame, score) -> DataFrame:
+    """``score`` (batches of ``df`` → ``_top_cosines`` frames) as a
+    ``mapInPandas`` stage, without the self-pairs. pandas → Arrow turns a
+    NaN cosine (a vector with a NaN or inf component) into NULL, and a
+    NULL ranks last where Spark ranks NaN first; a cosine is never NULL,
+    so NULL maps back to NaN."""
+    return (
+        df.mapInPandas(
+            score, "query_id long, neighbor_id long, label int, cosine double"
+        )
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine", F.coalesce("cosine", F.lit(float("nan"))))
+    )
 
 
 def ann_ivf_topk(
@@ -288,17 +328,15 @@ def ann_ivf_topk(
     ``ann_ivf_kmeans`` probes its cells; the probe/search plumbing is
     identical).
 
-    The in-cell scoring routes through the vectorized GEMM kernel
-    instead of per-pair interpreted fold expressions — each Arrow batch
-    of a probed cell is one numpy matmul against that cell's query
-    matrix, and only the per-batch top (k + slack) candidate IDS continue
-    (the ``_vectorized_scored`` shape). The survivors are then RE-SCORED with
-    the original fold-exact Spark expression, so ranking and emitted
-    cosines are bit-identical to the expression-only reference
-    (``gemm_shortlist=False``, kept for the differential test) and to the
-    DuckDB oracle: the kernel only prunes, it never decides a score. The
-    probe assignment (|Q|·N_PROBE rows) is collected driver-side — the
-    same bounded serving-set contract as the kernel's query matrix.
+    The in-cell scoring runs in the Arrow kernel ``_top_cosines`` instead
+    of per-pair interpreted fold expressions: each Arrow batch of a probed
+    cell is scored against that cell's queries with Spark's own numerics,
+    and only the batch's top ``IVF_TOP_K + 1`` rows per query (the +1 is
+    the self-pair) reach the ranking window. Ranks and cosines therefore
+    equal the expression-only reference (``gemm_shortlist=False``, kept
+    for the differential test) and the DuckDB oracle. The probe
+    assignment (|Q|·N_PROBE rows) is collected driver-side — the bounded
+    serving-set contract.
     """
     emb = _ivf_emb(spark, sf_dir)
     probed = _ivf_probed(spark, sf_dir, emb)
@@ -313,115 +351,46 @@ def ann_ivf_topk(
         )
         return _ivf_rank(scored)
 
-    import numpy as np
     import pandas as pd
 
-    prows = probed.select("query_id", "cell", "qvec").collect()
     # a NULL-label cell can be probed (its centroid exists), but NULL
     # never equals NULL in the candidate equi-join, so the expression
-    # path yields zero candidates from it — mirror that by excluding it
-    # from the kernel instead of crashing sorted() on None (review
-    # finding: hostile NULL-label rows)
-    prows = [r for r in prows if r["cell"] is not None]
+    # path yields no candidates from it; the kernel skips it too
+    prows = [
+        r
+        for r in probed.select("query_id", "cell", "qvec").collect()
+        if r["cell"] is not None
+    ]
     if not prows:  # no serving queries in this corpus — trivially empty
         return ann_ivf_topk(spark, sf_dir, gemm_shortlist=False)
     by_cell: dict = {}
     for r in prows:
-        by_cell.setdefault(r["cell"], ([], []))
-        by_cell[r["cell"]][0].append(r["query_id"])
-        by_cell[r["cell"]][1].append(r["qvec"])
+        ids, vecs = by_cell.setdefault(r["cell"], ([], []))
+        ids.append(r["query_id"])
+        vecs.append(r["qvec"])
     cells = sorted(by_cell)
-    packed = {
-        c: (
-            np.array(ids, dtype=np.int64),
-            np.array(vecs, dtype=np.float64),
-        )
-        for c, (ids, vecs) in by_cell.items()
-    }
-    for c, (ids, mat) in packed.items():
-        packed[c] = (ids, mat, np.linalg.norm(mat, axis=1))
-    bq = spark.sparkContext.broadcast(packed)
-    keep = IVF_TOP_K + IVF_GEMM_SLACK
+    bq = spark.sparkContext.broadcast(
+        {c: _query_pack(ids, vecs) for c, (ids, vecs) in by_cell.items()}
+    )
+    keep = IVF_TOP_K + 1
 
-    def shortlist(batches):
+    def score(batches):
         cellq = bq.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            frames = []
-            for cell, sub in pdf.groupby("label", sort=False):
-                if cell not in cellq:
-                    continue  # unprobed (or NULL-key) cell in this batch
-                ids, qmat, qnrm = cellq[cell]
-                v = np.array(sub["embedding"].tolist(), dtype=np.float64)
-                vn = np.linalg.norm(v, axis=1)
-                cos = (v @ qmat.T) / np.outer(vn, qnrm)  # (batch, nq)
-                nb, nq = cos.shape
-                n_ids_col = sub["vec_id"].to_numpy()
-                if nb > keep:
-                    # select under the rerank's own total order —
-                    # (round6(cos) DESC, vec_id ASC) — via lexsort (last
-                    # key is primary); ties inside a duplicate-vector
-                    # class then keep exactly the lowest ids, matching
-                    # the exact path. HALF_UP rounding so the order is
-                    # identical to Spark's F.round, not banker's.
-                    order = np.lexsort(
-                        (
-                            np.broadcast_to(
-                                n_ids_col[:, np.newaxis], cos.shape
-                            ),
-                            -_np_round6_half_up(cos),
-                        ),
-                        axis=0,
-                    )
-                    rows = order[:keep]
-                else:
-                    rows = np.repeat(np.arange(nb)[:, np.newaxis], nq, 1)
-                cols = np.repeat(
-                    np.arange(nq)[np.newaxis, :], rows.shape[0], 0
+            if len(pdf):
+                yield pd.concat(
+                    [
+                        _top_cosines(sub, cellq[cell], keep)
+                        for cell, sub in pdf.groupby("label", sort=False)
+                    ],
+                    ignore_index=True,
                 )
-                flat = rows.ravel()
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": ids[cols.ravel()],
-                            "neighbor_id": sub["vec_id"].to_numpy()[flat],
-                            "label": sub["label"].to_numpy()[flat],
-                            "embedding": sub["embedding"].to_numpy()[flat],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
 
     raw = valid_embeddings(
         spread(load_table(spark, sf_dir, "embeddings"))
     ).select("vec_id", "embedding", "label")
-    short = raw.filter(F.col("label").isin(cells)).mapInPandas(
-        shortlist,
-        "query_id long, neighbor_id long, label int, embedding array<float>",
-    )
-    # exact fold rerank of the (tiny) shortlist — identical expressions,
-    # ranking, and tie-break as the reference path. The kernel carries
-    # each survivor's raw float embedding through, so the rerank needs no
-    # join back to the corpus scan: vec/nrm re-derive from the same float
-    # array via the same casts, bit-identical to the emb frame's columns.
-    queries = emb.filter(_is_query(F.col("vec_id"))).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        short.withColumn("vec", _as_double_array("embedding"))
-        .withColumn("nrm", _norm("vec"))
-        .join(F.broadcast(queries), "query_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot("qvec", "vec") / (F.col("qnrm") * F.col("nrm")), 6),
-        )
-        .withColumnRenamed("neighbor_id", "vec_id")
-    )
-    return _ivf_rank(scored)
+    scored = _kernel_scored(raw.filter(F.col("label").isin(cells)), score)
+    return _ivf_rank(scored.withColumnRenamed("neighbor_id", "vec_id"))
 
 
 def _ivf_rank(scored: DataFrame) -> DataFrame:
@@ -494,19 +463,14 @@ ORDER BY query_id, rank
 
 
 def _vectorized_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched GEMM scoring stage with PER-BATCH LOCAL TOP-K: each
-    batch emits only its ``TOP_K + 1`` best candidates per query (numpy
-    ``argpartition``), so the ranking shuffle carries ~|Q|·(k+1) rows per
+    """The brute-force Arrow stage with PER-BATCH LOCAL TOP-K: each batch
+    emits only its ``TOP_K + 1`` best candidates per query
+    (``_top_cosines``), so the ranking shuffle carries ~|Q|·(k+1) rows per
     Arrow batch instead of all |Q|×batch pairs — a ~N/k shuffle-volume cut
     at corpus scale. The +1 slot absorbs the self-pair (query_id ==
     neighbor_id), which is filtered after the kernel; with it, every
-    global top-k row is guaranteed to survive its batch's local cut
-    (global top-k ⊆ union of per-batch top-k, and the self-pair can evict
-    at most one candidate in exactly one batch).
+    global top-k row survives its batch's local cut.
     """
-    import numpy as np
-    import pandas as pd
-
     emb = valid_embeddings(spread(load_table(spark, sf_dir, "embeddings"))).select(
         "vec_id", "embedding", "label"
     )
@@ -515,73 +479,31 @@ def _vectorized_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     )  # the query set is small by construction; at scale it broadcasts
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    q_nrm = np.linalg.norm(q_mat, axis=1)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm))
-
-    out_schema = (
-        "query_id long, neighbor_id long, label int, cosine double"
+    bq = spark.sparkContext.broadcast(
+        _query_pack([r["vec_id"] for r in qrows], [r["embedding"] for r in qrows])
     )
     keep = TOP_K + 1
 
     def score(batches):
-        ids, mat, nrm = bq.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vn = np.linalg.norm(v, axis=1)
-            cos = (v @ mat.T) / np.outer(vn, nrm)  # (batch, |Q|)
-            n_ids = pdf["vec_id"].to_numpy()
-            labels = pdf["label"].to_numpy()
-            nb, nq = cos.shape
-            if nb > keep:
-                # select under the final ranking's own total order —
-                # (round6(cos) DESC, neighbor_id ASC) — so a batch-sized
-                # class of identical duplicate vectors keeps exactly the
-                # lowest ids the downstream window ranks (as the IVF
-                # shortlist does; a raw-cos argpartition would keep
-                # arbitrary tie-class members)
-                order = np.lexsort(
-                    (
-                        np.broadcast_to(n_ids[:, np.newaxis], cos.shape),
-                        -_np_round6_half_up(cos),
-                    ),
-                    axis=0,
-                )
-                rows = order[:keep]
-            else:
-                rows = np.repeat(np.arange(nb)[:, np.newaxis], nq, 1)
-            cols = np.repeat(np.arange(nq)[np.newaxis, :], rows.shape[0], 0)
-            yield pd.DataFrame(
-                {
-                    "query_id": ids[cols.ravel()],
-                    "neighbor_id": n_ids[rows.ravel()],
-                    "label": labels[rows.ravel()],
-                    "cosine": _np_round6_half_up(cos[rows, cols].ravel()),
-                }
-            )
+            if len(pdf):
+                yield _top_cosines(pdf, bq.value, keep)
 
-    return emb.mapInPandas(score, out_schema).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
+    return _kernel_scored(emb, score)
 
 
 def cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production kernel for the brute-force path: Arrow-batched
     ``mapInPandas`` scoring each partition's vectors against the broadcast
-    query matrix with one numpy matmul — no per-pair row expansion at all.
+    query matrix — no per-pair row expansion at all.
 
     At 100 TB this is the shape that wins: the scan side streams through
-    executors partition-by-partition, each Arrow batch is one
-    (batch × dim) @ (dim × |Q|) GEMM, and only each batch's local top-k
+    executors partition-by-partition, each Arrow batch is scored against
+    every query in one vectorized fold, and only each batch's local top-k
     candidate rows reach the ranking shuffle (see ``_vectorized_scored``).
-    Per-element float summation order inside the GEMM differs from a
-    sequential fold, so this variant is verified against the fold-exact
-    `ann_cosine_topk` within 1e-9 (test_similarity_vectorized) and gated
-    through the ``ann_vectorized_bound`` attestation rather than
-    hash-matched directly.
+    The kernel computes Spark's own cosine doubles, so the result equals
+    the fold-expression ``ann_cosine_topk`` row for row; the gate attests
+    that through ``ann_vectorized_bound``.
     """
     scored = _vectorized_scored(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -598,25 +520,14 @@ def cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Rank-wise cosine agreement bound between the GEMM kernel and the fold-
-# exact baseline. Unrounded, the two differ by float summation order only
-# (≤ ~1e-12 relative; tested at 1e-9). Both paths then round to 6 dp, so a
-# value within 1e-9 of a rounding boundary may flip by one 1e-6 step, and
-# one flip can swap two adjacent ranks — rank-wise that is ≤ ~3e-6; 1e-5
-# leaves slack for double representation while still catching any real
-# kernel defect (wrong norm, transposed GEMM, dropped candidate), which
-# shows up at ≥ 1e-3.
-VEC_COS_BOUND = 1e-5
-
-
 def ann_vectorized_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate attestation for the vectorized kernel (the sketch contract,
     sketches.py pattern): per query, the exact top-1 neighbor/cosine from
-    the fold-exact path (DuckDB-recomputable) plus deterministic booleans
-    that the GEMM kernel returned a full top-k whose rank-wise cosines sit
-    within ``VEC_COS_BOUND`` of the exact ones. A kernel regression
-    (missing candidates, wrong scores) turns ``n_ranked`` or
-    ``vec_within_bound`` red."""
+    the fold-expression path (DuckDB-recomputable) plus deterministic
+    booleans that the kernel returned a full top-k whose neighbors and
+    cosines equal the fold path's at every rank. A kernel regression
+    (missing candidates, wrong scores, wrong tie order) turns
+    ``n_ranked`` or ``vec_within_bound`` red."""
     fold = ann_cosine_topk(spark, sf_dir).select(
         "query_id",
         "rank",
@@ -624,7 +535,10 @@ def ann_vectorized_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").alias("exact_cosine"),
     )
     vec = cosine_topk_vectorized(spark, sf_dir).select(
-        "query_id", "rank", F.col("cosine").alias("vec_cosine")
+        "query_id",
+        "rank",
+        F.col("neighbor_id").alias("vec_neighbor_id"),
+        F.col("cosine").alias("vec_cosine"),
     )
     return (
         fold.join(vec, ["query_id", "rank"])
@@ -637,9 +551,9 @@ def ann_vectorized_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("rank") == 1, F.col("exact_cosine"))).alias(
                 "exact_top1_cosine"
             ),
-            (
-                F.max(F.abs(F.col("vec_cosine") - F.col("exact_cosine")))
-                <= VEC_COS_BOUND
+            F.bool_and(
+                (F.col("vec_neighbor_id") == F.col("exact_neighbor_id"))
+                & (F.col("vec_cosine") == F.col("exact_cosine"))
             ).alias("vec_within_bound"),
         )
     )

@@ -55,13 +55,13 @@ def daily_usage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DAILY_USAGE_WINDOWS = """
+ORACLE_DAILY_USAGE_WINDOWS = f"""
 SELECT user_id AS key_id,
        CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start,
        COUNT(*) AS requests,
        CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS failures,
-       ROUND(COUNT(*) / 10000 * 100.0, 2) AS quota_pct,
-       COUNT(*) >= 9000 AS quota_warning
+       ROUND(COUNT(*) / {DAILY_QUOTA} * 100.0, 2) AS quota_pct,
+       COUNT(*) >= {DAILY_QUOTA * 9 // 10} AS quota_warning
 FROM events WHERE ts IS NOT NULL
 GROUP BY user_id, date_trunc('day', ts)
 ORDER BY key_id, day_start
@@ -90,11 +90,11 @@ def hourly_usage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HOURLY_USAGE_WINDOWS = """
+ORACLE_HOURLY_USAGE_WINDOWS = f"""
 SELECT date_trunc('hour', ts) AS hour_start,
        COUNT(*) AS requests,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
-       COUNT(*) < 1000 AS admitted
+       COUNT(*) < {HOURLY_QUOTA} AS admitted
 FROM events WHERE ts IS NOT NULL
 GROUP BY date_trunc('hour', ts)
 ORDER BY hour_start
@@ -287,16 +287,16 @@ def _admitted_pool(events: DataFrame) -> DataFrame:
     table: daily count + peak hourly count, filtered to keys under both
     quotas. Shared by all three ST4 rotation policies.
 
-    Round-12 shape (guide §2.3/§2.4): ONE exchange of the raw 16-byte
-    (key, ts) rows, hash-partitioned on (key, day); the hourly and daily
-    aggregates then both run exchange-free because hash(key, day) is a
-    subset of either grouping. The previous shape let each groupBy plan
-    its own exchange — but the hourly grain retains ~96% of raw rows on
-    every tier (measured sf0.1 and sf1), so its map-side partial
-    aggregation compressed nothing and the two exchanges together
-    carried ~2.7× the bytes of the single raw one, plus a stage barrier.
-    Skew bound: one partition key is (api key, calendar day) whose row
-    count the daily quota itself caps at production scale."""
+    Shape: ONE exchange of the raw 16-byte (key, ts) rows,
+    hash-partitioned on (key, day); the hourly and daily aggregates then
+    both run exchange-free because hash(key, day) is a subset of either
+    grouping. Letting each groupBy plan its own exchange costs more: the
+    hourly grain retains ~96% of raw rows on every tier (measured sf0.1
+    and sf1), so its map-side partial aggregation compresses nothing and
+    two exchanges carry ~2.7× the bytes of the single raw one, plus a
+    stage barrier. Skew bound: one partition key is (api key, calendar
+    day) whose row count the daily quota itself caps at production
+    scale."""
     # a request without a key is not a key: NULL user_id is excluded
     # EXPLICITLY on both engines. Without the filter a NULL key surviving
     # admission would take a slot, and the engines disagree on where it
@@ -414,15 +414,12 @@ def key_rotation_round_robin(spark: SparkSession, sf_dir: str) -> DataFrame:
     key would serve and the first sequence it serves.
 
     (The reference's third policy, ``random`` (:243-244), draws from a
-    non-seeded RNG and has no deterministic relational analog; documented
-    away rather than faked.)
+    non-seeded RNG; its seeded analog is ``key_rotation_seeded``.)
 
-    Scale shape (round 12, retiring the round-9 hierarchical-numbering
-    plan — the suite's heaviest card at 10 exchanges, whose DuckDB ratio
-    WORSENED 6.06×→7.02× from sf1 to sf3, the round-11 verdict's floor-
-    erosion item): the per-request sequence number was only ever
-    materialized to be immediately rolled up, and the rollup is CLOSED
-    FORM. Per day, requests are numbered 0..N-1 and slot ``s`` of an
+    Scale shape: the per-request sequence number is never materialized,
+    because the rollup is CLOSED FORM (a plan that numbers every request
+    takes 10 exchanges, and its DuckDB ratio grows with scale). Per day,
+    requests are numbered 0..N-1 and slot ``s`` of an
     ``n``-key pool serves exactly the seqs ≡ s (mod n): so
     ``served_requests = (N - 1 - s) DIV n + 1`` and ``first_seq = s``,
     for every slot with s < N. The request-volume window sort, the
@@ -512,9 +509,8 @@ def key_rotation_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the policy's SEMANTICS — independent uniform choice per request,
     no cursor state, load spread ∝ 1/n — while staying reproducible
     across runs and engines (the same md5-draw contract as
-    ``sample_corpus_hash`` and DSIR's acceptance draw). Closes the last
-    un-modeled ST4 branch (rounds 1–6 documented it away; round-6 verdict
-    stretch #9 asked for exactly this gate).
+    ``sample_corpus_hash`` and DSIR's acceptance draw). With it every
+    ST4 rotation branch of the reference is modeled.
 
     Scale shape: strictly LIGHTER than round_robin's replay — no
     request-numbering sort window at all. The draw is map-side codegen on
@@ -527,18 +523,16 @@ def key_rotation_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     served request id.
     """
     events = load_table(spark, sf_dir, "events")
-    # Round 13 (round-12 verdict item 5 — composition fusion): persist
-    # the WINDOWED slots dim, not the raw admitted pool. slot and n_keys
-    # come out of ONE day-partitioned window pass (row_number + count
-    # share the exchange, the round_robin precedent), and `pool` is then
+    # Persist the WINDOWED slots dim, not the raw admitted pool. slot and
+    # n_keys come out of ONE day-partitioned window pass (row_number +
+    # count share the exchange, the round_robin precedent), and `pool` is
     # a cache-side filter (slot == 0) instead of its own groupBy subtree.
-    # Round 12 tried deriving pool from slots while `admitted` was the
-    # persisted frame and rejected it — the two broadcasts are separate
-    # jobs, so the pool's subtree re-ran the row_number exchange. Moving
-    # the persist ABOVE the window is what makes the fusion real: both
+    # The persist must sit ABOVE the window: the two broadcasts are
+    # separate jobs, so with `admitted` persisted instead, the pool's
+    # subtree would re-run the row_number exchange. This way both
     # broadcast builds read the cached windowed rows, and the admission
-    # aggregate + slot window run once per invocation (plan: 5 exchanges
-    # / 2 broadcast builds → 3 exchanges / 2 builds over one cached dim).
+    # aggregate + slot window run once per invocation (3 exchanges / 2
+    # broadcast builds over one cached dim, against 5 / 2 unfused).
     # Persisted per invocation, released via release_session_frames();
     # the frame is days × admitted keys — the same tiny dim round_robin
     # broadcasts. The forced broadcasts below carry round_robin's
@@ -643,10 +637,10 @@ def rolling_daily_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders ASC nulls-first while DuckDB 1.0's default_null_order is
     nulls_last, so an unfiltered NULL-day group silently joins the
     trailing window of the first (Spark) vs last (DuckDB) six days of its
-    event_type. This was the round-5 'unexplained transient' in
-    tests/test_hostile_corpus.py: the divergence only manifests when the
-    nondeterministically-poisoned NULL-ts row carries a non-NULL
-    event_type."""
+    event_type. In tests/test_hostile_corpus.py the divergence only
+    manifests when the nondeterministically-poisoned NULL-ts row carries
+    a non-NULL event_type, so without the filter it fails only
+    sometimes."""
     events = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     )

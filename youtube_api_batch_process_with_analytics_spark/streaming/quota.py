@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DAILY_QUOTA = 10_000  # config.py:15
-HOURLY_QUOTA = 1_000  # config.py:16
+from ..operators.windows import HOURLY_QUOTA
 
 
 def quota_usage_stream(

@@ -28,8 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.memo import acquire_staged, release_staged
-
-DAILY_QUOTA = 10_000  # config.py:15
+from ..operators.windows import DAILY_QUOTA, MIN_REQUEST_INTERVAL_US
 
 
 def quota_latch_stream(events: DataFrame, quota: int = DAILY_QUOTA) -> DataFrame:
@@ -155,8 +154,6 @@ PACER_OUTPUT_SCHEMA = T.StructType(
 )
 
 PACER_STATE_SCHEMA = T.StructType([T.StructField("last_admit_us", T.LongType())])
-
-MIN_REQUEST_INTERVAL_US = 100_000  # config.py:33 — 0.1 s between requests
 
 
 def rate_limit_pacer_stream(

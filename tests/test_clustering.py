@@ -208,16 +208,19 @@ def test_ann_ivf_kmeans_gate_matches_oracle(spark, duck, sf_dir):
 
 
 def test_gate_kmeans_assignment_is_map_only(spark, sf_dir, monkeypatch):
-    """Final gated assignment must be a literal-centroid expression: the
-    only Exchange allowed is spread()'s deliberate round-robin fan-out of
-    the single-file fixture scan — no hash shuffle from the compute. The
-    row floor is forced to 0 so the small fixture takes the fan-out."""
+    """After a distributed fit, the final gated assignment must be a
+    literal-centroid expression: the only Exchange allowed is spread()'s
+    deliberate round-robin fan-out of the single-file fixture scan — no
+    hash shuffle from the compute. The row floor is forced to 0 so the
+    small fixture takes the fan-out."""
     from youtube_api_batch_process_with_analytics_spark.operators.clustering import (
         kmeans_cells_query,
     )
     from youtube_api_batch_process_with_analytics_spark.sources import tables
 
     monkeypatch.setattr(tables, "SPREAD_MIN_ROWS", 0)
+    # the distributed fit's route: a driver fit's labels join back instead
+    _fresh_values(monkeypatch, LOCAL_FIT_MAX_ROWS=0)
     df = kmeans_cells_query(spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -1047,8 +1050,9 @@ def _write_corpus(path, ids, comps):
 
 
 def _fits(spark, sf_dir, monkeypatch, cap, k=8, gemm=False):
-    """The fitted k-means value, the PQ model and which route each fit
-    took (True = local), under ``LOCAL_FIT_MAX_ROWS = cap``. Fits are
+    """The fitted k-means value (without the driver route's held labels),
+    the PQ model and which route each fit took (True = local: it ran no
+    distributed rounds), under ``LOCAL_FIT_MAX_ROWS = cap``. Fits are
     session values, so each call gets an empty value store. Argmin blocks
     of 7 rows make every local assignment span several blocks. With
     ``gemm``, ``GEMM_ASSIGN_MIN_WORK`` is 0 and the values also hold
@@ -1057,12 +1061,12 @@ def _fits(spark, sf_dir, monkeypatch, cap, k=8, gemm=False):
     from youtube_api_batch_process_with_analytics_spark.operators import memo
 
     routes = []
-    real = cl._local_lloyd
+    distributed = []
+    real = cl._distributed_lloyd
 
     def spy(*args):
-        out = real(*args)
-        routes.append(out is not None)
-        return out
+        distributed.append(args)
+        return real(*args)
 
     kernel_books = []
     real_kernel = cl._gemm_assign_codes
@@ -1074,15 +1078,20 @@ def _fits(spark, sf_dir, monkeypatch, cap, k=8, gemm=False):
     with monkeypatch.context() as m:
         m.setattr(cl, "LOCAL_FIT_MAX_ROWS", cap)
         m.setattr(cl, "ARGMIN_BLOCK_CELLS", 7 * k)
-        m.setattr(cl, "_local_lloyd", spy)
+        m.setattr(cl, "_distributed_lloyd", spy)
         m.setattr(memo, "_VALUES", {})
         if gemm:
             m.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
             m.setattr(cl, "_gemm_assign_codes", kernel_spy)
-        cl._gate_kmeans(spark, sf_dir, k=k)
-        cl._pq_fit(spark, sf_dir)
+        for fit in (
+            lambda: cl._gate_kmeans(spark, sf_dir, k=k),
+            lambda: cl._pq_fit(spark, sf_dir),
+        ):
+            before = len(distributed)
+            fit()
+            routes.append(len(distributed) == before)
         values = {
-            tag: value
+            tag: value[:4] if tag.startswith("kmeans_") else value
             for (_, d, tag), value in memo._VALUES.items()
             if d == sf_dir
         }
@@ -1227,3 +1236,132 @@ def test_cold_fits_jobs_do_not_scale_with_rounds(
         )
     for fit in ("kmeans", "pq"):
         assert jobs[fit, 1] and len(jobs[fit, 5]) == len(jobs[fit, 1]), jobs
+
+
+# --- the driver fit's held labels vs the assign route -----------------------
+
+LABEL_ROUTE_QUERIES = (
+    "kmeans_cells",
+    "ann_ivf_kmeans",
+    "ivf_pq_topk",
+    "semantic_dedup",
+    "cluster_balanced_sample",
+)
+
+
+def label_route_rows(spark, sf_dir, monkeypatch, held):
+    """Sorted rows of every ``LABEL_ROUTE_QUERIES`` query after a cold
+    driver fit, with the fit's held labels in use (``held``) or dropped,
+    so every consumer takes ``_assign_codes`` and ``_probe_cells``.
+    Asserts the k-means model took the route asked for; releases the
+    session frames the queries tracked."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+    from youtube_api_batch_process_with_analytics_spark.operators import memo
+
+    out = {}
+    with monkeypatch.context() as m:
+        _fresh_values(m)
+        if not held:
+            m.setattr(cl, "_held_labels", lambda *args: None)
+        try:
+            for name in LABEL_ROUTE_QUERIES:
+                out[name] = sorted(map(tuple, cl.QUERIES[name](spark, sf_dir).collect()))
+            model = cl._kmeans_fit(spark, sf_dir, cl.KMEANS_GATE_K, cl.KMEANS_GATE_ITERS)
+        finally:
+            memo.release_session_frames()
+    assert (model[4] is not None) == held
+    return out
+
+
+def test_label_route_matches_assign_route(spark, sf_dir, monkeypatch):
+    """Every consumer of the k-means labels returns the same rows whether
+    it takes the driver fit's held labels and query probes or assigns
+    and probes in Spark — on the test tier and on the sf0.01 tier."""
+    tiers = [sf_dir]
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if os.path.isdir(sf01) and sf01 != sf_dir:
+        tiers.append(sf01)
+    for d in tiers:
+        held = label_route_rows(spark, d, monkeypatch, held=True)
+        assigned = label_route_rows(spark, d, monkeypatch, held=False)
+        for name in LABEL_ROUTE_QUERIES:
+            assert held[name] == assigned[name] and held[name], (d, name)
+
+
+def test_duplicated_vec_id_takes_assign_codes(spark, tmp_path, monkeypatch):
+    """A corpus with a duplicated ``vec_id`` still fits on the driver, but
+    holds no labels (a label join keyed on the id would fan out): each
+    row is assigned by ``_assign_codes``, with the rows and cells of the
+    distributed fit."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+
+    rng = np.random.default_rng(11)
+    ids = list(range(40)) + [7]
+    d = _write_corpus(tmp_path / "dup", ids, _random_comps(rng, len(ids)))
+    rows = {}
+    for cap in (cl.LOCAL_FIT_MAX_ROWS, 0):
+        calls = []
+        real = cl._assign_codes
+        with monkeypatch.context() as m:
+            _fresh_values(m, LOCAL_FIT_MAX_ROWS=cap)
+            m.setattr(
+                cl,
+                "_assign_codes",
+                lambda df, books, *a: calls.append(books[0][0]) or real(df, books, *a),
+            )
+            rows[cap] = sorted(map(tuple, cl.kmeans_cells_query(spark, d).collect()))
+            model = cl._kmeans_fit(spark, d, cl.KMEANS_GATE_K, cl.KMEANS_GATE_ITERS)
+        # the distributed rounds reassign their "c0" column through it too
+        assert model[4] is None and calls.count("cluster") == 1, cap
+    assert rows[cl.LOCAL_FIT_MAX_ROWS] == rows[0] and len(rows[0]) == len(ids)
+
+
+def test_label_route_without_query_rows(spark, tmp_path, monkeypatch):
+    """A corpus with no query row (every ``vec_id`` at or above
+    ``QUERY_ID_CAP``) holds an empty query side: ``ann_ivf_kmeans`` is
+    empty on both routes, and the labels still serve ``kmeans_cells``."""
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+
+    rng = np.random.default_rng(5)
+    ids = list(range(cl.QUERY_ID_CAP, cl.QUERY_ID_CAP + 30))
+    d = _write_corpus(tmp_path / "no_queries", ids, _random_comps(rng, len(ids)))
+    for held in (True, False):
+        rows = label_route_rows(spark, d, monkeypatch, held)
+        assert rows["ann_ivf_kmeans"] == [] and len(rows["kmeans_cells"]) == 30, held
+
+
+def test_query_side_literal_round_trips_non_finite(spark):
+    """The driver-made query side carries each query vector bit for bit
+    through its JSON literal — NaN, ±inf, -0.0 and subnormals included —
+    and its ``qnrm`` equals Spark's own ``_norm`` of the parsed vector."""
+    import pyarrow as pa
+
+    import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
+    from youtube_api_batch_process_with_analytics_spark.operators.similarity import _norm
+
+    special = [math.nan, math.inf, -math.inf, -0.0, 5e-324, 0.1]
+    vecs = np.array(
+        [special + [0.25] * 58, [1.5] * 64, [-math.inf] + [2.0] * 63, [-0.0] * 64],
+        dtype=np.float64,
+    )
+    held = cl._HeldLabels(
+        pa.table({"vec_id": pa.array([], pa.int64()), "cluster": pa.array([], pa.int32())}),
+        np.array([0, 50, 100, 150], dtype=np.int64),
+        np.array([[1] * 64, [-3] * 64, [2] * 64, [0] * 64], dtype=np.int64),
+        vecs,
+    )
+    cents = {c: ([v] * 64, 1) for c, v in ((0, 1), (1, -3), (2, 2), (3, -1))}
+    got = (
+        spark.range(1)
+        .select(F.explode(cl._query_side(held, cents)).alias("q"))
+        .select("q.*", _norm("q.qvec_f").alias("spark_nrm"))
+        .collect()
+    )
+    assert [r.query_id for r in got] == [0, 50, 100, 150]
+    for r, want in zip(got, vecs):
+        assert np.array(r.qvec_f).tobytes() == want.tobytes()
+        assert (math.isnan(r.qnrm) and math.isnan(r.spark_nrm)) or (
+            r.qnrm == r.spark_nrm
+        )
+    # each query's two nearest cells; query 150 ties cells 0 and 3
+    assert [r.cells for r in got] == [[0, 2], [1, 3], [2, 0], [0, 3]]

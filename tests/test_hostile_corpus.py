@@ -288,6 +288,18 @@ def test_hostile_corpus_kernel_routes(spark, hostile_dir, monkeypatch):
     assert not failures, failures
 
 
+def test_hostile_corpus_label_routes(spark, hostile_dir, monkeypatch):
+    """The k-means consumers return the same rows over the hostile
+    embeddings whether they take the driver fit's held labels and query
+    probes or assign and probe in Spark."""
+    from tests.test_clustering import LABEL_ROUTE_QUERIES, label_route_rows
+
+    held = label_route_rows(spark, hostile_dir, monkeypatch, held=True)
+    assigned = label_route_rows(spark, hostile_dir, monkeypatch, held=False)
+    for name in LABEL_ROUTE_QUERIES:
+        assert held[name] == assigned[name] and held[name], name
+
+
 def test_hostile_rows_actually_flow_through(spark, hostile_dir):
     """Guard against the differential silently passing because the hostile
     rows got filtered out everywhere: the fingerprint query must emit all

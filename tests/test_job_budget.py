@@ -21,6 +21,7 @@ from youtube_api_batch_process_with_analytics_spark.sources import TABLES
 # name -> (build jobs, exec jobs) on a fresh path
 BUDGET = {
     "ann_ivf_kmeans": (1, 3),
+    "kmeans_cells": (1, 1),
     "bpe_fertility": (2, 3),
     "tfidf_top_terms": (4, 2),
 }

@@ -219,7 +219,8 @@ def bpe_fertility(docs: DataFrame, model: BpeModel) -> DataFrame:
     import pyarrow as pa
 
     # an Arrow table under the local-relation threshold becomes a
-    # LocalRelation: broadcasting it launches no job
+    # LocalRelation: no scan, but broadcasting it is still one job (the
+    # LocalTableScan, one task per default-parallelism slice)
     seg = docs.sparkSession.createDataFrame(
         pa.table(
             {

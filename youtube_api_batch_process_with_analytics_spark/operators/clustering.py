@@ -16,17 +16,20 @@ twins reproduce it bit for bit:
   with ties to the lowest cluster id.
 - clusters that lose every member simply stop competing (standard Lloyd
   never re-populates them); both sides mirror that.
-- **assign** (the data-sized step) is map-only: the centroids enter as
-  literals, the same contract as Spark ML's driver-held
+- **assign** (the data-sized step): a fit run on the driver already
+  holds every final label, so its consumers join them back as one
+  broadcast table; after a distributed fit it is map-only, with the
+  centroids as literals, the same contract as Spark ML's driver-held
   ``clusterCenters``.
 
 Initialization is deterministic — cluster c starts as the sum and count
 of the vectors with ``vec_id % k == c`` (random-partition init, seeded by
 the stable id) — so results are reproducible run-to-run. One fit serves
 k-means (one whole-vector part) and the PQ codebooks (one part per
-component slice): ``_lloyd_fit`` runs the rounds on the driver from one
-collect, or distributed with one aggregate per round. Quantization at
-1e-3 granularity is itself a production technique (scalar-quantized IVF).
+component slice): ``_driver_rounds`` runs the rounds on the driver from
+one collect, ``_distributed_lloyd`` with one aggregate per round.
+Quantization at 1e-3 granularity is itself a production technique
+(scalar-quantized IVF).
 
 Non-reference extension (training-pipeline clustering; pairs with
 operators/similarity.py's IVF probe/search plumbing).
@@ -34,13 +37,15 @@ operators/similarity.py's IVF probe/search plumbing).
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import footer_rows, load_table, spread
 from .kernels import _round6_ge_cutoff
 from .memo import session_value, track_persisted
-from .similarity import QUERY_ID_CAP, QUERY_STRIDE
+from .similarity import QUERY_ID_CAP, QUERY_STRIDE, _is_query
 from .similarity import _DUCK_EMB_NONZERO as _EMB_VALID
 
 KMEANS_GATE_K = 8
@@ -48,6 +53,10 @@ KMEANS_GATE_ITERS = 3
 QUANT_SCALE = 1000
 IVF_KM_TOP_K = 5
 IVF_KM_N_PROBE = 2
+
+if TYPE_CHECKING:
+    import numpy as np
+    import pyarrow as pa
 
 
 def _quantized(spark: SparkSession, sf_dir: str, fan_out: bool = True) -> DataFrame:
@@ -147,24 +156,32 @@ def _book_arrays(bk: dict[int, tuple[list[int], int]]) -> tuple:
 ARGMIN_BLOCK_CELLS = 1 << 22
 
 
-def _argmin_codes(Xm, arrays: tuple):
-    """Per row of the int64 matrix ``Xm``, the id of the codebook entry
-    with the least ``CAST(Σ(n·x − s)² AS DOUBLE) / n²`` — the integer
-    distance by algebraic expansion, one integer GEMM per row block
-    (exact inside ``_gemm_envelope_ok``), the same double division as the
-    expression path, ties to the lowest id (``argmin`` takes the first
-    minimum over the sorted ids)."""
+def _code_dists(B, arrays: tuple):
+    """``CAST(Σ(n·x − s)² AS DOUBLE) / n²`` from every row of the int64
+    matrix ``B`` to every entry of the codebook ``arrays``, as a
+    (rows, k) double matrix: the integer distance by algebraic expansion,
+    one integer GEMM (exact inside ``_gemm_envelope_ok``), then the same
+    double division as the expression path."""
     import numpy as np
 
-    ids, S, nv, ss, n2, nn = arrays
+    _, S, nv, ss, n2, nn = arrays
+    xx = (B * B).sum(axis=1)  # (b,) Σx²
+    cross = B @ S.T  # (b, k) Σx·s — integer matmul, exact
+    return (nn * xx[:, None] - 2 * nv * cross + ss).astype(np.float64) / n2
+
+
+def _argmin_codes(Xm, arrays: tuple):
+    """Per row of the int64 matrix ``Xm``, the id of the codebook entry
+    with the least ``_code_dists``, one row block at a time, ties to the
+    lowest id (``argmin`` takes the first minimum over the sorted ids)."""
+    import numpy as np
+
+    ids = arrays[0]
     out = np.empty(len(Xm), dtype=ids.dtype)
     step = max(1, ARGMIN_BLOCK_CELLS // max(1, len(ids)))
     for i in range(0, len(Xm), step):
-        B = Xm[i : i + step]
-        xx = (B * B).sum(axis=1)  # (b,) Σx²
-        cross = B @ S.T  # (b, k) Σx·s — integer matmul, exact
-        d_int = nn * xx[:, None] - 2 * nv * cross + ss
-        out[i : i + step] = ids[np.argmin(d_int.astype(np.float64) / n2, axis=1)]
+        dists = _code_dists(Xm[i : i + step], arrays)
+        out[i : i + step] = ids[np.argmin(dists, axis=1)]
     return out
 
 
@@ -280,41 +297,38 @@ LOCAL_FIT_MAX_ROWS = 200_000
 LOCAL_FIT_MAX_WORK = 40_000_000
 
 
-def _local_lloyd(
-    spark: SparkSession,
-    sf_dir: str,
-    parts: list[slice | None],
-    k: int,
-    n_rounds: int,
-) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int] | None:
-    """The exact Lloyd rounds on the driver: one collect of
-    ``(vec_id, qvec)``, then per part (a component slice, None for the
-    whole vector) seed cluster ``vec_id % k`` (Spark's truncated
-    remainder, so ``np.fmod``), exact int64 per-cluster sums and counts,
-    assignment by ``_argmin_codes``. Returns ``n_rounds`` centroid rounds
-    (round 0 from the seed, each later one from the previous round's
-    assignment; a cluster left without members is absent and stops
-    competing) and the corpus-wide max|x|, or None when the fit must run
-    distributed.
+def _driver_corpus(
+    spark: SparkSession, sf_dir: str, work_per_row: int, with_queries: bool = False
+) -> tuple | None:
+    """The driver fit's input: ``(ids, X, queries)`` from ONE collect of
+    ``(vec_id, qvec)`` — ``X`` the int64 (rows, d) matrix — or None when
+    the fit must run distributed. With ``with_queries`` the collect also
+    carries the raw ``embedding`` of the query rows (``vec_id %
+    QUERY_STRIDE == 0`` below ``QUERY_ID_CAP``, NULL on every other row),
+    returned as ``queries``; else ``queries`` is None.
 
     The route is chosen before any job from the embeddings footers' row
     count (at least the valid count): it must be at most
-    ``LOCAL_FIT_MAX_ROWS``, and times Σk at most ``LOCAL_FIT_MAX_WORK``,
-    so a corpus routed away pays nothing for this path. After the
-    collect, the fit still goes distributed when the corpus is empty,
-    holds a NULL ``vec_id`` or a NULL component (the expression path's
-    NULL semantics are not reproduced here), or a round's codebook fails
-    ``_gemm_envelope_ok`` (the expanded int64 terms could wrap)."""
+    ``LOCAL_FIT_MAX_ROWS``, and times ``work_per_row`` (Σk over the
+    parts) at most ``LOCAL_FIT_MAX_WORK``, so a corpus routed away pays
+    nothing for this path. After the collect, the fit still goes
+    distributed when the corpus is empty or holds a NULL ``vec_id`` or a
+    NULL component (the expression path's NULL semantics are not
+    reproduced here)."""
     import numpy as np
 
     bound = footer_rows(sf_dir, "embeddings")
     if (
         bound is None
         or bound > LOCAL_FIT_MAX_ROWS
-        or bound * k * len(parts) > LOCAL_FIT_MAX_WORK
+        or bound * work_per_row > LOCAL_FIT_MAX_WORK
     ):
         return None
-    tbl = _quantized(spark, sf_dir, fan_out=False).select("vec_id", "qvec").toArrow()
+    cols = [F.col("vec_id"), F.col("qvec")]
+    if with_queries:
+        is_q = _is_query(F.col("vec_id"))
+        cols.append(F.when(is_q, F.col("embedding")).alias("query_vec"))
+    tbl = _quantized(spark, sf_dir, fan_out=False).select(*cols).toArrow()
     n = tbl.num_rows
     if not n or tbl.column("vec_id").null_count:
         return None
@@ -322,7 +336,23 @@ def _local_lloyd(
     if comps.null_count:
         return None
     X = comps.to_numpy().astype(np.int64, copy=False).reshape(n, -1)
-    ids = tbl.column("vec_id").to_numpy()
+    queries = tbl.column("query_vec") if with_queries else None
+    return tbl.column("vec_id").to_numpy(), X, queries
+
+
+def _driver_rounds(ids, X, parts: list[slice | None], k: int, n_rounds: int):
+    """The exact Lloyd rounds on the driver over a collected corpus: per
+    part (a component slice, None for the whole vector) seed cluster
+    ``vec_id % k`` (Spark's truncated remainder, so ``np.fmod``), exact
+    int64 per-cluster sums and counts, assignment by ``_argmin_codes``.
+    Returns ``n_rounds`` centroid rounds (round 0 from the seed, each
+    later one from the previous round's assignment; a cluster left
+    without members is absent and stops competing), the corpus-wide
+    max|x|, and per part the last assignment (the labels the final
+    round's centroids come from) — or None when a round's codebook fails
+    ``_gemm_envelope_ok`` (the expanded int64 terms could wrap)."""
+    import numpy as np
+
     x_bound = int(np.abs(X).max())
     parts = [slice(None) if p is None else p for p in parts]
     labels = [np.fmod(ids, k)] * len(parts)
@@ -344,7 +374,22 @@ def _local_lloyd(
                 return None
             books.append(bk)
         rounds.append(books)
-    return rounds, x_bound
+    return rounds, x_bound, labels
+
+
+def _local_lloyd(
+    spark: SparkSession,
+    sf_dir: str,
+    parts: list[slice | None],
+    k: int,
+    n_rounds: int,
+) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int] | None:
+    """``(rounds, x_bound)`` of ``_driver_rounds`` over the one
+    ``_driver_corpus`` collect, or None when either declines and the fit
+    must run distributed."""
+    corpus = _driver_corpus(spark, sf_dir, k * len(parts))
+    fit = None if corpus is None else _driver_rounds(*corpus[:2], parts, k, n_rounds)
+    return None if fit is None else fit[:2]
 
 
 def _distributed_lloyd(
@@ -427,53 +472,106 @@ def _distributed_lloyd(
     return rounds, x_bound
 
 
-def _lloyd_fit(
-    spark: SparkSession,
-    sf_dir: str,
-    parts: list[slice | None],
-    k: int,
-    n_rounds: int,
-) -> tuple[list[list[dict[int, tuple[list[int], int]]]], int]:
-    """The one exact Lloyd fit behind k-means and PQ: on the driver when
-    ``_local_lloyd`` takes the corpus, else ``_distributed_lloyd``. Both
-    return the identical ``(rounds, x_bound)``."""
-    return _local_lloyd(spark, sf_dir, parts, k, n_rounds) or _distributed_lloyd(
-        spark, sf_dir, parts, k, n_rounds
+class _HeldLabels(NamedTuple):
+    """What the driver fit of k-means already holds beyond its
+    centroids: the final ``(vec_id, cluster)`` labels (the assignment
+    against the second-to-last round's centroids, which the final ones
+    are summed from) as an Arrow table, and the ids, quantized vectors
+    and raw vectors (as doubles) of the query rows."""
+
+    labels: "pa.Table"
+    query_ids: "np.ndarray"
+    query_q: "np.ndarray"
+    query_vecs: "np.ndarray"
+
+
+def _held_labels(ids, X, queries, labels) -> _HeldLabels | None:
+    """The fit's labels and query rows, or None when a ``vec_id`` occurs
+    twice: a label table keyed on it would fan the join out."""
+    import numpy as np
+    import pyarrow as pa
+
+    if np.unique(ids).size < ids.size:
+        return None
+    is_q = queries.is_valid().to_numpy(zero_copy_only=False)
+    vecs = queries.filter(is_q).combine_chunks().flatten().to_numpy()
+    return _HeldLabels(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "cluster": pa.array(labels, pa.int32()),
+            }
+        ),
+        ids[is_q],
+        X[is_q],
+        vecs.astype(np.float64).reshape(-1, X.shape[1]),
     )
+
+
+def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int, n_iter: int) -> tuple:
+    """The session's k-means model ``(cents, final_cents, x_bound, n,
+    held)``: n_iter + 1 exact Lloyd rounds over one whole-vector part —
+    the assignment centroids and the final ones they produce — on the
+    driver when ``_driver_corpus`` and ``_driver_rounds`` take the
+    corpus, else ``_distributed_lloyd``. ``held`` is the driver fit's
+    ``_HeldLabels`` (None on the distributed route or for a duplicated
+    ``vec_id``).
+
+    A session value: deterministic given (data, k, n_iter), so repeat
+    invocations reuse it — the same contract as holding a fitted Spark
+    ML KMeansModel. The valid-vector count ``n`` is Σ of a round's
+    per-cluster counts (every round assigns every valid vector to
+    exactly one cluster), published as ``n_valid`` without a count
+    job."""
+
+    def fit():
+        corpus = _driver_corpus(spark, sf_dir, k, with_queries=True)
+        local = (
+            None
+            if corpus is None
+            else _driver_rounds(*corpus[:2], [None], k, n_iter + 1)
+        )
+        if local is None:
+            rounds, x_bound = _distributed_lloyd(spark, sf_dir, [None], k, n_iter + 1)
+            held = None
+        else:
+            rounds, x_bound, labels = local
+            held = _held_labels(*corpus, labels[0])
+        cents = rounds[-2][0]
+        n = sum(c for _, c in cents.values())
+        return cents, rounds[-1][0], x_bound, n, held
+
+    model = session_value(spark, sf_dir, f"kmeans_k{k}_i{n_iter}", fit)
+    session_value(spark, sf_dir, "n_valid", lambda: model[3])
+    return model
 
 
 def _gate_kmeans(
     spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
     n_iter: int = KMEANS_GATE_ITERS,
 ) -> tuple[DataFrame, dict[int, tuple[list[int], int]]]:
-    """Run the integer-exact Lloyd rounds; return (embeddings frame with a
-    final map-only ``cluster`` column, final-assignment centroids).
-
-    The fitted centroids are a session value: they are deterministic
-    given (data, k, n_iter), so repeat invocations (ann_ivf_kmeans
-    composes on kmeans_cells) reuse them — the same contract as holding
-    a fitted Spark ML KMeansModel. The fit is ``_lloyd_fit`` over one
-    whole-vector part, n_iter + 1 rounds: the assignment centroids and
-    the final ones they produce. The valid-vector count is Σ of a round's
-    per-cluster counts (every round assigns every valid vector to exactly
-    one cluster), published as ``n_valid`` without a count job."""
+    """The fitted ``_kmeans_fit`` model applied to the valid embeddings:
+    (the embeddings frame with its final ``cluster`` column, the final
+    centroids). On the driver-fit route the labels are the fit's own,
+    joined to the scan as one broadcast table; otherwise each row is
+    assigned by ``_assign_codes``, a map-only argmin against the
+    centroids as literals. The labels are identical either way."""
+    cents, final_cents, x_bound, n, held = _kmeans_fit(spark, sf_dir, k, n_iter)
     emb = _quantized(spark, sf_dir)
-
-    def fit():
-        rounds, x_bound = _lloyd_fit(spark, sf_dir, [None], k, n_iter + 1)
-        cents, final_cents = rounds[-2][0], rounds[-1][0]
-        return cents, final_cents, x_bound, sum(c for _, c in cents.values())
-
-    cents, final_cents, x_bound, n = session_value(
-        spark, sf_dir, f"kmeans_k{k}_i{n_iter}", fit
-    )
-    session_value(spark, sf_dir, "n_valid", lambda: n)
+    if held is not None:
+        labels = spark.createDataFrame(held.labels)
+        return emb.join(F.broadcast(labels), "vec_id"), final_cents
     return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
 
 
 def kmeans_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gated k-means: final (vec_id, cluster) after KMEANS_GATE_ITERS
-    integer-exact Lloyd rounds from the deterministic vec_id % k seed."""
+    integer-exact Lloyd rounds from the deterministic vec_id % k seed —
+    on the driver-fit route the fit's own labels as a local relation,
+    with no scan."""
+    held = _kmeans_fit(spark, sf_dir, KMEANS_GATE_K, KMEANS_GATE_ITERS)[4]
+    if held is not None:
+        return spark.createDataFrame(held.labels)
     assigned, _ = _gate_kmeans(spark, sf_dir)
     return assigned.select("vec_id", "cluster")
 
@@ -543,6 +641,43 @@ def _probe_cells(cents: dict[int, tuple[list[int], int]], col: str) -> F.Column:
     )
 
 
+_QUERY_SIDE = (
+    "array<struct<query_id: bigint, cells: array<int>, "
+    "qvec_f: array<double>, qnrm: double>>"
+)
+
+
+def _query_side(
+    held: _HeldLabels, cents: dict[int, tuple[list[int], int]]
+) -> F.Column:
+    """``_probe_cells`` and the query vectors on the driver: per query row
+    of ``held``, its IVF_KM_N_PROBE cells by ``_code_dists`` (exact inside
+    the envelope the fit checked every round's centroids against; ties to
+    the lower cell, as the stable sort keeps the sorted ids' order), its
+    double vector and Spark's ``_norm`` of it (``fold_norm``), all as ONE
+    JSON literal that ``from_json`` parses at planning time. JSON
+    round-trips every double, NaN and ±inf included."""
+    import json
+
+    import numpy as np
+
+    from .kernels import fold_norm
+
+    arrays = _book_arrays(cents)
+    near = np.argsort(_code_dists(held.query_q, arrays), axis=1, kind="stable")
+    cells = arrays[0][near[:, :IVF_KM_N_PROBE]]
+    rows = [
+        {"query_id": q, "cells": c, "qvec_f": v, "qnrm": r}
+        for q, c, v, r in zip(
+            held.query_ids.tolist(),
+            cells.tolist(),
+            held.query_vecs.tolist(),
+            fold_norm(held.query_vecs).tolist(),
+        )
+    ]
+    return F.from_json(F.lit(json.dumps(rows)), _QUERY_SIDE)
+
+
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN whose coarse cells come from the gated integer-exact k-means
     (not pre-existing labels): probe the IVF_KM_N_PROBE nearest cells by
@@ -552,10 +687,14 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     to — clustering job feeds the quantizer. Probing stays in the exact
     integer domain (no float risk); the in-cell cosine reuses the
     fold-exact + round-to-6 ranking contract that keeps the other ANN
-    queries bit-identical to DuckDB.
+    queries bit-identical to DuckDB. After a driver fit the probes are
+    made on the driver (``_query_side``) and each vector pairs with the
+    queries probing its cell in a map-side generate; otherwise they are
+    ``_probe_cells`` over a broadcast query side.
     """
     from .similarity import _dot, _norm
 
+    held = _kmeans_fit(spark, sf_dir, KMEANS_GATE_K, KMEANS_GATE_ITERS)[4]
     assigned, cents = _gate_kmeans(spark, sf_dir)
     full = assigned.select(
         "vec_id",
@@ -563,26 +702,36 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster",
     ).withColumn("nrm", _norm("vec"))
 
-    # The query side — probe cells, query vector and norm for at most
-    # QUERY_ID_CAP / QUERY_STRIDE ids — is one small broadcast read
-    # from the unspread scan: it needs no fan-out and no cluster column.
-    qside = (
-        _quantized(spark, sf_dir, fan_out=False)
-        .filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0)
-            & (F.col("vec_id") < QUERY_ID_CAP)
+    if held is not None:
+        probing = F.filter(
+            _query_side(held, cents),
+            lambda q: F.array_contains(q["cells"], F.col("cluster")),
         )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(_probe_cells(cents, "qvec")).alias("cell"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("qvec_f"),
+        cands = full.select("*", F.explode(probing).alias("q")).select(
+            "vec_id",
+            "vec",
+            "nrm",
+            F.col("q.query_id").alias("query_id"),
+            F.col("cluster").alias("cell"),
+            "q.qvec_f",
+            "q.qnrm",
         )
-        .withColumn("qnrm", _norm("qvec_f"))
-    )
-    cands = full.join(
-        F.broadcast(qside), F.col("cluster") == F.col("cell")
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    scored = cands.withColumn(
+    else:
+        # probe cells, query vector and norm for at most QUERY_ID_CAP /
+        # QUERY_STRIDE ids: one small broadcast read from the unspread
+        # scan, which needs no fan-out and no cluster column
+        qside = (
+            _quantized(spark, sf_dir, fan_out=False)
+            .filter(_is_query(F.col("vec_id")))
+            .select(
+                F.col("vec_id").alias("query_id"),
+                F.explode(_probe_cells(cents, "qvec")).alias("cell"),
+                F.transform("embedding", lambda x: x.cast("double")).alias("qvec_f"),
+            )
+            .withColumn("qnrm", _norm("qvec_f"))
+        )
+        cands = full.join(F.broadcast(qside), F.col("cluster") == F.col("cell"))
+    scored = cands.filter(F.col("vec_id") != F.col("query_id")).withColumn(
         "cosine",
         F.round(_dot("qvec_f", "vec") / (F.col("qnrm") * F.col("nrm")), 6),
     )
@@ -708,10 +857,13 @@ def _pq_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[str, slice, dict[int, tuple[list[int], int]]]], int]:
     """PQ_ITERS centroid rounds per subspace from the ``vec_id % PQ_K``
-    seed: ``_lloyd_fit`` over PQ_M slice parts, the last round's books."""
+    seed over PQ_M slice parts (on the driver when ``_local_lloyd`` takes
+    the corpus, else ``_distributed_lloyd``), the last round's books."""
     width = PQ_DIM // PQ_M
     parts = [slice(m * width, (m + 1) * width) for m in range(PQ_M)]
-    rounds, x_bound = _lloyd_fit(spark, sf_dir, parts, PQ_K, PQ_ITERS)
+    rounds, x_bound = _local_lloyd(
+        spark, sf_dir, parts, PQ_K, PQ_ITERS
+    ) or _distributed_lloyd(spark, sf_dir, parts, PQ_K, PQ_ITERS)
     books = rounds[-1]
     # Every round assigns each valid vector one code per subspace, so
     # the m = 0 counts sum to n_valid: published here, a cold pq encode

@@ -276,13 +276,7 @@ def _top_cosines(pdf, queries: tuple, keep: int):
         ]
     )
     cos = round6(cos)
-    # lexsort: the last key is primary
-    order = np.lexsort(
-        (np.broadcast_to(n_ids[:, None], cos.shape), -cos, ~np.isnan(cos)),
-        axis=0,
-    )
-    rows = order[:keep]
-    cols = np.broadcast_to(np.arange(len(q_ids)), rows.shape)
+    rows, cols = _top_rows(cos, n_ids, keep)
     return pd.DataFrame(
         {
             "query_id": q_ids[cols.ravel()],
@@ -291,6 +285,29 @@ def _top_cosines(pdf, queries: tuple, keep: int):
             "cosine": cos[rows, cols].ravel(),
         }
     )
+
+
+def _top_rows(cos, n_ids, keep: int):
+    """Per column of the (rows, queries) matrix ``cos``, its first ``keep``
+    rows under (NaN first, cosine DESC, ``n_ids`` ASC), as (keep, queries)
+    row and column indices. Only each column's candidates are sorted: the
+    rows at or above its ``keep``-th largest cosine (``np.partition``, NaN
+    counted as +inf), a superset of its top ``keep`` however ties fall."""
+    import numpy as np
+
+    n, nq = cos.shape
+    keep = min(keep, n)
+    if not keep:
+        return np.empty((0, nq), dtype=np.intp), np.empty((0, nq), dtype=np.intp)
+    big = np.where(np.isnan(cos), np.inf, cos)
+    cut = np.partition(big, n - keep, axis=0)[n - keep]
+    r, c = np.nonzero(big >= cut)
+    # lexsort: the last key is primary
+    order = np.lexsort((n_ids[r], -cos[r, c], ~np.isnan(cos[r, c]), c))
+    r, c = r[order], c[order]
+    starts = np.searchsorted(c, np.arange(nq))
+    pick = starts[None, :] + np.arange(keep)[:, None]
+    return r[pick], c[pick]
 
 
 def _query_pack(ids: list, vecs: list) -> tuple:

@@ -22,6 +22,7 @@ from youtube_api_batch_process_with_analytics_spark.sources import TABLES
 BUDGET = {
     "ann_ivf_kmeans": (1, 3),
     "kmeans_cells": (1, 1),
+    "cluster_balanced_sample": (1, 3),
     "bpe_fertility": (2, 3),
     "tfidf_top_terms": (4, 2),
 }

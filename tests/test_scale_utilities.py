@@ -221,6 +221,45 @@ def test_run_batch_timeout_keeps_finished_results(spark, sf_dir, monkeypatch):
     assert elapsed < 10, elapsed
 
 
+def test_run_batch_jobs_carry_their_request(spark, sf_dir):
+    """Each request of a batch runs under a job group of its own whose
+    description is the request's type: its build and count jobs carry
+    that description, and the session's conf is left as it was."""
+    from youtube_api_batch_process_with_analytics_spark.plans.batch import (
+        BatchRequest,
+        run_batch,
+    )
+
+    sc = spark.sparkContext
+    groups = {}
+
+    def query(n):
+        def fn(spark_, sf_dir_):
+            groups[n] = sc.getLocalProperty("spark.jobGroup.id")
+            spark_.range(n).collect()  # a build job
+            return spark_.range(n)
+
+        return fn
+
+    before = dict(spark.conf.getAll)
+    out = run_batch(
+        spark,
+        sf_dir,
+        [BatchRequest("alpha"), BatchRequest("beta")],
+        {"alpha": query(3), "beta": query(5)},
+        collect=True,
+    )
+    assert dict(spark.conf.getAll) == before
+    assert out["alpha_0"]["data"]["rows"] == 3 and out["beta_1"]["data"]["rows"] == 5
+    assert groups[3] and groups[5] and groups[3] != groups[5]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    for n, name in ((3, "alpha"), (5, "beta")):
+        jobs = list(sc.statusTracker().getJobIdsForGroup(groups[n]))
+        assert len(jobs) >= 2, (name, jobs)
+        assert {store.job(j).description().get() for j in jobs} == {name}
+
+
 def test_run_batch_latches_leave_session_conf_alone(spark, sf_dir, duck):
     """Two streaming latches and an unrelated query in one concurrent
     batch: every result is hash-equal to its DuckDB twin, and the shared

@@ -1,6 +1,8 @@
 """Spot-timer for a subset of registered queries, mirroring bench.py's
 forcing and memo-release policy exactly (noop write, release between
-queries, min of N reps). Usage:
+queries, min of N reps). Each rep also prints how many classes Janino
+compiled during it: 0 once a query's generated classes are cached, so
+an eviction regression shows up as a count, not only as time. Usage:
 
     python tools/time_queries.py [--json OUT.json] <sf_dir> [reps] query [query ...]
 
@@ -21,7 +23,10 @@ import __spark_entry__ as entrymod
 from youtube_api_batch_process_with_analytics_spark.operators.memo import (
     release_session_frames,
 )
-from youtube_api_batch_process_with_analytics_spark.session import get_spark
+from youtube_api_batch_process_with_analytics_spark.session import (
+    codegen_compiles,
+    get_spark,
+)
 
 
 def main() -> None:
@@ -58,14 +63,19 @@ def main() -> None:
     cold: dict[str, float] = {}
     for name in names:
         release_session_frames()
-        samples = []
+        samples, compiles = [], []
         for _ in range(reps):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             force(qs[name](spark, sf_dir))
             samples.append(round(time.perf_counter() - t0, 3))
+            compiles.append(codegen_compiles(spark) - c0)
         cold[name] = samples[0]
         timings[name] = min(samples)
-        print(f"{name:32s} min={min(samples):7.3f}  reps={samples}", flush=True)
+        print(
+            f"{name:32s} min={min(samples):7.3f}  reps={samples}  compiles={compiles}",
+            flush=True,
+        )
     release_session_frames()
     if json_out:
         sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

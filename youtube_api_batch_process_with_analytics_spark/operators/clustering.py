@@ -564,16 +564,24 @@ def _gate_kmeans(
     return _assign_codes(emb, [("cluster", None, cents)], n, x_bound), final_cents
 
 
-def kmeans_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated k-means: final (vec_id, cluster) after KMEANS_GATE_ITERS
-    integer-exact Lloyd rounds from the deterministic vec_id % k seed —
-    on the driver-fit route the fit's own labels as a local relation,
-    with no scan."""
-    held = _kmeans_fit(spark, sf_dir, KMEANS_GATE_K, KMEANS_GATE_ITERS)[4]
+def _gate_labels(
+    spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
+    n_iter: int = KMEANS_GATE_ITERS,
+) -> DataFrame:
+    """The fitted model's final ``(vec_id, cluster)`` labels: on the
+    driver-fit route the fit's own labels as a local relation, with no
+    scan; otherwise ``_gate_kmeans``' assignment."""
+    held = _kmeans_fit(spark, sf_dir, k, n_iter)[4]
     if held is not None:
         return spark.createDataFrame(held.labels)
-    assigned, _ = _gate_kmeans(spark, sf_dir)
+    assigned, _ = _gate_kmeans(spark, sf_dir, k, n_iter)
     return assigned.select("vec_id", "cluster")
+
+
+def kmeans_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gated k-means: final (vec_id, cluster) after KMEANS_GATE_ITERS
+    integer-exact Lloyd rounds from the deterministic vec_id % k seed."""
+    return _gate_labels(spark, sf_dir)
 
 
 def oracle_kmeans_cells(
@@ -1924,17 +1932,17 @@ def cluster_balanced_sample(
     ``mixture_temperature_sample``'s language rebalancing).
 
     Composes the session-memoized integer-exact Lloyd fit (same fitted
-    model as ``kmeans_cells``/``ann_ivf_kmeans``/``semantic_dedup``), so
-    the marginal cost is one map-side assignment plus the two-stage
-    top-k. Scale shape is ``stratified_sample``'s: stage 1 ranks within
+    model as ``kmeans_cells``/``ann_ivf_kmeans``/``semantic_dedup``) and
+    reads its labels as ``kmeans_cells`` does, so the marginal cost is
+    the two-stage top-k (plus a map-side assignment on the distributed
+    route). Scale shape is ``stratified_sample``'s: stage 1 ranks within
     ``(cluster, vec_id % 16)`` salt cells, stage 2 ranks the surviving
     ≤ 16·per_cluster rows per cluster — no task ever holds a full
     cluster, so a hot cell cannot straggle the stage.
     """
     from .sampling import salted_two_stage_topk
 
-    assigned, _ = _gate_kmeans(spark, sf_dir, k=k, n_iter=n_iter)
-    drawn = assigned.select(
+    drawn = _gate_labels(spark, sf_dir, k, n_iter).select(
         "vec_id",
         "cluster",
         F.md5(

@@ -14,6 +14,7 @@ not a failed batch (mirroring api_server.py:556-562).
 
 from __future__ import annotations
 
+import uuid
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -48,6 +49,9 @@ def run_batch(
     ``collect=False`` the value is the (lazy) DataFrame — callers sink it
     themselves; ``collect=True`` materializes counts for smoke use.
 
+    Each request runs under a job group of its own, described by its
+    ``type``, so its jobs can be told apart (and cancelled) by group.
+
     The batch waits at most ``FUTURE_TIMEOUT_S`` per request in total.
     Items still running or queued at that deadline get an
     ``error="timeout"`` entry; queued ones are cancelled, and the call
@@ -58,7 +62,13 @@ def run_batch(
             f"batch size {len(requests)} exceeds limit {MAX_BATCH_REQUESTS}"
         )
 
-    def one(req: BatchRequest) -> dict[str, Any]:
+    sc = spark.sparkContext
+    batch_id = uuid.uuid4().hex
+
+    def one(i: int, req: BatchRequest) -> dict[str, Any]:
+        # job group and description are thread-local properties: set per
+        # request, cleared before the pool reuses the thread
+        sc.setJobGroup(f"batch_{batch_id}_{i}", req.type)
         try:
             fn = registry[req.type]
             df = fn(spark, sf_dir, **req.params)
@@ -68,9 +78,11 @@ def run_batch(
             return {"status": "success", "data": data, "error": None}
         except Exception as exc:  # per-item isolation (api_server.py:556-562)
             return {"status": "error", "data": None, "error": str(exc)}
+        finally:
+            sc._jsc.clearJobGroup()
 
     pool = ThreadPoolExecutor(max_workers=max_workers)
-    futures = [pool.submit(one, req) for req in requests]
+    futures = [pool.submit(one, i, req) for i, req in enumerate(requests)]
     wait(futures, timeout=FUTURE_TIMEOUT_S * len(requests))
     pool.shutdown(wait=False, cancel_futures=True)
     timed_out = {"status": "error", "data": None, "error": "timeout"}

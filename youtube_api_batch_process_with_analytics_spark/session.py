@@ -5,6 +5,11 @@ written for that *and* for a real cluster: AQE enabled (runtime shuffle
 re-planning, skew-join splitting, partition coalescing), Arrow enabled for
 the few Pandas-UDF code paths, UTC session timezone so timestamp semantics
 match the DuckDB oracle byte-for-byte.
+
+Each generated class compiles once per session: Spark's codegen cache
+holds 4,096 classes, more than the registry generates, so no query's
+classes are evicted by the queries run before it. ``get_spark`` fixes
+that capacity when it builds the session (see ``_init_codegen_cache``).
 """
 
 from __future__ import annotations
@@ -59,10 +64,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
-        # 16g: the long-lived 65-query bench session accumulates codegen
-        # classes, broadcast blocks, and cached partitions; at 8g the old
-        # gen fills and per-action GC pauses inflate every small job by
-        # ~0.3-0.5s late in the suite (measured). The test box has 128 GiB.
+        # one sequential sf0.01 pass of the registry compiles about 1,220
+        # distinct classes; the headroom covers routes that run only at
+        # larger tiers
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # 16g: a long-lived bench session holds broadcast blocks, cached
+        # partitions and its generated classes, each compiled once (the
+        # codegen cache outsizes the registry's classes, so none is
+        # evicted and recompiled); at 8g the old gen fills and per-action
+        # GC pauses inflate every small job by ~0.3-0.5s late in the
+        # suite (measured). The test box has 128 GiB.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     if extra_conf:
@@ -70,4 +81,27 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _init_codegen_cache(spark)
     return spark
+
+
+def _init_codegen_cache(spark: SparkSession) -> None:
+    """Size the codegen cache from this session's conf.
+
+    ``CodeGenerator`` builds its cache once per JVM, in its static
+    initializer, from ``SQLConf.get`` on whichever thread compiles first.
+    A Python worker thread's JVM twin has no active session, so there
+    ``SQLConf.get`` holds Spark's defaults (100 entries) and the conf
+    above would be ignored. So the class is initialized here, with the
+    session active on the thread that built it; once the JVM has
+    initialized it, this is a no-op."""
+    jvm = spark._jvm
+    jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(spark._jsparkSession)
+    jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.MUTABLESTATEARRAY_SIZE_LIMIT()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """How many classes this JVM's Janino compiler has compiled so far
+    (cache hits compile nothing)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
